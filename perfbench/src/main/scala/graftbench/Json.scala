@@ -1,0 +1,32 @@
+package graftbench
+
+/** Just enough JSON output for the harness's result file. */
+object Json {
+  def str(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"'  => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c    => b += c
+    }
+    (b += '"').toString
+  }
+
+  def apply(v: Any): String = v match {
+    case null                 => "null"
+    case s: String            => str(s)
+    case b: Boolean           => b.toString
+    case d: Double            => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Int               => n.toString
+    case n: Long              => n.toString
+    case m: collection.Map[_, _] =>
+      m.map { case (k, x) => s"${str(k.toString)}:${apply(x)}" }.mkString("{", ",", "}")
+    case xs: Iterable[_]      => xs.map(apply).mkString("[", ",", "]")
+    case o: Option[_]         => o.map(apply).getOrElse("null")
+    case other                => str(other.toString)
+  }
+}
