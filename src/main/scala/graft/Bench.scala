@@ -41,6 +41,16 @@ object Bench {
     // the scan itself splits (many files / row groups) and the conf stays
     // off — PlanAudit audits the conf-off plans.
     spark.conf.set("graft.local.split", "true")
+    // Every table's schema is resolved once per session (Tables.parquetSchema),
+    // so min-of-reps would never see that cost: resolve all ten here,
+    // before the warm-up's first load, and price it in prep_lsh_cache_s.
+    val tSchemas = System.nanoTime()
+    locally {
+      val t = Tables(spark, sfDir)
+      Seq(t.region, t.nation, t.customer, t.supplier, t.part, t.orders, t.lineitem,
+        t.events, t.documents, t.embeddings)
+    }
+    val schemasNs = System.nanoTime() - tSchemas
     // Warm the JVM/codegen/scan/shuffle/window paths once so the first few
     // timed queries aren't charged for session startup and JIT of the
     // shared execution machinery (one agg-scan, one broadcast-join top-n,
@@ -50,8 +60,9 @@ object Bench {
     // Shared-artifact session: the LSH verify family (q37/q38/q86/q116/
     // q117/q127/q129/q62/q79/q147) reads ONE materialized candidate
     // relation (`graft.lsh.cache`) — the production audit-session shape.
-    // Its one-time build is timed HERE and reported as prep_lsh_cache_s,
-    // not hidden where min-of-2 would discard it.
+    // Its one-time build is timed HERE and reported as prep_lsh_cache_s
+    // (with the schema resolution above), not hidden where min-of-2 would
+    // discard it.
     spark.conf.set("graft.lsh.cache", "true")
     val tPrep = System.nanoTime()
     graft.operators.Dedup.primePairCache(Tables(spark, sfDir))
@@ -60,7 +71,7 @@ object Bench {
     graft.operators.Similarity.primeCellTop2(Tables(spark, sfDir))
     // the q154/q215 shared kNN edge list (r16): same conf, same slot
     graft.operators.Similarity.primeKnnEdges(Tables(spark, sfDir))
-    val prepLshS = math.rint((System.nanoTime() - tPrep) / 1e7) / 100
+    val prepLshS = math.rint((System.nanoTime() - tPrep + schemasNs) / 1e7) / 100
     // Maintained-artifact session: a production lake keeps the corpus
     // count stores next to the data (SURVEY FreqStore: unigram + bigram
     // tables, corpus-wide and frozen-train window stats — normally

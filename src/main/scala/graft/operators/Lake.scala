@@ -604,9 +604,12 @@ object Lake extends QueryModule {
           col("field"), col("kind"), col("arg"), applies.as("applies_to"))
       }
     val df = raw.withColumn("applies_to", coalesce(col("applies_to"), lit("")))
-    val rows = df.collect() // metadata-scale: a schema store, not a data table
+    // metadata-scale: a schema store, not a data table — the fetch stops
+    // one row past the bound, so an oversized file fails without being
+    // materialized on the driver
+    val rows = df.limit(10001).collect()
     require(rows.nonEmpty && rows.length <= 10000,
-      s"rules file $path must hold 1..10000 rules, got ${rows.length}")
+      s"rules file $path must hold 1..10000 rules, got ${if (rows.isEmpty) "none" else "more than 10000"}")
     rows.toSeq.flatMap { r =>
       require(!r.anyNull, s"rules file $path has a null rule column")
       val rule = Rule(r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getString(4))

@@ -44,16 +44,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * so a data-scale relation can never silently ride this path. Column
   * pruning applies driver-side after the manifest fold (the hash is over
   * all three columns): executors receive only the requested columns.
+  *
+  * Schema: the table's schema is the one the version's `_COMMITTED` marker
+  * carries (`{"rows":N,"xor":X,"schema":{…}}`, minus the `shard` storage
+  * column — see [[CatalogStore]]'s layout), read from the marker on every
+  * load, so loading the table runs no job and a store deleted and
+  * re-published at the same path serves its new schema. A marker written
+  * before the schema was carried falls back to one footer inference.
   */
-object CatalogSnapshotSource {
-  /** Schema of an immutable published version — (dir, version) → schema.
-    * Bounded in practice by the number of distinct stores a JVM touches;
-    * entries are a handful of StructFields each.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), StructType]()
-}
-
 class CatalogSnapshotSource extends TableProvider {
   private def resolve(options: CaseInsensitiveStringMap): (String, Long) = {
     val dir = Option(options.get("path")).getOrElse(
@@ -67,15 +65,7 @@ class CatalogSnapshotSource extends TableProvider {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val (dir, v) = resolve(options)
-    // footer-only read: schema on read of the pinned snapshot, minus the
-    // shard storage detail. Published versions are immutable, so the
-    // schema of (dir, v) can never change — cache it per JVM (plan-time
-    // METADATA, the same class as Spark's own file-index caching; the
-    // DATA is still read and integrity-verified on every execution).
-    CatalogSnapshotSource.schemaCache.computeIfAbsent((dir, v), { _ =>
-      val full = SparkSession.active.read.parquet(CatalogStore.snapshotPath(dir, v)).schema
-      StructType(full.fields.filterNot(_.name == "shard"))
-    })
+    CatalogStore.snapshotSchema(SparkSession.active, dir, v)
   }
 
   override def getTable(
@@ -103,11 +93,11 @@ private[sources] class CatalogSnapshotScanBuilder(
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = full
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = new CatalogSnapshotScan(dir, version, required, full)
+  override def build(): Scan = new CatalogSnapshotScan(dir, version, required)
 }
 
 private[sources] class CatalogSnapshotScan(
-    dir: String, version: Long, required: StructType, full: StructType)
+    dir: String, version: Long, required: StructType)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def description(): String =
@@ -124,8 +114,7 @@ private[sources] class CatalogSnapshotScan(
     // regression). The hash needs all three columns, so pruning applies
     // here on the driver, after the fold.
     val (rows, fullSchema) = CatalogStore.readVersionRowsVerified(
-      spark, dir, version, 4000000, s"catalog snapshot $dir v=$version",
-      knownSchema = Some(full))
+      spark, dir, version, 4000000, s"catalog snapshot $dir v=$version")
     val idx = required.fieldNames.map(fullSchema.fieldIndex).toIndexedSeq
     // external (serializable) values ride the partitions; readers convert
     // to InternalRow against the pruned schema

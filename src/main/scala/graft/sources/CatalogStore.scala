@@ -1,9 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The EXECUTE path for catalog maintenance — where q68 (upsert) and q85
   * (retention GC) stop being plan-as-query and actually mutate durable
@@ -17,6 +18,16 @@ import org.apache.spark.sql.functions._
   *   v=1/_COMMITTED                   marker: the snapshot is published
   *   _staging/v2-<uuid>/...           a writer's private, in-flight snapshot
   * }}}
+  *
+  * The marker is one JSON object, `{"rows":N,"xor":X,"schema":{…}}`: the
+  * snapshot manifest (row count and content hash, see [[manifestOf]]) and
+  * the snapshot's read schema (`StructType.json` of the data columns plus
+  * the `shard` partition column). Every reader declares that schema
+  * instead of inferring it from parquet footers, so a read runs no
+  * schema-inference job — the schema lives in the commit, as in Delta's
+  * log. A marker written before the schema was carried (`{"rows":N,
+  * "xor":X}`) still reads: its snapshot's schema is inferred once per
+  * read. Anything else in the marker is corruption and fails the read.
   *
   * Write protocol (crash-safe, idempotent, COMPARE-AND-SWAP — the batch
   * analog of the exactly-once streaming sink spec'd in SourcesSpec):
@@ -64,7 +75,7 @@ object CatalogStore {
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private[sources] def snapshotPath(dir: String, version: Long) = s"$dir/v=$version"
+  private def snapshotPath(dir: String, version: Long) = s"$dir/v=$version"
 
   private def isCommitted(f: FileSystem, dir: String, version: Long): Boolean =
     f.exists(new Path(snapshotPath(dir, version), Marker))
@@ -97,45 +108,64 @@ object CatalogStore {
     * and integrity are one atomic artifact.
     */
   private def manifestOf(df: DataFrame): (Long, Long) = {
-    val r = df
-      .agg(
-        count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(dataset_key, title, revision))"), lit(0L)))
-      .head()
+    val r = df.agg(manifestCols.head, manifestCols.tail: _*).head()
     (r.getLong(0), r.getLong(1))
   }
 
-  private def parseManifest(s: String): Option[(Long, Long)] = {
-    val m = """\{"rows":(-?\d+),"xor":(-?\d+)\}""".r
-    s.trim match {
-      case m(rows, x) => Some((rows.toLong, x.toLong))
-      case _          => None
-    }
+  private val manifestCols: Seq[Column] = Seq(
+    count(lit(1)),
+    coalesce(expr("bit_xor(xxhash64(dataset_key, title, revision))"), lit(0L)))
+
+  /** A parsed `_COMMITTED` marker. `schema` is the snapshot's read schema
+    * (data columns plus `shard`); None for a marker written before the
+    * schema was carried.
+    */
+  private final case class Manifest(rows: Long, xor: Long, schema: Option[StructType])
+
+  private val ManifestJson = """(?s)\{"rows":(-?\d+),"xor":(-?\d+)(?:,"schema":(\{.*\}))?\}""".r
+
+  private def parseManifest(s: String): Option[Manifest] = s.trim match {
+    case ManifestJson(rows, x, null) => Some(Manifest(rows.toLong, x.toLong, None))
+    case ManifestJson(rows, x, schema) =>
+      scala.util.Try(DataType.fromJson(schema)).toOption.collect {
+        case st: StructType => Manifest(rows.toLong, x.toLong, Some(st))
+      }
+    case _ => None
+  }
+
+  private def readMarker(f: FileSystem, marker: Path): Option[Manifest] = {
+    val buf = new Array[Byte](f.getFileStatus(marker).getLen.toInt)
+    val in = f.open(marker)
+    try in.readFully(0, buf)
+    finally in.close()
+    parseManifest(new String(buf, "UTF-8"))
   }
 
   /** Write the snapshot into a private staging dir and drop the commit
-    * marker — carrying the snapshot manifest, computed by reading BACK
-    * the staged files (so the manifest certifies what landed on disk, not
-    * what the writer meant to write) — everything after this is a single
-    * atomic rename.
+    * marker — carrying the snapshot's read schema and its manifest,
+    * computed by reading BACK the staged files under that schema (so the
+    * manifest certifies what landed on disk, not what the writer meant to
+    * write) — everything after this is a single atomic rename.
     */
   private[graft] def stage(df: DataFrame, dir: String, version: Long): Path = {
     val spark = df.sparkSession
     val staging = new Path(dir, s"_staging/v$version-${java.util.UUID.randomUUID()}")
-    df.select(
-        col("dataset_key"),
-        col("title"),
-        col("revision"),
-        pmod(hash(col("dataset_key")), lit(Shards)).as("shard"))
-      .write
+    val sharded = df.select(
+      col("dataset_key"),
+      col("title"),
+      col("revision"),
+      pmod(hash(col("dataset_key")), lit(Shards)).as("shard"))
+    sharded.write
       .partitionBy("shard")
       .mode("overwrite")
       .parquet(staging.toString)
+    // file reads are nullable whatever the writer declared
+    val schema = StructType(sharded.schema.fields.map(_.copy(nullable = true)))
     val (rows, x) = manifestOf(
-      spark.read.parquet(staging.toString).select("dataset_key", "title", "revision"))
+      spark.read.schema(schema).parquet(staging.toString).select("dataset_key", "title", "revision"))
     val f = spark.sparkContext.hadoopConfiguration
     val out = staging.getFileSystem(f).create(new Path(staging, Marker), false)
-    try out.write(s"""{"rows":$rows,"xor":$x}""".getBytes("UTF-8"))
+    try out.write(s"""{"rows":$rows,"xor":$x,"schema":${schema.json}}""".getBytes("UTF-8"))
     finally out.close()
     staging
   }
@@ -195,6 +225,39 @@ object CatalogStore {
     readVersion(spark, dir, v)
   }
 
+  /** The committed marker of `version`, verified readable — the shared
+    * front half of every read path.
+    */
+  private def markerManifest(spark: SparkSession, dir: String, version: Long): Manifest = {
+    val f = fs(spark, dir)
+    require(isCommitted(f, dir, version), s"v=$version was never published at $dir")
+    readMarker(f, new Path(snapshotPath(dir, version), Marker)).getOrElse(
+      throw new IllegalStateException(
+        s"v=$version at $dir: unreadable snapshot manifest in $Marker — refusing to serve"))
+  }
+
+  /** The snapshot's files, read with the schema its marker declares (a
+    * pre-schema marker infers it: one footer-reading job).
+    */
+  private def snapshotFiles(spark: SparkSession, dir: String, version: Long, m: Manifest): DataFrame =
+    m.schema.fold(spark.read)(s => spark.read.schema(s)).parquet(snapshotPath(dir, version))
+
+  /** The data columns of a published snapshot — its marker's schema minus
+    * the `shard` storage detail. Runs no job unless the marker predates
+    * the schema field.
+    */
+  private[sources] def snapshotSchema(spark: SparkSession, dir: String, version: Long): StructType = {
+    val m = markerManifest(spark, dir, version)
+    val full = m.schema.getOrElse(snapshotFiles(spark, dir, version, m).schema)
+    StructType(full.fields.filterNot(_.name == "shard"))
+  }
+
+  private def verify(dir: String, version: Long, m: Manifest, rows: Long, xor: Long): Unit =
+    if (rows != m.rows || xor != m.xor)
+      throw new IllegalStateException(
+        s"v=$version at $dir is CORRUPT: manifest says rows=${m.rows} xor=${m.xor}, " +
+          s"snapshot reads rows=$rows xor=$xor — refusing to serve")
+
   /** Time travel: read a specific PUBLISHED snapshot. Published versions
     * are immutable, so any one GC hasn't reclaimed is a consistent
     * point-in-time catalog. Marker-less dirs are refused — crash debris is
@@ -208,72 +271,48 @@ object CatalogStore {
     * scan is cheap; an unparseable marker is treated as corruption, not
     * leniency.
     */
-  /** The committed marker's manifest (rows, xor), verified readable — the
-    * shared front half of both verified-read paths.
-    */
-  private def markerManifest(spark: SparkSession, dir: String, version: Long): (Long, Long) = {
-    val f = fs(spark, dir)
-    require(isCommitted(f, dir, version), s"v=$version was never published at $dir")
-    val markerPath = new Path(snapshotPath(dir, version), Marker)
-    val markerBody = {
-      val buf = new Array[Byte](f.getFileStatus(markerPath).getLen.toInt)
-      val in = f.open(markerPath)
-      try in.readFully(0, buf)
-      finally in.close()
-      new String(buf, "UTF-8")
-    }
-    parseManifest(markerBody).getOrElse(
-      throw new IllegalStateException(
-        s"v=$version at $dir: unreadable snapshot manifest in $Marker — refusing to serve"))
-  }
-
   def readVersion(spark: SparkSession, dir: String, version: Long): DataFrame = {
-    val (wantRows, wantXor) = markerManifest(spark, dir, version)
-    val df = spark.read.parquet(snapshotPath(dir, version)).select("dataset_key", "title", "revision")
+    val m = markerManifest(spark, dir, version)
+    val df = snapshotFiles(spark, dir, version, m).select("dataset_key", "title", "revision")
     val (gotRows, gotXor) = manifestOf(df)
-    if (gotRows != wantRows || gotXor != wantXor)
-      throw new IllegalStateException(
-        s"v=$version at $dir is CORRUPT: manifest says rows=$wantRows xor=$wantXor, " +
-          s"snapshot reads rows=$gotRows xor=$gotXor — refusing to serve")
+    verify(dir, version, m, gotRows, gotXor)
     df
   }
 
   /** The DSv2 snapshot scan's driver materialization: the same loud-fail
     * integrity contract as [[readVersion]] but paid as ONE scan job — the
-    * rows come back through the bounded control-plane gather and the
-    * manifest count+hash are recomputed DRIVER-SIDE from the collected
-    * rows, evaluating the identical Catalyst `xxhash64(dataset_key,
-    * title, revision)` expression the writer's bit_xor aggregated (so the
-    * check can never drift from the written manifest's definition).
-    * readVersion's shape — a verification AGGREGATE job followed by the
-    * caller's own collect of the same files — paid two full scans per
-    * time-travel read; for a metadata-scale catalog both scans were pure
-    * per-read overhead (measured 2.5× on q68's bench path, r17 verdict #1).
-    * Returns the full-column rows plus their schema; callers prune.
+    * rows come back through a bounded collect and the manifest count+hash
+    * are recomputed DRIVER-SIDE from the collected rows, evaluating the
+    * identical Catalyst `xxhash64(dataset_key, title, revision)`
+    * expression the writer's bit_xor aggregated (so the check can never
+    * drift from the written manifest's definition). readVersion's shape —
+    * a verification AGGREGATE job followed by the caller's own collect of
+    * the same files — paid two full scans per time-travel read; for a
+    * metadata-scale catalog both scans were pure per-read overhead
+    * (measured 2.5× on q68's bench path, r17 verdict #1). Returns the
+    * full-column rows plus their schema; callers prune.
     */
-  private[sources] def readVersionRowsVerified(
+  private[graft] def readVersionRowsVerified(
       spark: SparkSession, dir: String, version: Long,
-      maxRows: Int, what: String,
-      knownSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) = {
-    val (wantRows, wantXor) = markerManifest(spark, dir, version)
+      maxRows: Int, what: String)
+      : (Array[org.apache.spark.sql.Row], StructType) = {
+    val m = markerManifest(spark, dir, version)
     // the metadata-scale bound is checked against the MANIFEST before
     // anything is collected (the published row count is part of the
-    // atomic commit artifact), then re-checked against the actual
-    // collected count below — so the collect is ONE plain job instead of
-    // limit+collect's incremental 1→4→16-partition executeTake ladder
-    // (three scheduled jobs for a 16-shard snapshot). A snapshot whose
-    // files disagree with the manifest fails the count/xor check loudly.
-    require(wantRows <= maxRows,
+    // atomic commit artifact), and the collect itself stops at maxRows+1
+    // rows, so a snapshot whose files hold more rows than the manifest
+    // (an extra or duplicated part file) fails the count check below
+    // without being materialized on the driver. One partition, so the
+    // limit is one job, not executeTake's 1→4→16-partition ladder.
+    require(m.rows <= maxRows,
       s"$what: control-plane gather exceeded its declared domain bound of $maxRows rows " +
-        s"(manifest says $wantRows) — the relation is not metadata-scale; keep it in the engine")
-    // known schema (the DSv2 table's, already footer-read once at load
-    // time) skips a second parquet schema inference here
-    val reader = knownSchema.fold(spark.read)(s => spark.read.schema(
-      org.apache.spark.sql.types.StructType(s.fields :+
-        org.apache.spark.sql.types.StructField("shard", org.apache.spark.sql.types.IntegerType))))
-    val df = reader.parquet(snapshotPath(dir, version)).select("dataset_key", "title", "revision")
-    val rows = df.collect()
+        s"(manifest says ${m.rows}) — the relation is not metadata-scale; keep it in the engine")
+    val df = snapshotFiles(spark, dir, version, m).select("dataset_key", "title", "revision")
+    val rows = df.coalesce(1).limit(maxRows + 1).collect()
+    if (rows.length > m.rows)
+      throw new IllegalStateException(
+        s"v=$version at $dir is CORRUPT: manifest says rows=${m.rows}, snapshot holds more " +
+          s"(the collect stopped at ${rows.length} rows) — refusing to serve")
     val schema = df.schema
     val hashExpr = new org.apache.spark.sql.catalyst.expressions.XxHash64(
       schema.fields.zipWithIndex.map { case (fd, i) =>
@@ -287,10 +326,7 @@ object CatalogStore {
         .eval(toInternal(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
         .asInstanceOf[Long]
     }
-    if (rows.length.toLong != wantRows || gotXor != wantXor)
-      throw new IllegalStateException(
-        s"v=$version at $dir is CORRUPT: manifest says rows=$wantRows xor=$wantXor, " +
-          s"snapshot reads rows=${rows.length} xor=$gotXor — refusing to serve")
+    verify(dir, version, m, rows.length.toLong, gotXor)
     (rows, schema)
   }
 
@@ -408,18 +444,20 @@ object CatalogStore {
     * no manifest re-verification (that is `readVersion`'s job). `key`
     * must carry the snapshot's key TYPE (a Long-keyed store probes with a
     * Long). Returns (title, revision-as-long), None when absent (the
-    * reference's 404).
+    * reference's 404). The read declares the marker's schema, so the
+    * probe is the only job.
     */
   def get(spark: SparkSession, dir: String, key: Any): Option[(String, Long)] = {
     val current = currentVersion(spark, dir)
       .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
+    val m = markerManifest(spark, dir, current)
     // seed 42 = the default of SQL hash(), which stage()'s pmod(hash(key))
     // partitioned by
     val h = org.apache.spark.sql.catalyst.expressions
       .Murmur3Hash(Seq(org.apache.spark.sql.catalyst.expressions.Literal(key)), 42)
       .eval(null).asInstanceOf[Int]
     val shard = ((h % Shards) + Shards) % Shards
-    spark.read.parquet(snapshotPath(dir, current))
+    snapshotFiles(spark, dir, current, m)
       .filter(col("shard") === shard && col("dataset_key") === lit(key))
       .select(col("title"), col("revision").cast("long"))
       .collect() // ≤1 row: snapshots are unique per key
@@ -429,18 +467,28 @@ object CatalogStore {
 
   /** Lookup by title — the `datasets_title_idx` GSI analog (reference
     * `datasets/get.py:58+`, `get_dataset_filter`). Titles are NOT the
-    * shard key, so this scans the (metadata-scale) snapshot with the
-    * title predicate pushed to parquet — the honest cost of a secondary
-    * index the store doesn't materialize; [[createViolations]] keeps
-    * titles unique, so ≤1 row returns.
+    * shard key, so this scans the (metadata-scale) snapshot — the honest
+    * cost of a secondary index the store doesn't materialize. The scan is
+    * ONE aggregate that computes the manifest check (as [[readVersion]]
+    * does) and the title match together, so a corrupt snapshot still
+    * fails loudly. [[createViolations]] keeps titles unique; a snapshot
+    * where two rows hold the title fails loudly too.
     */
-  def findByTitle(spark: SparkSession, dir: String, title: String): Option[(Any, Long)] =
-    read(spark, dir)
-      .filter(col("title") === title)
-      .select(col("dataset_key"), col("revision").cast("long"))
-      .collect()
-      .headOption
-      .map(r => (r.get(0), r.getLong(1)))
+  def findByTitle(spark: SparkSession, dir: String, title: String): Option[(Any, Long)] = {
+    val current = currentVersion(spark, dir)
+      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
+    val m = markerManifest(spark, dir, current)
+    val hit = col("title") === lit(title)
+    val r = snapshotFiles(spark, dir, current, m)
+      .agg(manifestCols.head, manifestCols.tail :+ count(when(hit, lit(1))) :+
+        max(when(hit, struct(col("dataset_key"), col("revision").cast("long")))): _*)
+      .head()
+    verify(dir, current, m, r.getLong(0), r.getLong(1))
+    if (r.getLong(2) > 1)
+      throw new IllegalStateException(
+        s"v=$current at $dir: ${r.getLong(2)} rows hold title '$title' — titles must be unique")
+    Option(r.getStruct(3)).map(s => (s.get(0), s.getLong(1)))
+  }
 
   /** DELETE-mode validation — reference `datasets/delete.py:46-61`. The
     * reference 404s a delete whose id doesn't exist and CONFLICTs when the
@@ -542,19 +590,13 @@ object CatalogStore {
     val staging = stage(clustered, dir, next)
     // the staged manifest certifies what landed on disk; equality with the
     // source manifest proves the rewrite moved every row and nothing else
-    val markerBody = {
-      val in = f.open(new Path(staging, Marker))
-      try new String(
-        Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
-      finally in.close()
-    }
-    val (gotRows, gotXor) = parseManifest(markerBody).getOrElse(
+    val staged = readMarker(f, new Path(staging, Marker)).getOrElse(
       throw new IllegalStateException(s"compaction staged an unreadable manifest at $staging"))
-    if (gotRows != srcRows || gotXor != srcXor) {
+    if (staged.rows != srcRows || staged.xor != srcXor) {
       f.delete(staging, true)
       throw new IllegalStateException(
-        s"compaction of v=$current would CHANGE content (rows $srcRows→$gotRows, " +
-          s"xor $srcXor→$gotXor) — aborted, nothing published")
+        s"compaction of v=$current would CHANGE content (rows $srcRows→${staged.rows}, " +
+          s"xor $srcXor→${staged.xor}) — aborted, nothing published")
     }
     commit(spark, dir, staging, next)
     CompactStats(next, before, dataFileCount(f, dir, next), srcRows)

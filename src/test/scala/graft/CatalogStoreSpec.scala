@@ -506,4 +506,81 @@ class CatalogStoreSpec extends AnyFunSuite {
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v=1")))
   }
+
+  // the bounded control-plane collect: files holding MORE rows than the
+  // manifest (a duplicated part file) fail CORRUPT, and the driver stops
+  // fetching at maxRows + 1 rows instead of materializing every file
+  test("a duplicated part file fails CORRUPT with the collect stopped at maxRows + 1 rows") {
+    val dir = tmp()
+    CatalogStore.init(spark, dir, base())
+    val n = base().count().toInt
+    val part = new java.io.File(s"$dir/v=1").listFiles()
+      .filter(_.getName.startsWith("shard="))
+      .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet")).maxBy(_.length)
+    java.nio.file.Files.copy(
+      part.toPath, new java.io.File(part.getParentFile, "part-99999-dup.parquet").toPath)
+    val onDisk = spark.read.parquet(s"$dir/v=1").count()
+    assert(onDisk > n + 1, s"fixture: the duplicate must add at least two rows ($onDisk vs $n)")
+    val e = intercept[IllegalStateException](
+      CatalogStore.readVersionRowsVerified(spark, dir, 1L, n, "duplicate probe"))
+    assert(e.getMessage.contains("CORRUPT"), s"got: ${e.getMessage}")
+    assert(e.getMessage.contains(s"stopped at ${n + 1} rows"), s"got: ${e.getMessage}")
+  }
+
+  // the snapshot schema lives in the commit marker, not in a JVM cache: a
+  // store deleted and re-published at the same dir with another key type
+  // serves the new schema through both the DSv2 read and the point get
+  test("a store re-initialized at the same dir with a new key type serves the new schema") {
+    import spark.implicits._
+    val dir = tmp()
+    def dsv2() = spark.read.format("graft.sources.CatalogSnapshotSource")
+      .option("path", dir).option("version", "1").load()
+    CatalogStore.init(spark, dir, Seq((1L, "long-key", 1)).toDF("dataset_key", "title", "revision"))
+    assert(dsv2().schema("dataset_key").dataType == org.apache.spark.sql.types.LongType)
+    assert(CatalogStore.get(spark, dir, 1L).contains(("long-key", 1L)))
+    val f = new org.apache.hadoop.fs.Path(dir)
+    f.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(f, true)
+    CatalogStore.init(spark, dir, Seq(("k1", "string-key", 1)).toDF("dataset_key", "title", "revision"))
+    val again = dsv2()
+    assert(again.schema("dataset_key").dataType == org.apache.spark.sql.types.StringType)
+    assert(again.collect().map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("k1", "string-key")))
+    assert(CatalogStore.get(spark, dir, "k1").contains(("string-key", 1L)))
+  }
+
+  test("reads declare the marker's schema: get is one job, findByTitle infers nothing") {
+    val dir = tmp()
+    CatalogStore.init(spark, dir, base())
+    val r = base().orderBy(col("dataset_key")).head()
+    val (k, t) = (r.getAs[Long]("dataset_key"), r.getAs[String]("title"))
+    val marker = scala.io.Source.fromFile(s"$dir/v=1/_COMMITTED", "UTF-8").mkString
+    assert(marker.contains("\"schema\":{"), s"marker: $marker")
+    val (got, getJobs) = JobProbe.jobs(spark)(CatalogStore.get(spark, dir, k))
+    assert(got.contains((t, 1L)))
+    assert(getJobs.size == 1, s"get ran ${getJobs.size} jobs:\n${getJobs.mkString("\n--\n")}")
+    val (found, findJobs) = JobProbe.jobs(spark)(CatalogStore.findByTitle(spark, dir, t))
+    assert(found.contains((k, 1L)))
+    assert(findJobs.nonEmpty && !findJobs.exists(JobProbe.isInference),
+      s"findByTitle jobs:\n${findJobs.mkString("\n--\n")}")
+  }
+
+  test("a marker written without a schema still reads, through one inference") {
+    val dir = tmp()
+    CatalogStore.init(spark, dir, base())
+    val want = snapshot(dir)
+    val marker = new java.io.File(s"$dir/v=1/_COMMITTED")
+    val body = scala.io.Source.fromFile(marker, "UTF-8").mkString
+    val legacy = body.replaceFirst(""","schema":\{.*\}\}$""", "}")
+    assert(legacy.matches("""\{"rows":\d+,"xor":-?\d+\}"""), s"legacy marker: $legacy")
+    new java.io.File(s"$dir/v=1/._COMMITTED.crc").delete() // local ChecksumFs sidecar
+    val w = new java.io.FileWriter(marker); w.write(legacy); w.close()
+    assert(snapshot(dir) == want)
+    val (k, t, rev) = want.head
+    val (got, jobs) = JobProbe.jobs(spark)(CatalogStore.get(spark, dir, k))
+    assert(got.contains((t, rev.toLong)))
+    assert(jobs.count(JobProbe.isInference) == 1, s"get jobs:\n${jobs.mkString("\n--\n")}")
+    assert(CatalogStore.findByTitle(spark, dir, t).contains((k, rev.toLong)))
+    val dsv2 = spark.read.format("graft.sources.CatalogSnapshotSource")
+      .option("path", dir).option("version", "1").load()
+    assert(dsv2.collect().length == want.size)
+  }
 }

@@ -71,4 +71,25 @@ class TablesSpec extends AnyFunSuite {
     assert(df.select(min(year(col("ts")))).head().getInt(0) >= 1970)
     assert(df.count() > 0)
   }
+
+  test("a warm table load declares its schema and launches no job") {
+    val t = Tables(spark, sf)
+    t.documents.schema; t.events.schema // resolve once
+    val (_, jobs) = JobProbe.jobs(spark) {
+      Tables(spark, sf).documents.schema
+      Tables(spark, sf).events.schema
+    }
+    assert(jobs.isEmpty, s"warm loads ran jobs:\n${jobs.mkString("\n--\n")}")
+  }
+
+  test("overwriting events.parquet with another ts encoding re-resolves its schema") {
+    val dir = Files.createTempDirectory("events_rewrite").toString
+    writeEvents(
+      dir,
+      lit(LocalDateTime.ofEpochSecond(epochMicros / 1000000L, (epochMicros % 1000000L).toInt * 1000, java.time.ZoneOffset.UTC)))
+    assert(loadedMicros(dir) === ((TimestampType, epochMicros)))
+    writeEvents(dir, lit(epochMicros * 1000L)) // same path, int64 epoch-nanos
+    assert(Tables.parquetSchema(spark, s"$dir/events.parquet")("ts").dataType === LongType)
+    assert(loadedMicros(dir) === ((TimestampType, epochMicros)))
+  }
 }
