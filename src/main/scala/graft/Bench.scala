@@ -168,10 +168,14 @@ object Bench {
     // zero plan changes); the min is the reproducible signal. Rep 1 of all
     // queries runs before rep 2 so the second pass still pays real scan/
     // shuffle work, not a per-query back-to-back cache hit.
+    // A query that throws fails the run loudly: it is named on stderr and
+    // no metric line is printed — a throw must never time as a fast query.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     def rep(): Seq[(String, Double)] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try fn(spark, sfDir).count()
+        catch { case e: Throwable => failed.getOrElseUpdate(name, e) }
         name -> (System.nanoTime() - t0) / 1e9
       }
     // Contention self-adjudication (r16 verdict #2: BOTH reps of a
@@ -198,6 +202,12 @@ object Bench {
     val contended = prepSkew > 3.0 || pathologicalSkew(baseReps)
     val reps: Seq[Seq[(String, Double)]] =
       if (contended) baseReps :+ rep() else baseReps
+    if (failed.nonEmpty) {
+      failed.foreach { case (name, e) => System.err.println(s"[bench] FAILED $name: $e") }
+      spark.stop()
+      Util.deleteRecursively(storesDir)
+      sys.exit(1)
+    }
     // drives the runs already taken and the JSON "reps" field
     val nReps = reps.length
     val results = reps.head.indices.map { i =>

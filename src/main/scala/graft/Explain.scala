@@ -18,13 +18,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     // same session-conf hook as Time: store-backed plan dumps need the
     // consumer confs the bench session sets
-    sys.env.get("GRAFT_TIME_CONFS").foreach { confs =>
-      confs.split(',').filter(_.nonEmpty).foreach { kv =>
-        require(kv.contains("="), s"GRAFT_TIME_CONFS entry has no '=': '$kv'")
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      }
-    }
+    Util.timeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     args.drop(1).foreach { name =>
       println(s"===== $name =====")
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")

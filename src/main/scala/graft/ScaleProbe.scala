@@ -82,6 +82,24 @@ object ScaleProbe {
       .getOrCreate()
   }
 
+  /** Replica key stride: rep r's copy of a base key k is k + r·KeyOffset. */
+  private[graft] val KeyOffset = 100000000L
+
+  /** `base` replicated `mult` times with rep-local `key`s, plus a `rep`
+    * column. Replica key ranges are disjoint only while every base key is
+    * below [[KeyOffset]], so a larger base fails here instead of silently
+    * building the hot-key collision shape the probe exists to avoid.
+    */
+  private[graft] def replicate(base: DataFrame, key: String, mult: Int): DataFrame = {
+    val top = Option(base.agg(max(col(key))).head().getAs[Number](0)).map(_.longValue)
+    require(top.forall(_ < KeyOffset),
+      s"max $key ${top.get} is not below the replica key offset $KeyOffset — " +
+        "replica key ranges would overlap")
+    base
+      .withColumn("rep", explode(array((0 until mult).map(lit(_)): _*)))
+      .withColumn(key, col(key) + col("rep") * KeyOffset)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleProbe <baseSfDir> [mult] [query ...]")
     val baseDir = args(0)
@@ -104,19 +122,14 @@ object ScaleProbe {
         val spark = session(32)
         spark.sparkContext.setLogLevel("WARN")
         spark.sparkContext.setJobDescription(s"scaleprobe: generate x$mult")
-        val reps = (0 until mult).map(lit(_))
-        val li = spark.read.parquet(s"$baseDir/lineitem.parquet")
-          .withColumn("rep", explode(array(reps: _*)))
-          .withColumn("l_orderkey", col("l_orderkey") + col("rep") * 100000000L)
+        val li = replicate(spark.read.parquet(s"$baseDir/lineitem.parquet"), "l_orderkey", mult)
           .drop("rep")
         li.repartition(64).write.mode("overwrite").parquet(s"$out/lineitem.parquet")
         // orders scale with the same rep-offset key so the orderkey join
         // spine (bucket mode) sees matched facts; dims and events are
         // copied as-is — the fact/dim ratio grows ×mult, which is the
         // direction real lakes grow
-        val ord = spark.read.parquet(s"$baseDir/orders.parquet")
-          .withColumn("rep", explode(array(reps: _*)))
-          .withColumn("o_orderkey", col("o_orderkey") + col("rep") * 100000000L)
+        val ord = replicate(spark.read.parquet(s"$baseDir/orders.parquet"), "o_orderkey", mult)
           .drop("rep")
         ord.repartition(64).write.mode("overwrite").parquet(s"$out/orders.parquet")
         for (smallT <- Seq("region", "nation", "customer", "supplier", "part",
@@ -127,9 +140,7 @@ object ScaleProbe {
         }
         val alpha = "abcdefghijklmnopqrstuvwxyz"
         val shifted = (0 until mult).map(r => alpha.drop(r) + alpha.take(r))
-        val docs = spark.read.parquet(s"$baseDir/documents.parquet")
-          .withColumn("rep", explode(array(reps: _*)))
-          .withColumn("doc_id", col("doc_id") + col("rep") * 100000000L)
+        val docs = replicate(spark.read.parquet(s"$baseDir/documents.parquet"), "doc_id", mult)
         val translated = docs.withColumn(
           "text",
           (0 until mult).foldLeft(lit(null).cast("string")) { (acc, r) =>

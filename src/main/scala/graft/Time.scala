@@ -30,13 +30,9 @@ object Time {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("GRAFT_TIME_CONFS").foreach { confs =>
-      confs.split(',').filter(_.nonEmpty).foreach { kv =>
-        require(kv.contains("="), s"GRAFT_TIME_CONFS entry has no '=': '$kv'")
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-        println(s"[time] conf $k=$v")
-      }
+    Util.timeConfs.foreach { case (k, v) =>
+      spark.conf.set(k, v)
+      println(s"[time] conf $k=$v")
     }
     SparkEntry.queries.get("q01_pricing_summary").foreach(_(spark, sfDir).count())
     for (name <- names) {

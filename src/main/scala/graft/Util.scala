@@ -17,4 +17,17 @@ private[graft] object Util {
           .forEach(p => Files.deleteIfExists(p))
       }
     } catch { case _: Throwable => () } // never fail the caller's output
+
+  /** The session confs `GRAFT_TIME_CONFS="k=v,k=v"` names, in order — the
+    * store-backed-vs-derived A/B switch `graft.Time` and `graft.Explain`
+    * both apply before their first query.
+    */
+  def timeConfs: Seq[(String, String)] =
+    sys.env.get("GRAFT_TIME_CONFS").toSeq
+      .flatMap(_.split(',').filter(_.nonEmpty).toSeq)
+      .map { kv =>
+        require(kv.contains("="), s"GRAFT_TIME_CONFS entry has no '=': '$kv'")
+        val Array(k, v) = kv.split("=", 2)
+        k -> v
+      }
 }

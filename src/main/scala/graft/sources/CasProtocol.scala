@@ -4,16 +4,18 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The ONE compare-and-swap publish protocol every versioned lake
-  * artifact shares (CatalogStore snapshots, DedupIndex / FreqStore /
-  * IvfIndex LSM versions): claim `v=N` atomically, and clear crash debris
-  * only through the explicit quiesced-writers repair op. Extracted in r13
-  * so the claim semantics — including the TOCTOU fix that removed the
-  * inline orphan-delete — have exactly one implementation to keep correct
-  * (four byte-identical copies previously had to be kept in sync by hand).
+  * artifact shares (CatalogStore and VersionedSink snapshots, and the LSM
+  * stores — DedupIndex, FreqStore, IvfIndex, HllStore, KllStore — through
+  * their shared [[VersionedStore]] core): claim `v=N` atomically, and
+  * clear crash debris only through the explicit quiesced-writers repair
+  * op. The claim semantics — including the TOCTOU fix that removed the
+  * inline orphan-delete — have exactly one implementation to keep correct.
   *
-  * Store-specific knowledge stays in the stores: what a marker contains
-  * (each store's `Meta`) is injected as the `committed` predicate; this
-  * object owns only the claim/lose/repair mechanics.
+  * Store-specific knowledge stays out of this object: what a marker
+  * contains is injected as the `committed` predicate, which must re-read
+  * the marker uncached ([[VersionedStore]] states the marker-cache
+  * contract the LSM stores share); this object owns only the
+  * claim/lose/repair mechanics.
   *
   * HOW the slot is claimed is a per-filesystem [[VersionCommitter]] seam
   * (r15) — the publish CONTRACT is identical under both committers, only

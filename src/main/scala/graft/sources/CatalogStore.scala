@@ -194,7 +194,7 @@ object CatalogStore {
     */
   // CAS claim delegates to the shared [[CasProtocol]] — one
   // implementation of the no-overwrite claim and its TOCTOU-safe failure
-  // handling for all four versioned stores
+  // handling for every versioned store
   private[graft] def commit(spark: SparkSession, dir: String, staging: Path, version: Long): Unit =
     CasProtocol.claim(
       spark, dir, staging, new Path(snapshotPath(dir, version)), version, commitLock,

@@ -1,8 +1,14 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+private[sources] final case class DedupMeta(
+    kind: String, bands: Int, wk: Int, nh: Long, ns: Long, nw: Long,
+    override val tag: Option[String]) extends VersionMeta {
+  def counts: Seq[Long] = Seq(nh, ns, nw)
+}
 
 /** Persistent incremental dedup index — the precomputed artifacts
   * q107_delta_dedup and Dedup.deltaSubstring assume a real lake keeps
@@ -17,120 +23,43 @@ import org.apache.spark.sql.functions._
   * (a delta — appends anti-join the current view, so the union of
   * committed versions is distinct by construction), reads union the
   * last base with every later delta, and `compact` folds the chain back
-  * into one base version. Every publish goes through the same
-  * stage → read-back manifest → atomic no-overwrite rename CAS as
-  * `CatalogStore` (one protocol for every versioned artifact in the
-  * lake); the band count is pinned in the v=1 marker so an append can
-  * never silently mix signature families (`graft.lsh.bands` changing
-  * requires a rebuild, loudly).
+  * into one base version. The chain mechanics (publish through the
+  * shared CAS protocol, marker cache, repair, gc, compaction guard) are
+  * the [[VersionedStore]] core's; the band count is pinned in the v=1
+  * marker so an append can never silently mix signature families
+  * (`graft.lsh.bands` changing requires a rebuild, loudly).
   *
   * Reference anchor: geostore keeps per-file checksums as import-time
   * metadata (`check_files_checksums`) rather than re-hashing the lake
   * per batch — this is that discipline applied to content dedup.
   */
-object DedupIndex {
+object DedupIndex extends VersionedStore[DedupMeta]("dedup index", "index update") {
 
   final case class IndexStats(
       version: Long, kind: String, bands: Int, windowK: Int,
       newHashes: Long, newSigs: Long, newWindows: Long,
       totalHashes: Long, totalSigs: Long, totalWindows: Long)
 
-  private val Marker = "_COMMITTED"
-  // Committed markers are IMMUTABLE (versions are never rewritten, only
-  // created or deleted whole, and no code path queries a deleted version
-  // — every consumer iterates a fresh directory listing first), so
-  // successful marker reads memoize forever. Without this, every
-  // append/read re-fetches O(chain) marker files per operation — real
-  // round-trips on an object store.
-  // SCOPE OF THE ASSUMPTION (read APIs inherit it): the cache is per-JVM
-  // and invalidated only by THIS JVM's init/gc/repair — if another
-  // process deletes and re-initializes the store at the same path, reads
-  // here can serve the previous incarnation's Meta for reused version
-  // numbers. That is the documented single-writer / no-out-of-band-
-  // deletion contract; the COMMIT predicate always re-reads uncached, so
-  // publishes are safe regardless. A caller that must observe a foreign
-  // re-init should route it through this JVM's init/repair.
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, Meta]()
-  private val commitLock = new Object
+  type Stats = IndexStats
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val MarkerRe =
+    ("""\{"kind":"(base|delta)","bands":(\d+),"wk":(\d+),"nh":(\d+),"ns":(\d+),"nw":(\d+)""" +
+      """(?:,"tag":"([^"]*)")?\}""").r
 
-  private def versionPath(dir: String, v: Long) = s"$dir/v=$v"
-
-  private final case class Meta(
-      kind: String, bands: Int, wk: Int, nh: Long, ns: Long, nw: Long,
-      tag: Option[String])
-
-  // drop every cached marker under `dir` — init/gc/repair call this so a
-  // deleted-and-recreated store (or reclaimed versions) can never be
-  // served from a previous incarnation's metadata
-  private def invalidateMetaCache(dir: String): Unit =
-    metaCache.keySet.removeIf(_.startsWith(s"$dir|"))
-
-  private def readMeta(f: FileSystem, dir: String, v: Long): Option[Meta] = {
-    val cached = metaCache.get(s"$dir|$v")
-    if (cached != null) return Some(cached)
-    val out = readMetaUncached(f, dir, v)
-    out.foreach(m => metaCache.put(s"$dir|$v", m))
-    out
+  protected def parseMarker(body: String): Option[DedupMeta] = body.trim match {
+    case MarkerRe(kind, bands, wk, nh, ns, nw, tag) =>
+      Some(DedupMeta(kind, bands.toInt, wk.toInt, nh.toLong, ns.toLong, nw.toLong, Option(tag)))
+    case _ => None
   }
 
-  private def readMetaUncached(f: FileSystem, dir: String, v: Long): Option[Meta] = {
-    val p = new Path(versionPath(dir, v), Marker)
-    if (!f.exists(p)) return None
-    val in = f.open(p)
-    val body =
-      try new String(
-        Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
-      finally in.close()
-    val m =
-      ("""\{"kind":"(base|delta)","bands":(\d+),"wk":(\d+),"nh":(\d+),"ns":(\d+),"nw":(\d+)""" +
-        """(?:,"tag":"([^"]*)")?\}""").r
-    body.trim match {
-      case m(kind, bands, wk, nh, ns, nw, tag) =>
-        Some(Meta(kind, bands.toInt, wk.toInt, nh.toLong, ns.toLong, nw.toLong, Option(tag)))
-      case _ =>
-        // present-but-unparseable is CORRUPTION OR MIGRATION, never
-        // absence: treating it as uncommitted hides the version from
-        // listVersions and turns repair() into a committed-data reaper
-        throw new IllegalStateException(
-          s"committed marker at $p is unreadable — index format migrated or marker " +
-            "corrupt; refusing to treat the version as uncommitted (repair would reap " +
-            "committed data). Restore the marker or rebuild the index at a fresh path.")
-    }
-  }
-
-  /** Committed versions ascending — marker presence IS publication,
-    * exactly CatalogStore's rule; marker-less dirs are crash debris.
-    */
-  def listVersions(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    if (!f.exists(new Path(dir))) return Seq.empty
-    f.listStatus(new Path(dir)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.stripPrefix("v=").toLong }
-      .filter(v => readMeta(f, dir, v).isDefined)
-      .sorted
-  }
-
-  def currentVersion(spark: SparkSession, dir: String): Option[Long] =
-    listVersions(spark, dir).lastOption
+  protected def statsOf(v: Long, m: DedupMeta, t: Seq[Long]): IndexStats =
+    IndexStats(v, m.kind, m.bands, m.wk, m.nh, m.ns, m.nw, t(0), t(1), t(2))
 
   /** The band count this store was built at (pinned at init). */
-  def storeBands(spark: SparkSession, dir: String): Int = {
-    val f = fs(spark, dir)
-    readMeta(f, dir, listVersions(spark, dir).headOption.getOrElse(
-      throw new IllegalStateException(s"no dedup index at $dir"))).get.bands
-  }
+  def storeBands(spark: SparkSession, dir: String): Int = firstMeta(spark, dir).bands
 
   /** The window token count K this store was built at (pinned at init). */
-  def storeWindowK(spark: SparkSession, dir: String): Int = {
-    val f = fs(spark, dir)
-    readMeta(f, dir, listVersions(spark, dir).headOption.getOrElse(
-      throw new IllegalStateException(s"no dedup index at $dir"))).get.wk
-  }
+  def storeWindowK(spark: SparkSession, dir: String): Int = firstMeta(spark, dir).wk
 
   /** Distinct content hashes, (band, sig) signature rows, and K-token
     * window hashes of a corpus frame — the exact fragments
@@ -149,91 +78,44 @@ object DedupIndex {
     (hashes, sigs, windows)
   }
 
-  // version chain to read: the newest base and every later delta
-  private def readChain(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    val vs = listVersions(spark, dir)
-    require(vs.nonEmpty, s"no dedup index at $dir")
-    val lastBase = vs.filter(v => readMeta(f, dir, v).get.kind == "base").lastOption
-    vs.filter(v => lastBase.forall(v >= _))
-  }
-
   /** The current distinct content-hash view (column `h`). */
-  def hashes(spark: SparkSession, dir: String): DataFrame =
-    readChain(spark, dir)
-      .map(v => spark.read.parquet(s"${versionPath(dir, v)}/hashes"))
-      .reduce(_.unionByName(_))
+  def hashes(spark: SparkSession, dir: String): DataFrame = chainRead(spark, dir, "hashes")
 
   /** The current distinct (band, sig) view. */
-  def sigs(spark: SparkSession, dir: String): DataFrame =
-    readChain(spark, dir)
-      .map(v => spark.read.parquet(s"${versionPath(dir, v)}/sigs"))
-      .reduce(_.unionByName(_))
+  def sigs(spark: SparkSession, dir: String): DataFrame = chainRead(spark, dir, "sigs")
 
   /** The current distinct K-token window-hash view (column `wh`). */
-  def windows(spark: SparkSession, dir: String): DataFrame =
-    readChain(spark, dir)
-      .map(v => spark.read.parquet(s"${versionPath(dir, v)}/windows"))
-      .reduce(_.unionByName(_))
+  def windows(spark: SparkSession, dir: String): DataFrame = chainRead(spark, dir, "windows")
 
-  private def stage(
+  private def stageIndex(
       spark: SparkSession, dir: String, v: Long, kind: String, bands: Int, wk: Int,
       hashes: DataFrame, sigs: DataFrame, windows: DataFrame,
-      tag: Option[String] = None): Path = {
-    val staging = new Path(dir, s"_staging/v$v-${java.util.UUID.randomUUID()}")
-    hashes.write.mode("overwrite").parquet(s"$staging/hashes")
-    sigs.write.mode("overwrite").parquet(s"$staging/sigs")
-    windows.write.mode("overwrite").parquet(s"$staging/windows")
-    // manifest counts read BACK from the staged files — certifying what
-    // landed on disk, CatalogStore's rule
-    val nh = spark.read.parquet(s"$staging/hashes").count()
-    val ns = spark.read.parquet(s"$staging/sigs").count()
-    val nw = spark.read.parquet(s"$staging/windows").count()
-    val out = fs(spark, dir).create(new Path(staging, Marker), false)
-    val tagField = tag.map(t => s""","tag":"$t"""").getOrElse("")
-    try out.write(
+      tag: Option[String] = None): Path =
+    stage(spark, dir, v) { staging =>
+      hashes.write.mode("overwrite").parquet(s"$staging/hashes")
+      sigs.write.mode("overwrite").parquet(s"$staging/sigs")
+      windows.write.mode("overwrite").parquet(s"$staging/windows")
+      val nh = spark.read.parquet(s"$staging/hashes").count()
+      val ns = spark.read.parquet(s"$staging/sigs").count()
+      val nw = spark.read.parquet(s"$staging/windows").count()
+      val tagField = tag.map(t => s""","tag":"$t"""").getOrElse("")
       s"""{"kind":"$kind","bands":$bands,"wk":$wk,"nh":$nh,"ns":$ns,"nw":$nw$tagField}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    staging
-  }
+    }
 
-  // CAS claim + debris repair delegate to the shared [[CasProtocol]]
-  private def commit(spark: SparkSession, dir: String, staging: Path, v: Long): Unit =
-    CasProtocol.claim(
-      spark, dir, staging, new Path(versionPath(dir, v)), v, commitLock,
-      // the claim predicate must RE-READ the marker (CasProtocol's
-      // contract) — the memoized readMeta would serve a stale positive
-      // after an out-of-band store deletion at the same path
-      () => readMetaUncached(fs(spark, dir), dir, v).isDefined, "index update")
-
-  /** Quiesced-writers crash-debris cleanup — [[CasProtocol.repair]]. */
-  def repair(spark: SparkSession, dir: String): Seq[String] = {
-    invalidateMetaCache(dir)
-    CasProtocol.repair(spark, dir, v => readMetaUncached(fs(spark, dir), dir, v).isDefined)
-  }
-
-  private def stats(spark: SparkSession, dir: String, v: Long): IndexStats = {
-    val f = fs(spark, dir)
-    val m = readMeta(f, dir, v).get
-    val chain = readChain(spark, dir)
-    val (th, ts, tw) = chain
-      .map(cv => { val cm = readMeta(f, dir, cv).get; (cm.nh, cm.ns, cm.nw) })
-      .reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
-    IndexStats(v, m.kind, m.bands, m.wk, m.nh, m.ns, m.nw, th, ts, tw)
-  }
+  protected def stageBase(spark: SparkSession, dir: String, v: Long, before: IndexStats): Path =
+    stageIndex(spark, dir, v, "base", before.bands, before.windowK,
+      hashes(spark, dir), sigs(spark, dir), windows(spark, dir))
 
   /** Build v=1 (a base) from the curated corpus. Fails if initialized. */
   def init(
       spark: SparkSession, dir: String, docs: DataFrame, bands: Int,
       windowK: Int = 8): IndexStats = {
-    invalidateMetaCache(dir)
     require(bands >= 1 && bands <= 64, s"bands out of range: $bands")
     require(windowK >= 2 && windowK <= 64, s"windowK out of range: $windowK")
-    require(currentVersion(spark, dir).isEmpty, s"dedup index at $dir already initialized")
-    val (h, s, w) = derive(docs, bands, windowK)
-    commit(spark, dir, stage(spark, dir, 1L, "base", bands, windowK, h, s, w), 1L)
-    stats(spark, dir, 1L)
+    initWith(spark, dir) {
+      val (h, s, w) = derive(docs, bands, windowK)
+      stageIndex(spark, dir, 1L, "base", bands, windowK, h, s, w)
+    }
   }
 
   /** Incremental maintenance: publish the arriving batch's NEW hashes and
@@ -245,25 +127,12 @@ object DedupIndex {
   def append(
       spark: SparkSession, dir: String, batch: DataFrame,
       tag: Option[String] = None): IndexStats = {
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no dedup index at $dir — init first"))
+    val cur = head(spark, dir)
     // Set-union appends are naturally replay-idempotent (nothing new →
     // no version), but the tag short-circuit keeps a replayed batch from
     // paying the derive+anti-join at all and pins provenance in the
     // marker, mirroring FreqStore's exactly-once discipline.
-    tag.foreach { tg =>
-      // the tag lands verbatim in the marker JSON: restrict it to a
-      // quote/backslash-free charset or the committed marker would be
-      // unparseable — the version would vanish from listVersions and
-      // repair() would reap committed data as debris
-      require(tg.nonEmpty && tg.length <= 128 && tg.forall(c =>
-        (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-          (c >= '0' && c <= '9') || "._:-".contains(c)),
-        s"append tag must be 1..128 chars of [A-Za-z0-9._:-]: '$tg'")
-      val f = fs(spark, dir)
-      if (listVersions(spark, dir).exists(v => readMeta(f, dir, v).get.tag.contains(tg)))
-        return stats(spark, dir, cur)
-    }
+    if (tag.exists(tagApplied(spark, dir, _))) return stats(spark, dir, cur)
     val bands = storeBands(spark, dir)
     val wk = storeWindowK(spark, dir)
     val (bh, bs, bw) = derive(batch, bands, wk)
@@ -271,22 +140,11 @@ object DedupIndex {
     val newS = bs.join(sigs(spark, dir), Seq("band", "sig"), "left_anti")
     val newW = bw.join(windows(spark, dir), Seq("wh"), "left_anti")
     // No pre-commit visibility check here: a concurrent appender may
-    // legitimately commit cur+1 between our stage and commit — commit()'s
-    // marker-CAS is the arbiter, and the loser's staging is deleted there.
-    val staging = stage(spark, dir, cur + 1, "delta", bands, wk, newH, newS, newW, tag)
-    val stagedMeta = {
-      val in = fs(spark, dir).open(new Path(staging, Marker))
-      try new String(
-        Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
-      finally in.close()
-    }
-    if (stagedMeta.contains("\"nh\":0,\"ns\":0,\"nw\":0")) {
-      fs(spark, dir).delete(staging, true) // nothing new: no version
-      stats(spark, dir, cur)
-    } else {
-      commit(spark, dir, staging, cur + 1)
-      stats(spark, dir, cur + 1)
-    }
+    // legitimately commit cur+1 between our stage and commit — the
+    // commit's marker-CAS is the arbiter, and the loser's staging is
+    // deleted there.
+    publishOrDrop(spark, dir, cur,
+      stageIndex(spark, dir, cur + 1, "delta", bands, wk, newH, newS, newW, tag))
   }
 
   /** Maintenance policy: fold the chain once it exceeds `maxChain`
@@ -294,13 +152,8 @@ object DedupIndex {
     * bounded as batches accumulate. Content-preserving by compact's
     * invariant; a replayed compact of an already-short chain is a no-op.
     */
-  def compactIfNeeded(spark: SparkSession, dir: String, maxChain: Int = 8): IndexStats = {
-    require(maxChain >= 2, s"maxChain must be >= 2: $maxChain")
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no dedup index at $dir"))
-    if (readChain(spark, dir).size > maxChain) compact(spark, dir)
-    else stats(spark, dir, cur)
-  }
+  def compactIfNeeded(spark: SparkSession, dir: String, maxChain: Int = 8): IndexStats =
+    compactIfLonger(spark, dir, maxChain)
 
   /** Drop published versions no longer in the read chain (history
     * strictly before the newest base), keeping the most recent
@@ -315,46 +168,6 @@ object DedupIndex {
     * for the wired pipeline; an explicit external re-send protocol needs
     * a deeper history).
     */
-  def gc(spark: SparkSession, dir: String, keepHistory: Int = 0): Seq[Long] = {
-    require(keepHistory >= 0, s"keepHistory must be >= 0: $keepHistory")
-    val f = fs(spark, dir)
-    val chain = readChain(spark, dir).toSet
-    val doomed = listVersions(spark, dir).filterNot(chain).dropRight(keepHistory)
-    doomed.foreach(v => f.delete(new Path(versionPath(dir, v)), true))
-    doomed.foreach(v => metaCache.remove(s"$dir|$v"))
-    doomed
-  }
-
-  /** Fold the base+delta chain into a single base version — the LSM
-    * compaction keeping read fan-in bounded as deltas accumulate. View
-    * content is unchanged (the staged manifest totals must equal the
-    * chain's, or nothing publishes); earlier versions stay readable
-    * history exactly like CatalogStore snapshots.
-    */
-  def compact(spark: SparkSession, dir: String): IndexStats = {
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no dedup index at $dir"))
-    if (readChain(spark, dir).size <= 1) return stats(spark, dir, cur) // already one base
-    val bands = storeBands(spark, dir)
-    val wk = storeWindowK(spark, dir)
-    val before = stats(spark, dir, cur)
-    val staging = stage(
-      spark, dir, cur + 1, "base", bands, wk,
-      hashes(spark, dir), sigs(spark, dir), windows(spark, dir))
-    val f = fs(spark, dir)
-    val in = f.open(new Path(staging, Marker))
-    val body =
-      try new String(
-        Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
-      finally in.close()
-    val want =
-      s""""nh":${before.totalHashes},"ns":${before.totalSigs},"nw":${before.totalWindows}"""
-    if (!body.contains(want)) {
-      f.delete(staging, true)
-      throw new IllegalStateException(
-        s"compaction would CHANGE the index view (expected $want, staged $body) — aborted")
-    }
-    commit(spark, dir, staging, cur + 1)
-    stats(spark, dir, cur + 1)
-  }
+  def gc(spark: SparkSession, dir: String, keepHistory: Int = 0): Seq[Long] =
+    gcHistory(spark, dir, keepHistory)
 }

@@ -1,8 +1,14 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+private[sources] final case class FreqMeta(
+    kind: String, family: String, nt: Long, nv: Long, nd: Long,
+    override val tag: Option[String]) extends VersionMeta {
+  def counts: Seq[Long] = Seq(nt, nd)
+}
 
 /** Persistent corpus count store — the precomputed keyed count tables the
   * frequency/collocation/leakage consumers otherwise re-derive from the
@@ -25,17 +31,16 @@ import org.apache.spark.sql.functions._
   *     group-size rollup, and projects frozen-slice WindowSrc stores
   *     without a corpus re-explode ([[initWinSrcProjection]]).
   *
-  * Same LSM/CAS discipline as [[DedupIndex]]/[[IvfIndex]], but with
-  * COUNT-MERGE semantics instead of set-union: counts are additive, so an
+  * The [[VersionedStore]] chain [[DedupIndex]]/[[IvfIndex]] run on, but
+  * with COUNT-MERGE semantics instead of set-union: counts are additive, so an
   * append commits the arriving batch's OWN count table verbatim as a
   * delta — no anti-join probe of the base at all, cost is purely
   * ∝ |batch| — and the read view is `groupBy(keys).sum` over the
   * base+delta chain. Compaction folds the chain back into one base; the
   * additive invariant (total occurrences are merge-invariant) is checked
   * from the staged manifest before anything publishes, CatalogStore's
-  * rule. Every publish rides the same stage → read-back manifest → atomic
-  * no-overwrite rename CAS; of two racing writers exactly one wins and
-  * the loser fails loudly with nothing written.
+  * rule. Of two racing writers exactly one wins and the loser fails
+  * loudly with nothing written.
   *
   * Semantics contract: the store tracks the ACCEPTED ingest stream —
   * appending the same documents twice doubles their counts, exactly as
@@ -50,7 +55,7 @@ import org.apache.spark.sql.functions._
   * re-deriving it per query — this is that discipline applied to the
   * corpus count tables.
   */
-object FreqStore {
+object FreqStore extends VersionedStore[FreqMeta]("count store", "count update") {
 
   /** A count family: which keyed count table the store maintains. The
     * `derive` is byte-for-byte the fragment its consumers build in-query
@@ -178,31 +183,7 @@ object FreqStore {
       newTokens: Long, newVocab: Long, newDocs: Long,
       totalTokens: Long, totalDocs: Long)
 
-  private val Marker = "_COMMITTED"
-  // Committed markers are IMMUTABLE (versions are never rewritten, only
-  // created or deleted whole, and no code path queries a deleted version
-  // — every consumer iterates a fresh directory listing first), so
-  // successful marker reads memoize forever. Without this, every
-  // append/read re-fetches O(chain) marker files per operation — real
-  // round-trips on an object store.
-  // SCOPE OF THE ASSUMPTION (read APIs inherit it): the cache is per-JVM
-  // and invalidated only by THIS JVM's init/gc/repair — if another
-  // process deletes and re-initializes the store at the same path, reads
-  // here can serve the previous incarnation's Meta for reused version
-  // numbers. That is the documented single-writer / no-out-of-band-
-  // deletion contract; the COMMIT predicate always re-reads uncached, so
-  // publishes are safe regardless. A caller that must observe a foreign
-  // re-init should route it through this JVM's init/repair.
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, Meta]()
-  private val commitLock = new Object
-
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def versionPath(dir: String, v: Long) = s"$dir/v=$v"
-
-  private final case class Meta(
-      kind: String, family: String, nt: Long, nv: Long, nd: Long, tag: Option[String])
+  type Stats = FreqStats
 
   private val MetaRe =
     ("""\{"kind":"(base|delta)","family":"([a-z0-9:]+)","nt":(\d+),"nv":(\d+),"nd":(\d+)""" +
@@ -219,73 +200,30 @@ object FreqStore {
       """(?:,"tag":"([^"]*)")?\}""").r
   private val NdUnknown = -1L
 
-  // drop every cached marker under `dir` — init/gc/repair call this so a
-  // deleted-and-recreated store (or reclaimed versions) can never be
-  // served from a previous incarnation's metadata
-  private def invalidateMetaCache(dir: String): Unit =
-    metaCache.keySet.removeIf(_.startsWith(s"$dir|"))
-
-  private def readMeta(f: FileSystem, dir: String, v: Long): Option[Meta] = {
-    val cached = metaCache.get(s"$dir|$v")
-    if (cached != null) return Some(cached)
-    val out = readMetaUncached(f, dir, v)
-    out.foreach(m => metaCache.put(s"$dir|$v", m))
-    out
+  protected def parseMarker(body: String): Option[FreqMeta] = body.trim match {
+    case MetaRe(kind, fam, nt, nv, nd, tag) =>
+      Some(FreqMeta(kind, fam, nt.toLong, nv.toLong, nd.toLong, Option(tag)))
+    case LegacyMetaRe(kind, nt, nv, tag) =>
+      Some(FreqMeta(kind, "unigram", nt.toLong, nv.toLong, NdUnknown, Option(tag)))
+    case _ => None
   }
 
-  private def readMetaUncached(f: FileSystem, dir: String, v: Long): Option[Meta] = {
-    val p = new Path(versionPath(dir, v), Marker)
-    if (!f.exists(p)) return None
-    val in = f.open(p)
-    val body =
-      try new String(
-        Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
-      finally in.close()
-    body.trim match {
-      case MetaRe(kind, fam, nt, nv, nd, tag) =>
-        Some(Meta(kind, fam, nt.toLong, nv.toLong, nd.toLong, Option(tag)))
-      case LegacyMetaRe(kind, nt, nv, tag) =>
-        Some(Meta(kind, "unigram", nt.toLong, nv.toLong, NdUnknown, Option(tag)))
-      case _ =>
-        // present-but-unparseable is CORRUPTION OR MIGRATION, never
-        // absence: treating it as uncommitted hides the version from
-        // listVersions and turns repair() into a committed-data reaper
-        throw new IllegalStateException(
-          s"committed marker at $p is unreadable — store format migrated or marker " +
-            "corrupt; refusing to treat the version as uncommitted (repair would reap " +
-            "committed data). Restore the marker or rebuild the store at a fresh path.")
-    }
-  }
+  protected def statsOf(v: Long, m: FreqMeta, t: Seq[Long]): FreqStats =
+    FreqStats(v, m.kind, m.family, m.nt, m.nv, m.nd, t(0), t(1))
 
-  /** Committed versions ascending — marker presence IS publication. */
-  def listVersions(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    if (!f.exists(new Path(dir))) return Seq.empty
-    f.listStatus(new Path(dir)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.stripPrefix("v=").toLong }
-      .filter(v => readMeta(f, dir, v).isDefined)
-      .sorted
-  }
-
-  def currentVersion(spark: SparkSession, dir: String): Option[Long] =
-    listVersions(spark, dir).lastOption
+  /** Mutations and doc-count stats need every marker's `nd`; a legacy
+    * (pre-family) chain serves reads only — appending to it would poison
+    * every later total with the unknown sentinel.
+    */
+  override protected def requireWritable(spark: SparkSession, dir: String, vs: Seq[Long]): Unit =
+    require(
+      vs.forall(meta(spark, dir, _).nd != NdUnknown),
+      s"count store at $dir has legacy (pre-family) markers — read-only; " +
+        "rebuild the store at a fresh path to mutate it")
 
   /** The family this store was built at (pinned at init). */
-  def storeFamily(spark: SparkSession, dir: String): Family = {
-    val f = fs(spark, dir)
-    familyOf(readMeta(f, dir, listVersions(spark, dir).headOption.getOrElse(
-      throw new IllegalStateException(s"no count store at $dir"))).get.family)
-  }
-
-  private def readChain(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    val vs = listVersions(spark, dir)
-    require(vs.nonEmpty, s"no count store at $dir")
-    val lastBase = vs.filter(v => readMeta(f, dir, v).get.kind == "base").lastOption
-    vs.filter(v => lastBase.forall(v >= _))
-  }
+  def storeFamily(spark: SparkSession, dir: String): Family =
+    familyOf(firstMeta(spark, dir).family)
 
   /** The current merged count view (columns = family keys + `n`) — the
     * base+delta chain count-merged. One vocab-scale aggregate over at
@@ -307,10 +245,7 @@ object FreqStore {
     * keyed on per-key totals (thresholds, group sizes) must use
     * [[counts]].
     */
-  def rawCounts(spark: SparkSession, dir: String): DataFrame =
-    readChain(spark, dir)
-      .map(v => spark.read.parquet(s"${versionPath(dir, v)}/freq"))
-      .reduce(_.unionByName(_))
+  def rawCounts(spark: SparkSession, dir: String): DataFrame = chainRead(spark, dir, "freq")
 
   /** The unigram view (`token`, `n`) — fails loudly on a non-unigram
     * store instead of serving a foreign count family.
@@ -326,130 +261,54 @@ object FreqStore {
     * `nd`) — exact under the ingest-once contract; q146's n_train.
     */
   def totalDocs(spark: SparkSession, dir: String): Long = {
-    val f = fs(spark, dir)
-    val nds = readChain(spark, dir).map(v => readMeta(f, dir, v).get.nd)
+    val nds = readChain(spark, dir).map(meta(spark, dir, _).nd)
     require(nds.forall(_ != NdUnknown),
       s"count store at $dir has legacy (pre-family) markers with no doc counts — " +
         "totalDocs would be wrong; rebuild the store at a fresh path")
     nds.sum
   }
 
-  /** Mutations and doc-count stats need every marker's `nd`; a legacy
-    * (pre-family) chain serves reads only — appending to it would poison
-    * every later total with the unknown sentinel.
-    */
-  // takes the caller's already-listed versions — a fresh listVersions
-  // here would add one directory-LIST round-trip per mutation on an
-  // object store just to re-derive what the caller fetched (the meta
-  // reads themselves are memoized, so they cost nothing)
-  private def requireModern(spark: SparkSession, dir: String, vs: Seq[Long]): Unit = {
-    val f = fs(spark, dir)
-    require(
-      vs.forall(v => readMeta(f, dir, v).get.nd != NdUnknown),
-      s"count store at $dir has legacy (pre-family) markers — read-only; " +
-        "rebuild the store at a fresh path to mutate it")
-  }
-
-  // the tag lands verbatim in the marker JSON: restrict it to a
-  // quote/backslash-free charset or the committed marker would be
-  // unparseable — the version would vanish from listVersions and
-  // repair() would reap committed data as debris
-  private[graft] def requireValidTag(tg: String): Unit =
-    require(tg.nonEmpty && tg.length <= 128 && tg.forall(c =>
-      (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-        (c >= '0' && c <= '9') || "._:-".contains(c)),
-      s"append tag must be 1..128 chars of [A-Za-z0-9._:-]: '$tg'")
-
-  /** Whether any committed version carries `tg` — the batch-replay
-    * idempotence probe shared by [[append]] and
-    * [[appendWinSrcProjection]] (a marker scan; metas are memoized).
-    */
-  private def tagApplied(spark: SparkSession, dir: String, tg: String): Boolean = {
-    val f = fs(spark, dir)
-    listVersions(spark, dir).exists(v => readMeta(f, dir, v).get.tag.contains(tg))
-  }
-
-  private def stage(
+  private def stageFreq(
       spark: SparkSession, dir: String, v: Long, kind: String, fam: Family,
-      freq: DataFrame, nd: Long, tag: Option[String] = None): Path = {
-    val staging = new Path(dir, s"_staging/v$v-${java.util.UUID.randomUUID()}")
-    freq.write.mode("overwrite").parquet(s"$staging/freq")
-    // manifest read BACK from the staged files — certifying what landed
-    val staged = spark.read.parquet(s"$staging/freq")
-    val row = staged.agg(
-      coalesce(sum(col("n")), lit(0L)).as("nt"), count(lit(1)).as("nv")).head()
-    val (nt, nv) = (row.getLong(0), row.getLong(1))
-    val out = fs(spark, dir).create(new Path(staging, Marker), false)
-    val tagField = tag.map(t => s""","tag":"$t"""").getOrElse("")
-    try out.write(
-      s"""{"kind":"$kind","family":"${fam.name}","nt":$nt,"nv":$nv,"nd":$nd$tagField}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    staging
-  }
-
-  private def stagedMeta(spark: SparkSession, dir: String, staging: Path): Meta = {
-    val in = fs(spark, dir).open(new Path(staging, Marker))
-    val body =
-      try new String(
-        Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
-      finally in.close()
-    body.trim match {
-      case MetaRe(kind, fam, nt, nv, nd, tag) =>
-        Meta(kind, fam, nt.toLong, nv.toLong, nd.toLong, Option(tag))
-      case other => throw new IllegalStateException(s"unreadable staged marker: $other")
+      freq: DataFrame, nd: Long, tag: Option[String] = None): Path =
+    stage(spark, dir, v) { staging =>
+      freq.write.mode("overwrite").parquet(s"$staging/freq")
+      val row = spark.read.parquet(s"$staging/freq").agg(
+        coalesce(sum(col("n")), lit(0L)).as("nt"), count(lit(1)).as("nv")).head()
+      val tagField = tag.map(t => s""","tag":"$t"""").getOrElse("")
+      s"""{"kind":"$kind","family":"${fam.name}","nt":${row.getLong(0)},""" +
+        s""""nv":${row.getLong(1)},"nd":$nd$tagField}"""
     }
-  }
 
-  // CAS claim + debris repair: the shared protocol ([[CasProtocol]] —
-  // one implementation of the no-overwrite claim and its TOCTOU-safe
-  // failure handling for all four versioned stores)
-  private def commit(spark: SparkSession, dir: String, staging: Path, v: Long): Unit =
-    CasProtocol.claim(
-      spark, dir, staging, new Path(versionPath(dir, v)), v, commitLock,
-      // the claim predicate must RE-READ the marker (CasProtocol's
-      // contract) — the memoized readMeta would serve a stale positive
-      // after an out-of-band store deletion at the same path
-      () => readMetaUncached(fs(spark, dir), dir, v).isDefined, "count update")
+  protected def stageBase(spark: SparkSession, dir: String, v: Long, before: FreqStats): Path =
+    stageFreq(spark, dir, v, "base", storeFamily(spark, dir), counts(spark, dir), before.totalDocs)
 
-  /** Quiesced-writers crash-debris cleanup — [[CasProtocol.repair]]. */
-  def repair(spark: SparkSession, dir: String): Seq[String] = {
-    invalidateMetaCache(dir)
-    CasProtocol.repair(spark, dir, v => readMetaUncached(fs(spark, dir), dir, v).isDefined)
-  }
-
-  private def stats(spark: SparkSession, dir: String, v: Long): FreqStats = {
-    val f = fs(spark, dir)
-    val m = readMeta(f, dir, v).get
-    val chain = readChain(spark, dir)
-    val totalN = chain.map(cv => readMeta(f, dir, cv).get.nt).sum
-    val totalD = chain.map(cv => readMeta(f, dir, cv).get.nd).sum
-    FreqStats(v, m.kind, m.family, m.nt, m.nv, m.nd, totalN, totalD)
-  }
-
-  /** Build v=1 (a base) from the curated corpus. Fails if initialized. */
   // one corpus pass per publish: the family's occurrence relation is
   // persisted so the count table and the nd doc count both read it
   private def stageOnePass(
       spark: SparkSession, dir: String, v: Long, kind: String, fam: Family,
-      docs: DataFrame, tag: Option[String]): (Path, Long) = {
+      docs: DataFrame, tag: Option[String]): Path = {
     val pos = fam.rows(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nd = pos.agg(countDistinct(col("doc_id"))).head().getLong(0)
-      (stage(spark, dir, v, kind, fam, fam.aggregate(pos), nd, tag), nd)
+      stageFreq(spark, dir, v, kind, fam, fam.aggregate(pos), nd, tag)
     } finally pos.unpersist()
   }
 
+  /** Build v=1 (a base) from the curated corpus. Fails if initialized. */
   def init(
       spark: SparkSession, dir: String, docs: DataFrame,
-      family: Family = Unigram): FreqStats = {
-    invalidateMetaCache(dir)
-    require(currentVersion(spark, dir).isEmpty, s"count store at $dir already initialized")
-    val (staging, _) = stageOnePass(spark, dir, 1L, "base", family, docs, None)
-    commit(spark, dir, staging, 1L)
-    stats(spark, dir, 1L)
-  }
+      family: Family = Unigram): FreqStats =
+    initWith(spark, dir)(stageOnePass(spark, dir, 1L, "base", family, docs, None))
+
+  // a windoc store's window size, or a loud refusal naming `role`
+  private def windocK(spark: SparkSession, windocDir: String, role: String): Int =
+    storeFamily(spark, windocDir) match {
+      case WindowDoc(wk) => wk
+      case other => throw new IllegalArgumentException(
+        s"projection $role at $windocDir holds family '${other.name}', not windoc")
+    }
 
   /** Materialize a [[WindowSrc]] store as a PROJECTION of a committed
     * [[WindowDoc]] store's current view, optionally doc-filtered (e.g.
@@ -465,24 +324,17 @@ object FreqStore {
     */
   def initWinSrcProjection(
       spark: SparkSession, dir: String, windocDir: String,
-      docFilter: DataFrame => DataFrame = identity): FreqStats = {
-    invalidateMetaCache(dir)
-    require(currentVersion(spark, dir).isEmpty, s"count store at $dir already initialized")
-    val k = storeFamily(spark, windocDir) match {
-      case WindowDoc(wk) => wk
-      case other => throw new IllegalArgumentException(
-        s"projection source at $windocDir holds family '${other.name}', not windoc")
+      docFilter: DataFrame => DataFrame = identity): FreqStats =
+    initWith(spark, dir) {
+      val k = windocK(spark, windocDir, "source")
+      val rel = docFilter(counts(spark, windocDir))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val nd = rel.agg(countDistinct(col("doc_id"))).head().getLong(0)
+        val proj = rel.groupBy(col("wh"), col("source")).agg(count(lit(1)).as("n"))
+        stageFreq(spark, dir, 1L, "base", WindowSrc(k), proj, nd)
+      } finally rel.unpersist()
     }
-    val rel = docFilter(counts(spark, windocDir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nd = rel.agg(countDistinct(col("doc_id"))).head().getLong(0)
-      val proj = rel.groupBy(col("wh"), col("source")).agg(count(lit(1)).as("n"))
-      val staging = stage(spark, dir, 1L, "base", WindowSrc(k), proj, nd)
-      commit(spark, dir, staging, 1L)
-      stats(spark, dir, 1L)
-    } finally rel.unpersist()
-  }
 
   /** Incremental projection maintenance — [[initWinSrcProjection]]'s
     * per-batch analog: append to a [[WindowSrc]] projection store the
@@ -508,25 +360,17 @@ object FreqStore {
       spark: SparkSession, dir: String, windocDir: String, tag: String,
       docFilter: DataFrame => DataFrame = identity): FreqStats = {
     requireValidTag(tag)
-    val allVs = listVersions(spark, dir)
-    val cur = allVs.lastOption.getOrElse(
-      throw new IllegalStateException(s"no count store at $dir — init first"))
-    requireModern(spark, dir, allVs)
+    val cur = head(spark, dir)
     val k = storeFamily(spark, dir) match {
       case WindowSrc(wk) => wk
       case other => throw new IllegalArgumentException(
         s"projection target at $dir holds family '${other.name}', not winsrc")
     }
-    storeFamily(spark, windocDir) match {
-      case WindowDoc(wk) => require(wk == k,
-        s"projection source at $windocDir was built at windowK=$wk, target pins $k — rebuild")
-      case other => throw new IllegalArgumentException(
-        s"projection source at $windocDir holds family '${other.name}', not windoc")
-    }
+    val srcK = windocK(spark, windocDir, "source")
+    require(srcK == k,
+      s"projection source at $windocDir was built at windowK=$srcK, target pins $k — rebuild")
     if (tagApplied(spark, dir, tag)) return stats(spark, dir, cur)
-    val fSrc = fs(spark, windocDir)
-    listVersions(spark, windocDir)
-      .find(v => readMeta(fSrc, windocDir, v).get.tag.contains(tag)) match {
+    taggedVersion(spark, windocDir, tag) match {
       case None => stats(spark, dir, cur)
       case Some(srcV) =>
         val delta = docFilter(spark.read.parquet(s"${versionPath(windocDir, srcV)}/freq"))
@@ -537,14 +381,8 @@ object FreqStore {
           // source) distinct-doc count is the group SIZE — same rollup
           // as the init-time projection
           val proj = delta.groupBy(col("wh"), col("source")).agg(count(lit(1)).as("n"))
-          val staging = stage(spark, dir, cur + 1, "delta", WindowSrc(k), proj, nd, Some(tag))
-          if (stagedMeta(spark, dir, staging).nt == 0L) {
-            fs(spark, dir).delete(staging, true)
-            stats(spark, dir, cur)
-          } else {
-            commit(spark, dir, staging, cur + 1)
-            stats(spark, dir, cur + 1)
-          }
+          publishOrDrop(spark, dir, cur,
+            stageFreq(spark, dir, cur + 1, "delta", WindowSrc(k), proj, nd, Some(tag)))
         } finally delta.unpersist()
     }
   }
@@ -557,28 +395,15 @@ object FreqStore {
   def append(
       spark: SparkSession, dir: String, batch: DataFrame,
       tag: Option[String] = None): FreqStats = {
-    val allVs = listVersions(spark, dir)
-    val cur = allVs.lastOption.getOrElse(
-      throw new IllegalStateException(s"no count store at $dir — init first"))
-    requireModern(spark, dir, allVs)
+    val cur = head(spark, dir)
     // Exactly-once under batch REPLAY (count-merge is NOT naturally
     // idempotent the way DedupIndex's set-union is): a caller that tags
     // each append with its batch id makes the tag the idempotence key —
     // an already-committed tag means this exact batch's counts are
     // already in the chain, so the replay is a no-op.
-    tag.foreach { tg =>
-      requireValidTag(tg)
-      if (tagApplied(spark, dir, tg)) return stats(spark, dir, cur)
-    }
+    if (tag.exists(tagApplied(spark, dir, _))) return stats(spark, dir, cur)
     val fam = storeFamily(spark, dir)
-    val (staging, _) = stageOnePass(spark, dir, cur + 1, "delta", fam, batch, tag)
-    if (stagedMeta(spark, dir, staging).nt == 0L) {
-      fs(spark, dir).delete(staging, true) // nothing new: no version
-      stats(spark, dir, cur)
-    } else {
-      commit(spark, dir, staging, cur + 1)
-      stats(spark, dir, cur + 1)
-    }
+    publishOrDrop(spark, dir, cur, stageOnePass(spark, dir, cur + 1, "delta", fam, batch, tag))
   }
 
   /** Maintenance policy: fold the chain once it exceeds `maxChain`
@@ -588,15 +413,8 @@ object FreqStore {
     * compact's invariant; safe under crash-replay (a replayed compact of
     * an already-short chain is a no-op).
     */
-  def compactIfNeeded(spark: SparkSession, dir: String, maxChain: Int = 8): FreqStats = {
-    require(maxChain >= 2, s"maxChain must be >= 2: $maxChain")
-    val allVs = listVersions(spark, dir)
-    val cur = allVs.lastOption.getOrElse(
-      throw new IllegalStateException(s"no count store at $dir"))
-    requireModern(spark, dir, allVs)
-    if (readChain(spark, dir).size > maxChain) compact(spark, dir)
-    else stats(spark, dir, cur)
-  }
+  def compactIfNeeded(spark: SparkSession, dir: String, maxChain: Int = 8): FreqStats =
+    compactIfLonger(spark, dir, maxChain)
 
   /** Drop published versions that are no longer in the read chain
     * (history strictly before the newest base), keeping the most recent
@@ -620,39 +438,6 @@ object FreqStore {
     * maintenance) and keep `keepHistory >= 1`. An explicit external
     * re-send protocol needs a deeper history still.
     */
-  def gc(spark: SparkSession, dir: String, keepHistory: Int = 0): Seq[Long] = {
-    require(keepHistory >= 0, s"keepHistory must be >= 0: $keepHistory")
-    val f = fs(spark, dir)
-    val chain = readChain(spark, dir).toSet
-    val doomed = listVersions(spark, dir).filterNot(chain).dropRight(keepHistory)
-    doomed.foreach(v => f.delete(new Path(versionPath(dir, v)), true))
-    doomed.foreach(v => metaCache.remove(s"$dir|$v"))
-    doomed
-  }
-
-  /** Fold the base+delta chain into one base version. The additive
-    * invariant is checked before publish: total occurrences are
-    * merge-invariant, so the staged Σn must equal the chain's manifest
-    * sum or nothing publishes. Earlier versions stay readable history.
-    */
-  def compact(spark: SparkSession, dir: String): FreqStats = {
-    val allVs = listVersions(spark, dir)
-    val cur = allVs.lastOption.getOrElse(
-      throw new IllegalStateException(s"no count store at $dir"))
-    requireModern(spark, dir, allVs)
-    if (readChain(spark, dir).size <= 1) return stats(spark, dir, cur)
-    val fam = storeFamily(spark, dir)
-    val before = stats(spark, dir, cur)
-    val staging = stage(
-      spark, dir, cur + 1, "base", fam, counts(spark, dir), before.totalDocs)
-    val staged = stagedMeta(spark, dir, staging)
-    if (staged.nt != before.totalTokens) {
-      fs(spark, dir).delete(staging, true)
-      throw new IllegalStateException(
-        s"compaction would CHANGE the view (chain Σn=${before.totalTokens}, " +
-          s"staged Σn=${staged.nt}) — aborted")
-    }
-    commit(spark, dir, staging, cur + 1)
-    stats(spark, dir, cur + 1)
-  }
+  def gc(spark: SparkSession, dir: String, keepHistory: Int = 0): Seq[Long] =
+    gcHistory(spark, dir, keepHistory)
 }

@@ -1,9 +1,13 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+private[sources] final case class IvfMeta(kind: String, k: Long, na: Long) extends VersionMeta {
+  def counts: Seq[Long] = Seq(na)
+}
 
 /** Persistent IVF coarse-quantizer index — the ANN artifact an embedding
   * service ships: the frozen centroid table (the integer-quantized
@@ -14,105 +18,30 @@ import org.apache.spark.sql.functions._
   * with), and a search session reads assignments instead of re-deriving
   * them; the training corpus is never re-touched.
   *
-  * Storage discipline is [[DedupIndex]]'s LSM exactly: version v=1 (a
-  * base) carries the centroids and the initial assignment; each append
+  * Storage is the shared [[VersionedStore]] chain: version v=1 (a base)
+  * carries the centroids and the initial assignment; each append
   * publishes ONLY the newly-indexed vectors' assignment rows (idempotent
-  * re-sends anti-join away); reads union the newest base with later
-  * deltas; `compact` folds the chain. Every publish goes through the
-  * stage → read-back manifest → atomic no-overwrite-rename CAS, and the
-  * centroid family is pinned at init — centroids are FROZEN (standard
-  * IVF discipline: re-training the quantizer is a rebuild, loudly, never
-  * a silent drift of cell boundaries under existing assignments).
+  * re-sends anti-join away); `compact` folds the chain. The cell count is
+  * pinned in the v=1 marker and the centroids are FROZEN (standard IVF
+  * discipline: re-training the quantizer is a rebuild, loudly, never a
+  * silent drift of cell boundaries under existing assignments).
   */
-object IvfIndex {
+object IvfIndex extends VersionedStore[IvfMeta]("IVF index", "index update") {
 
   final case class IvfIndexStats(
       version: Long, kind: String, k: Long, newAssigned: Long, totalAssigned: Long)
 
-  private val Marker = "_COMMITTED"
-  // Committed markers are IMMUTABLE (versions are never rewritten, only
-  // created or deleted whole, and no code path queries a deleted version
-  // — every consumer iterates a fresh directory listing first), so
-  // successful marker reads memoize forever. Without this, every
-  // append/read re-fetches O(chain) marker files per operation — real
-  // round-trips on an object store.
-  // SCOPE OF THE ASSUMPTION (read APIs inherit it): the cache is per-JVM
-  // and invalidated only by THIS JVM's init/gc/repair — if another
-  // process deletes and re-initializes the store at the same path, reads
-  // here can serve the previous incarnation's Meta for reused version
-  // numbers. That is the documented single-writer / no-out-of-band-
-  // deletion contract; the COMMIT predicate always re-reads uncached, so
-  // publishes are safe regardless. A caller that must observe a foreign
-  // re-init should route it through this JVM's init/repair.
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, Meta]()
-  private val commitLock = new Object
+  type Stats = IvfIndexStats
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val MarkerRe = """\{"kind":"(base|delta)","k":(\d+),"na":(\d+)\}""".r
 
-  private def versionPath(dir: String, v: Long) = s"$dir/v=$v"
-
-  private final case class Meta(kind: String, k: Long, na: Long)
-
-  private def readBody(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try new String(
-      Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
-    finally in.close()
+  protected def parseMarker(body: String): Option[IvfMeta] = body.trim match {
+    case MarkerRe(kind, k, na) => Some(IvfMeta(kind, k.toLong, na.toLong))
+    case _ => None
   }
 
-  // drop every cached marker under `dir` — init/gc/repair call this so a
-  // deleted-and-recreated store (or reclaimed versions) can never be
-  // served from a previous incarnation's metadata
-  private def invalidateMetaCache(dir: String): Unit =
-    metaCache.keySet.removeIf(_.startsWith(s"$dir|"))
-
-  private def readMeta(f: FileSystem, dir: String, v: Long): Option[Meta] = {
-    val cached = metaCache.get(s"$dir|$v")
-    if (cached != null) return Some(cached)
-    val out = readMetaUncached(f, dir, v)
-    out.foreach(m => metaCache.put(s"$dir|$v", m))
-    out
-  }
-
-  private def readMetaUncached(f: FileSystem, dir: String, v: Long): Option[Meta] = {
-    val p = new Path(versionPath(dir, v), Marker)
-    if (!f.exists(p)) return None
-    val m = """\{"kind":"(base|delta)","k":(\d+),"na":(\d+)\}""".r
-    readBody(f, p).trim match {
-      case m(kind, k, na) => Some(Meta(kind, k.toLong, na.toLong))
-      case _ =>
-        // present-but-unparseable is CORRUPTION OR MIGRATION, never
-        // absence: treating it as uncommitted hides the version from
-        // listVersions and turns repair() into a committed-data reaper
-        throw new IllegalStateException(
-          s"committed marker at $p is unreadable — index format migrated or marker " +
-            "corrupt; refusing to treat the version as uncommitted (repair would reap " +
-            "committed data). Restore the marker or rebuild the index at a fresh path.")
-    }
-  }
-
-  def listVersions(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    if (!f.exists(new Path(dir))) return Seq.empty
-    f.listStatus(new Path(dir)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.stripPrefix("v=").toLong }
-      .filter(v => readMeta(f, dir, v).isDefined)
-      .sorted
-  }
-
-  def currentVersion(spark: SparkSession, dir: String): Option[Long] =
-    listVersions(spark, dir).lastOption
-
-  private def readChain(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    val vs = listVersions(spark, dir)
-    require(vs.nonEmpty, s"no IVF index at $dir")
-    val lastBase = vs.filter(v => readMeta(f, dir, v).get.kind == "base").lastOption
-    vs.filter(v => lastBase.forall(v >= _))
-  }
+  protected def statsOf(v: Long, m: IvfMeta, totals: Seq[Long]): IvfIndexStats =
+    IvfIndexStats(v, m.kind, m.k, m.na, totals.head)
 
   /** The frozen centroid table (clabel, cdim, sq, cnt) — stored with the
     * chain's newest base version.
@@ -123,53 +52,23 @@ object IvfIndex {
   }
 
   /** The current (vec_id, label) assignment view. */
-  def assign(spark: SparkSession, dir: String): DataFrame =
-    readChain(spark, dir)
-      .map(v => spark.read.parquet(s"${versionPath(dir, v)}/assign"))
-      .reduce(_.unionByName(_))
+  def assign(spark: SparkSession, dir: String): DataFrame = chainRead(spark, dir, "assign")
 
   /** The number of cells the quantizer was built with (pinned at init). */
-  def storeK(spark: SparkSession, dir: String): Long = {
-    val f = fs(spark, dir)
-    readMeta(f, dir, listVersions(spark, dir).headOption.getOrElse(
-      throw new IllegalStateException(s"no IVF index at $dir"))).get.k
-  }
+  def storeK(spark: SparkSession, dir: String): Long = firstMeta(spark, dir).k
 
-  private def stage(
+  private def stageIvf(
       spark: SparkSession, dir: String, v: Long, kind: String, k: Long,
-      assign: DataFrame, centroids: Option[DataFrame]): Path = {
-    val staging = new Path(dir, s"_staging/v$v-${java.util.UUID.randomUUID()}")
-    assign.write.mode("overwrite").parquet(s"$staging/assign")
-    centroids.foreach(_.write.mode("overwrite").parquet(s"$staging/centroids"))
-    // manifest counts read BACK from the staged files (CatalogStore's rule)
-    val na = spark.read.parquet(s"$staging/assign").count()
-    val out = fs(spark, dir).create(new Path(staging, Marker), false)
-    try out.write(s"""{"kind":"$kind","k":$k,"na":$na}""".getBytes("UTF-8"))
-    finally out.close()
-    staging
-  }
+      assign: DataFrame, centroids: Option[DataFrame]): Path =
+    stage(spark, dir, v) { staging =>
+      assign.write.mode("overwrite").parquet(s"$staging/assign")
+      centroids.foreach(_.write.mode("overwrite").parquet(s"$staging/centroids"))
+      val na = spark.read.parquet(s"$staging/assign").count()
+      s"""{"kind":"$kind","k":$k,"na":$na}"""
+    }
 
-  // CAS claim + debris repair delegate to the shared [[CasProtocol]]
-  private def commit(spark: SparkSession, dir: String, staging: Path, v: Long): Unit =
-    CasProtocol.claim(
-      spark, dir, staging, new Path(versionPath(dir, v)), v, commitLock,
-      // the claim predicate must RE-READ the marker (CasProtocol's
-      // contract) — the memoized readMeta would serve a stale positive
-      // after an out-of-band store deletion at the same path
-      () => readMetaUncached(fs(spark, dir), dir, v).isDefined, "index update")
-
-  /** Quiesced-writers crash-debris cleanup — [[CasProtocol.repair]]. */
-  def repair(spark: SparkSession, dir: String): Seq[String] = {
-    invalidateMetaCache(dir)
-    CasProtocol.repair(spark, dir, v => readMetaUncached(fs(spark, dir), dir, v).isDefined)
-  }
-
-  private def stats(spark: SparkSession, dir: String, v: Long): IvfIndexStats = {
-    val f = fs(spark, dir)
-    val m = readMeta(f, dir, v).get
-    val total = readChain(spark, dir).map(cv => readMeta(f, dir, cv).get.na).sum
-    IvfIndexStats(v, m.kind, m.k, m.na, total)
-  }
+  protected def stageBase(spark: SparkSession, dir: String, v: Long, before: IvfIndexStats): Path =
+    stageIvf(spark, dir, v, "base", before.k, assign(spark, dir), Some(centroids(spark, dir)))
 
   /** Build v=1 from a quantizer: the (vec_id, label) assignment and its
     * (clabel, cdim, sq, cnt) centroid table — either the corpus's own
@@ -179,16 +78,14 @@ object IvfIndex {
     */
   def init(
       spark: SparkSession, dir: String,
-      assignment: DataFrame, centroidTable: DataFrame): IvfIndexStats = {
-    invalidateMetaCache(dir)
-    require(currentVersion(spark, dir).isEmpty, s"IVF index at $dir already initialized")
-    val a = assignment.select(col("vec_id"), col("label"))
-    val c = centroidTable.select(col("clabel"), col("cdim"), col("sq"), col("cnt"))
-    val k = c.select(col("clabel")).distinct().count()
-    require(k >= 1, "quantizer has no centroids")
-    commit(spark, dir, stage(spark, dir, 1L, "base", k, a, Some(c)), 1L)
-    stats(spark, dir, 1L)
-  }
+      assignment: DataFrame, centroidTable: DataFrame): IvfIndexStats =
+    initWith(spark, dir) {
+      val a = assignment.select(col("vec_id"), col("label"))
+      val c = centroidTable.select(col("clabel"), col("cdim"), col("sq"), col("cnt"))
+      val k = c.select(col("clabel")).distinct().count()
+      require(k >= 1, "quantizer has no centroids")
+      stageIvf(spark, dir, 1L, "base", k, a, Some(c))
+    }
 
   /** Index a batch of NEW vectors: each scores against the broadcast
     * frozen centroids with the family's integer distance
@@ -202,8 +99,7 @@ object IvfIndex {
     * `Similarity.quantizedEv`'s shape.
     */
   def append(spark: SparkSession, dir: String, batchEv: DataFrame): IvfIndexStats = {
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no IVF index at $dir — init first"))
+    val cur = head(spark, dir)
     val k = storeK(spark, dir)
     val cent = centroids(spark, dir)
     val diff = col("q") * col("cnt") - col("sq")
@@ -217,37 +113,7 @@ object IvfIndex {
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("clabel").as("label"))
     val fresh = assigned.join(assign(spark, dir), Seq("vec_id"), "left_anti")
-    // commit()'s marker-CAS arbitrates concurrent appenders (DedupIndex's rule)
-    val staging = stage(spark, dir, cur + 1, "delta", k, fresh, None)
-    val f = fs(spark, dir)
-    if (readBody(f, new Path(staging, Marker)).contains("\"na\":0")) {
-      f.delete(staging, true) // nothing new: no version
-      stats(spark, dir, cur)
-    } else {
-      commit(spark, dir, staging, cur + 1)
-      stats(spark, dir, cur + 1)
-    }
-  }
-
-  /** Fold the chain into one base (centroids copied — they are frozen),
-    * proving the assignment view unchanged before anything publishes.
-    */
-  def compact(spark: SparkSession, dir: String): IvfIndexStats = {
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no IVF index at $dir"))
-    if (readChain(spark, dir).size <= 1) return stats(spark, dir, cur)
-    val before = stats(spark, dir, cur)
-    val staging = stage(
-      spark, dir, cur + 1, "base", before.k,
-      assign(spark, dir), Some(centroids(spark, dir)))
-    val f = fs(spark, dir)
-    val body = readBody(f, new Path(staging, Marker))
-    if (!body.contains(s""""na":${before.totalAssigned}""")) {
-      f.delete(staging, true)
-      throw new IllegalStateException(
-        s"compaction would CHANGE the assignment view (expected ${before.totalAssigned}, staged $body) — aborted")
-    }
-    commit(spark, dir, staging, cur + 1)
-    stats(spark, dir, cur + 1)
+    // the commit's marker-CAS arbitrates concurrent appenders
+    publishOrDrop(spark, dir, cur, stageIvf(spark, dir, cur + 1, "delta", k, fresh, None))
   }
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Persistent per-day KLL quantile-sketch ledger — [[HllStore]]'s exact
@@ -23,220 +22,18 @@ import org.apache.spark.sql.functions._
   * with a ≥6x-margin tolerance (q255's `ledger_ok`), and the spec pins
   * union-of-days against the direct range sketch at the RANK level.
   *
-  * Storage discipline is [[HllStore]]'s verbatim: v=1 base, appends
-  * publish ONLY complete NEW days (frozen days anti-join away), reads
-  * union the newest base with later deltas, `compact` folds the chain
-  * after proving the day set unchanged, every publish claims its slot
-  * through the [[CasProtocol]] committer, and the marker carries the
-  * corpus tag provenance-checked reads enforce.
+  * Storage discipline is [[HllStore]]'s: both are instances of the
+  * shared [[DaySketchLedger]] (on the [[VersionedStore]] core), and this
+  * object supplies only the sketch.
   */
-object KllStore {
+object KllStore extends DaySketchLedger("KLL", "value") {
 
   /** The sketch accuracy parameter every ledger in the suite uses. */
   val K = 200
 
-  final case class KllStoreStats(version: Long, kind: String, newDays: Long, totalDays: Long)
+  type KllStoreStats = DayLedgerStats
 
-  private val Marker = "_COMMITTED"
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, Meta]()
-  private val commitLock = new Object
-
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def versionPath(dir: String, v: Long) = s"$dir/v=$v"
-
-  private final case class Meta(kind: String, nd: Long, corpus: String)
-
-  private def readBody(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try new String(
-      Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
-    finally in.close()
-  }
-
-  private def invalidateMetaCache(dir: String): Unit =
-    metaCache.keySet.removeIf(_.startsWith(s"$dir|"))
-
-  private def readMeta(f: FileSystem, dir: String, v: Long): Option[Meta] = {
-    val cached = metaCache.get(s"$dir|$v")
-    if (cached != null) return Some(cached)
-    val out = readMetaUncached(f, dir, v)
-    out.foreach(m => metaCache.put(s"$dir|$v", m))
-    out
-  }
-
-  private def readMetaUncached(f: FileSystem, dir: String, v: Long): Option[Meta] = {
-    val p = new Path(versionPath(dir, v), Marker)
-    if (!f.exists(p)) return None
-    parseMarker(readBody(f, p)).orElse(
-      throw new IllegalStateException(
-        s"committed marker at $p is unreadable — store format migrated or marker " +
-          "corrupt; refusing to treat the version as uncommitted (repair would reap " +
-          "committed data). Restore the marker or rebuild the store at a fresh path."))
-  }
-
-  /** ONE marker grammar for every reader (HllStore's r16-hardened rule):
-    * staged-marker checks compare parsed nd for exact equality, never a
-    * substring probe.
-    */
-  private def parseMarker(body: String): Option[Meta] = {
-    val m = """\{"kind":"(base|delta)","nd":(\d+),"corpus":"([^"]*)"\}""".r
-    body.trim match {
-      case m(kind, nd, corpus) => Some(Meta(kind, nd.toLong, corpus))
-      case _ => None
-    }
-  }
-
-  def listVersions(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    if (!f.exists(new Path(dir))) return Seq.empty
-    f.listStatus(new Path(dir)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.stripPrefix("v=").toLong }
-      .filter(v => readMeta(f, dir, v).isDefined)
-      .sorted
-  }
-
-  def currentVersion(spark: SparkSession, dir: String): Option[Long] =
-    listVersions(spark, dir).lastOption
-
-  private def readChain(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    val vs = listVersions(spark, dir)
-    require(vs.nonEmpty, s"no KLL store at $dir")
-    val lastBase = vs.filter(v => readMeta(f, dir, v).get.kind == "base").lastOption
-    vs.filter(v => lastBase.forall(v >= _))
-  }
-
-  /** The (day, sk) ledger view — one committed sketch per epoch day.
-    * `expectCorpus` is the read-time provenance check (FreqStore's
-    * family-validation discipline): a ledger built from a different
-    * corpus/SF fails loudly instead of silently joining wrong quantiles
-    * into the answer.
-    */
-  def sketches(
-      spark: SparkSession, dir: String, expectCorpus: Option[String] = None): DataFrame = {
-    val chain = readChain(spark, dir)
-    expectCorpus.foreach { want =>
-      val have = readMeta(fs(spark, dir), dir, chain.head).get.corpus
-      require(have == want,
-        s"KLL ledger at $dir was built from corpus '$have' but the query reads " +
-          s"corpus '$want' — refusing to merge sketches across corpora")
-    }
-    chain
-      .map(v => spark.read.parquet(s"${versionPath(dir, v)}/sketches"))
-      .reduce(_.unionByName(_))
-  }
-
-  /** Per-(epoch-day) KLL sketch of the attributed e2-quantized event
-    * value — the ONE definition the store build and any in-query
-    * derivation share (no drift; null values carry nothing to rank).
-    * Input must hold `ts` (timestamp) and `value` (double).
-    */
-  def daySketches(events: DataFrame): DataFrame =
-    events
-      .filter(col("value").isNotNull)
-      .groupBy(expr("unix_micros(ts) DIV 86400000000").as("day"))
-      .agg(graft.functions.GraftFunctions.kll_sketch_agg(
-        expr("CAST(CAST(floor(value * 100 + 0.5) AS BIGINT) AS DOUBLE)"), K).as("sk"))
-
-  private def stage(
-      spark: SparkSession, dir: String, v: Long, kind: String, sk: DataFrame,
-      corpus: String): Path = {
-    require(!corpus.contains("\"") && !corpus.contains("\\"),
-      s"corpus tag must be quote/backslash-free (it is embedded in the marker JSON): $corpus")
-    val staging = new Path(dir, s"_staging/v$v-${java.util.UUID.randomUUID()}")
-    sk.write.mode("overwrite").parquet(s"$staging/sketches")
-    val nd = spark.read.parquet(s"$staging/sketches").count()
-    val out = fs(spark, dir).create(new Path(staging, Marker), false)
-    try out.write(s"""{"kind":"$kind","nd":$nd,"corpus":"$corpus"}""".getBytes("UTF-8"))
-    finally out.close()
-    staging
-  }
-
-  private def stagedMeta(f: FileSystem, staging: Path): Meta =
-    parseMarker(readBody(f, new Path(staging, Marker))).getOrElse(
-      throw new IllegalStateException(s"staged marker at $staging unreadable"))
-
-  private def commit(spark: SparkSession, dir: String, staging: Path, v: Long): Unit =
-    CasProtocol.claim(
-      spark, dir, staging, new Path(versionPath(dir, v)), v, commitLock,
-      () => readMetaUncached(fs(spark, dir), dir, v).isDefined, "quantile ledger update")
-
-  /** Quiesced-writers crash-debris cleanup — [[CasProtocol.repair]]. */
-  def repair(spark: SparkSession, dir: String): Seq[String] = {
-    invalidateMetaCache(dir)
-    CasProtocol.repair(spark, dir, v => readMetaUncached(fs(spark, dir), dir, v).isDefined)
-  }
-
-  private def stats(spark: SparkSession, dir: String, v: Long): KllStoreStats = {
-    val f = fs(spark, dir)
-    val m = readMeta(f, dir, v).get
-    val total = readChain(spark, dir).map(cv => readMeta(f, dir, cv).get.nd).sum
-    KllStoreStats(v, m.kind, m.nd, total)
-  }
-
-  /** The corpus tag the ledger at `dir` was built from. */
-  def corpus(spark: SparkSession, dir: String): String = {
-    val chain = readChain(spark, dir)
-    readMeta(fs(spark, dir), dir, chain.head).get.corpus
-  }
-
-  /** Build v=1 from an events frame. Fails if already initialized. */
-  def init(
-      spark: SparkSession, dir: String, events: DataFrame, corpus: String): KllStoreStats = {
-    invalidateMetaCache(dir)
-    require(currentVersion(spark, dir).isEmpty, s"KLL store at $dir already initialized")
-    commit(spark, dir, stage(spark, dir, 1L, "base", daySketches(events), corpus), 1L)
-    stats(spark, dir, 1L)
-  }
-
-  /** Append a batch of complete NEW days: frozen days anti-join away
-    * (idempotent re-send — NOT a merge: KLL re-adding a day would double
-    * its mass); an empty remainder publishes nothing. Cross-corpus
-    * appends are refused.
-    */
-  def append(
-      spark: SparkSession, dir: String, events: DataFrame, corpus: String): KllStoreStats = {
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no KLL store at $dir — init first"))
-    val have = this.corpus(spark, dir)
-    require(have == corpus,
-      s"KLL ledger at $dir holds corpus '$have'; refusing to append batch tagged '$corpus'")
-    val fresh = daySketches(events)
-      .join(sketches(spark, dir).select(col("day")), Seq("day"), "left_anti")
-    val staging = stage(spark, dir, cur + 1, "delta", fresh, corpus)
-    val f = fs(spark, dir)
-    if (stagedMeta(f, staging).nd == 0L) {
-      f.delete(staging, true)
-      stats(spark, dir, cur)
-    } else {
-      commit(spark, dir, staging, cur + 1)
-      stats(spark, dir, cur + 1)
-    }
-  }
-
-  /** Fold the chain into one base, proving the day set unchanged before
-    * anything publishes (exact parsed-count equality).
-    */
-  def compact(spark: SparkSession, dir: String): KllStoreStats = {
-    val cur = currentVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"no KLL store at $dir"))
-    if (readChain(spark, dir).size <= 1) return stats(spark, dir, cur)
-    val before = stats(spark, dir, cur)
-    val staging =
-      stage(spark, dir, cur + 1, "base", sketches(spark, dir), corpus(spark, dir))
-    val f = fs(spark, dir)
-    val stagedDays = stagedMeta(f, staging).nd
-    if (stagedDays != before.totalDays) {
-      f.delete(staging, true)
-      throw new IllegalStateException(
-        s"compaction would CHANGE the ledger view (expected ${before.totalDays} days, " +
-          s"staged $stagedDays) — aborted")
-    }
-    commit(spark, dir, staging, cur + 1)
-    stats(spark, dir, cur + 1)
-  }
+  /** The per-day sketch of the attributed e2-quantized event value. */
+  protected def aggregate: Column = graft.functions.GraftFunctions.kll_sketch_agg(
+    expr("CAST(CAST(floor(value * 100 + 0.5) AS BIGINT) AS DOUBLE)"), K)
 }

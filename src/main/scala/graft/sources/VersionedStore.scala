@@ -1,0 +1,293 @@
+package graft.sources
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** What the versioned-store core reads off a parsed `_COMMITTED` marker. */
+private[sources] trait VersionMeta {
+  /** "base" (the start of a read chain) or "delta". */
+  def kind: String
+  /** The marker's merge-invariant manifest counts, in a fixed order: the
+    * store's totals sum them over the read chain, a delta whose counts
+    * are all zero publishes nothing, and a compaction publishes only if
+    * its staged base parses to exactly the chain's sums.
+    */
+  def counts: Seq[Long]
+  /** The batch tag a replay-idempotent append recorded, if any. */
+  def tag: Option[String] = None
+}
+
+/** The ONE version-chain implementation every LSM store shares
+  * ([[DedupIndex]], [[FreqStore]], [[IvfIndex]] and the day-sketch
+  * ledgers [[HllStore]] / [[KllStore]]). A store keeps only its marker
+  * codec (`parseMarker` plus the body its `stage` payload returns), its
+  * relations and its derive/merge rule; the mechanics live here:
+  *
+  *  - Layout: `dir/v=N` holds one version — its relations plus a
+  *    `_COMMITTED` marker whose presence IS publication (CatalogStore's
+  *    rule); marker-less `v=N` dirs are crash debris, `_staging/` is
+  *    private to writers.
+  *  - Read chain: the newest base plus every later delta; a relation's
+  *    view is the union of its chain copies, merged by the store.
+  *  - Publish: stage into `_staging`, read the manifest counts BACK from
+  *    the staged files into the marker, then claim `v=N` through the
+  *    shared [[CasProtocol]] committer under this store's own in-JVM
+  *    commit lock. A delta that adds nothing publishes no version.
+  *  - Compaction folds the chain into one base and publishes only when
+  *    the staged marker's parsed counts equal the chain's sums exactly.
+  *
+  * Marker-cache contract: committed markers are IMMUTABLE (a version is
+  * created or deleted whole, never rewritten), so successful marker reads
+  * memoize per JVM — without that every append/read re-fetches O(chain)
+  * marker files, real round-trips on an object store. The cache is
+  * invalidated only by THIS JVM's init, gc and repair: a store deleted and
+  * re-initialized by another process at the same path can serve the
+  * previous incarnation's markers for reused version numbers here (the
+  * single-writer, no-out-of-band-deletion contract; route a foreign
+  * re-init through this JVM's init/repair). The commit and repair
+  * predicates always re-read the marker uncached, so publishes are safe
+  * regardless.
+  *
+  * `noun` names the store in messages ("dedup index"); `what` names a
+  * publish in a lost race's message ("index update").
+  */
+private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, what: String) {
+
+  /** The per-version figures a store's public operations return. */
+  type Stats
+
+  /** This store's marker grammar — None when the body does not parse. */
+  protected def parseMarker(body: String): Option[M]
+
+  /** Stats of version `v` (marker `m`) given the read chain's summed counts. */
+  protected def statsOf(v: Long, m: M, totals: Seq[Long]): Stats
+
+  /** Stage version `v` as a base holding the current chain's merged view. */
+  protected def stageBase(spark: SparkSession, dir: String, v: Long, before: Stats): Path
+
+  /** Mutation guard over the committed versions `vs` (the listing the
+    * caller already fetched); a store whose chain can be read-only
+    * overrides it.
+    */
+  protected def requireWritable(spark: SparkSession, dir: String, vs: Seq[Long]): Unit = ()
+
+  private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, M]()
+  private val commitLock = new Object
+
+  protected final def fs(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  protected final def versionPath(dir: String, v: Long): String = s"$dir/v=$v"
+
+  private def readBody(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try new String(
+      Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
+    finally in.close()
+  }
+
+  private def readMetaUncached(f: FileSystem, dir: String, v: Long): Option[M] = {
+    val p = new Path(versionPath(dir, v), CasProtocol.Marker)
+    if (!f.exists(p)) return None
+    // present-but-unparseable is CORRUPTION OR MIGRATION, never absence:
+    // treating it as uncommitted hides the version from listVersions and
+    // turns repair() into a committed-data reaper
+    parseMarker(readBody(f, p)).orElse(
+      throw new IllegalStateException(
+        s"committed marker at $p is unreadable — $noun format migrated or marker " +
+          "corrupt; refusing to treat the version as uncommitted (repair would reap " +
+          s"committed data). Restore the marker or rebuild the $noun at a fresh path."))
+  }
+
+  private def readMeta(f: FileSystem, dir: String, v: Long): Option[M] = {
+    val cached = metaCache.get(s"$dir|$v")
+    if (cached != null) return Some(cached)
+    val out = readMetaUncached(f, dir, v)
+    out.foreach(m => metaCache.put(s"$dir|$v", m))
+    out
+  }
+
+  private def committed(spark: SparkSession, dir: String)(v: Long): Boolean =
+    readMetaUncached(fs(spark, dir), dir, v).isDefined
+
+  // drop every cached marker under `dir`, so a deleted-and-recreated store
+  // is never served from a previous incarnation's metadata
+  private def invalidate(dir: String): Unit =
+    metaCache.keySet.removeIf(_.startsWith(s"$dir|"))
+
+  /** The committed marker of `v` (memoized). */
+  protected final def meta(spark: SparkSession, dir: String, v: Long): M =
+    readMeta(fs(spark, dir), dir, v).get
+
+  /** Committed versions ascending — marker presence IS publication. */
+  def listVersions(spark: SparkSession, dir: String): Seq[Long] = {
+    val f = fs(spark, dir)
+    if (!f.exists(new Path(dir))) return Seq.empty
+    f.listStatus(new Path(dir)).toSeq
+      .filter(_.isDirectory)
+      .map(_.getPath.getName)
+      .collect { case s if s.startsWith("v=") => s.stripPrefix("v=").toLong }
+      .filter(v => readMeta(f, dir, v).isDefined)
+      .sorted
+  }
+
+  def currentVersion(spark: SparkSession, dir: String): Option[Long] =
+    listVersions(spark, dir).lastOption
+
+  /** The newest version, for a mutation: the store must exist and pass
+    * [[requireWritable]].
+    */
+  protected final def head(spark: SparkSession, dir: String): Long = {
+    val vs = listVersions(spark, dir)
+    val cur = vs.lastOption.getOrElse(
+      throw new IllegalStateException(s"no $noun at $dir — init first"))
+    requireWritable(spark, dir, vs)
+    cur
+  }
+
+  /** The v=1-era marker holding what init pinned (bands, family, k). */
+  protected final def firstMeta(spark: SparkSession, dir: String): M =
+    meta(spark, dir, listVersions(spark, dir).headOption.getOrElse(
+      throw new IllegalStateException(s"no $noun at $dir")))
+
+  /** The version chain to read: the newest base and every later delta. */
+  protected final def readChain(spark: SparkSession, dir: String): Seq[Long] = {
+    val vs = listVersions(spark, dir)
+    require(vs.nonEmpty, s"no $noun at $dir")
+    val lastBase = vs.filter(meta(spark, dir, _).kind == "base").lastOption
+    vs.filter(v => lastBase.forall(v >= _))
+  }
+
+  /** Relation `rel`'s copies over the read chain, unioned (not merged). */
+  protected final def chainRead(spark: SparkSession, dir: String, rel: String): DataFrame =
+    readChain(spark, dir)
+      .map(v => spark.read.parquet(s"${versionPath(dir, v)}/$rel"))
+      .reduce(_.unionByName(_))
+
+  private def totals(spark: SparkSession, dir: String): Seq[Long] =
+    readChain(spark, dir).map(meta(spark, dir, _).counts).transpose.map(_.sum)
+
+  protected final def stats(spark: SparkSession, dir: String, v: Long): Stats =
+    statsOf(v, meta(spark, dir, v), totals(spark, dir))
+
+  /** Stage version `v`: `payload` writes the relations under the staging
+    * dir it is given, reads their counts back from the staged files, and
+    * returns the marker body, which lands last.
+    */
+  protected final def stage(spark: SparkSession, dir: String, v: Long)(
+      payload: String => String): Path = {
+    val staging = new Path(dir, s"_staging/v$v-${java.util.UUID.randomUUID()}")
+    val body = payload(staging.toString)
+    val out = fs(spark, dir).create(new Path(staging, CasProtocol.Marker), false)
+    try out.write(body.getBytes("UTF-8"))
+    finally out.close()
+    staging
+  }
+
+  private def stagedMeta(spark: SparkSession, dir: String, staging: Path): M =
+    parseMarker(readBody(fs(spark, dir), new Path(staging, CasProtocol.Marker))).getOrElse(
+      throw new IllegalStateException(s"staged marker at $staging unreadable"))
+
+  private def commit(spark: SparkSession, dir: String, staging: Path, v: Long): Unit =
+    CasProtocol.claim(
+      spark, dir, staging, new Path(versionPath(dir, v)), v, commitLock,
+      () => committed(spark, dir)(v), what)
+
+  /** Build v=1 from `staged` (evaluated after the emptiness check). */
+  protected final def initWith(spark: SparkSession, dir: String)(staged: => Path): Stats = {
+    invalidate(dir)
+    require(currentVersion(spark, dir).isEmpty, s"$noun at $dir already initialized")
+    commit(spark, dir, staged, 1L)
+    stats(spark, dir, 1L)
+  }
+
+  /** Publish a staged delta as `cur + 1` — or, when every staged count is
+    * zero (nothing new), drop it and publish no version.
+    */
+  protected final def publishOrDrop(
+      spark: SparkSession, dir: String, cur: Long, staging: Path): Stats =
+    if (stagedMeta(spark, dir, staging).counts.forall(_ == 0L)) {
+      fs(spark, dir).delete(staging, true)
+      stats(spark, dir, cur)
+    } else {
+      commit(spark, dir, staging, cur + 1)
+      stats(spark, dir, cur + 1)
+    }
+
+  /** Quiesced-writers crash-debris cleanup — [[CasProtocol.repair]]. */
+  def repair(spark: SparkSession, dir: String): Seq[String] = {
+    invalidate(dir)
+    CasProtocol.repair(spark, dir, committed(spark, dir))
+  }
+
+  /** Fold the base+delta chain into a single base version, keeping read
+    * fan-in bounded as deltas accumulate. The view is unchanged: the
+    * staged marker's parsed counts must equal the chain's sums, or
+    * nothing publishes. Earlier versions stay readable history.
+    */
+  def compact(spark: SparkSession, dir: String): Stats = {
+    val cur = head(spark, dir)
+    if (readChain(spark, dir).size <= 1) return stats(spark, dir, cur) // already one base
+    val want = totals(spark, dir)
+    val before = statsOf(cur, meta(spark, dir, cur), want)
+    val staging = stageBase(spark, dir, cur + 1, before)
+    val got = stagedMeta(spark, dir, staging).counts
+    if (got != want) {
+      fs(spark, dir).delete(staging, true)
+      throw new IllegalStateException(
+        s"compaction would CHANGE the $noun view (chain counts ${want.mkString(",")}, " +
+          s"staged ${got.mkString(",")}) — aborted")
+    }
+    commit(spark, dir, staging, cur + 1)
+    stats(spark, dir, cur + 1)
+  }
+
+  /** Maintenance policy: fold the chain once it exceeds `maxChain`
+    * versions. Content-preserving by compact's invariant; a replayed
+    * compact of an already-short chain is a no-op.
+    */
+  protected final def compactIfLonger(spark: SparkSession, dir: String, maxChain: Int): Stats = {
+    require(maxChain >= 2, s"maxChain must be >= 2: $maxChain")
+    val cur = head(spark, dir)
+    if (readChain(spark, dir).size > maxChain) compact(spark, dir)
+    else stats(spark, dir, cur)
+  }
+
+  /** Drop published versions no longer in the read chain (history
+    * strictly before the newest base), keeping the most recent
+    * `keepHistory`; returns the dropped versions.
+    */
+  protected final def gcHistory(spark: SparkSession, dir: String, keepHistory: Int): Seq[Long] = {
+    require(keepHistory >= 0, s"keepHistory must be >= 0: $keepHistory")
+    val f = fs(spark, dir)
+    val chain = readChain(spark, dir).toSet
+    val doomed = listVersions(spark, dir).filterNot(chain).dropRight(keepHistory)
+    doomed.foreach(v => f.delete(new Path(versionPath(dir, v)), true))
+    doomed.foreach(v => metaCache.remove(s"$dir|$v"))
+    doomed
+  }
+
+  // the tag lands verbatim in the marker JSON: restrict it to a
+  // quote/backslash-free charset or the committed marker would be
+  // unparseable — the version would vanish from listVersions and
+  // repair() would reap committed data as debris
+  private[graft] final def requireValidTag(tg: String): Unit =
+    require(tg.nonEmpty && tg.length <= 128 && tg.forall(c =>
+      (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
+        (c >= '0' && c <= '9') || "._:-".contains(c)),
+      s"append tag must be 1..128 chars of [A-Za-z0-9._:-]: '$tg'")
+
+  /** The committed version carrying batch tag `tg`, if any (a marker scan;
+    * markers are memoized).
+    */
+  protected final def taggedVersion(spark: SparkSession, dir: String, tg: String): Option[Long] =
+    listVersions(spark, dir).find(meta(spark, dir, _).tag.contains(tg))
+
+  /** The batch-replay idempotence probe: whether a committed version
+    * already carries the (validated) tag `tg`.
+    */
+  protected final def tagApplied(spark: SparkSession, dir: String, tg: String): Boolean = {
+    requireValidTag(tg)
+    taggedVersion(spark, dir, tg).isDefined
+  }
+}

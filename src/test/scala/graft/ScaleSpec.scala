@@ -525,4 +525,14 @@ class ScaleSpec extends AnyFunSuite {
     // generator contract: 8..32 words per doc
     assert(toks.getAs[Long]("total") >= 8 * n && toks.getAs[Long]("total") <= 32 * n)
   }
+
+  test("ScaleProbe replicas get disjoint key ranges; a base key at the offset fails loudly") {
+    import spark.implicits._
+    val ok = ScaleProbe.replicate(Seq(1L, ScaleProbe.KeyOffset - 1).toDF("k"), "k", 2)
+    assert(ok.select(col("k")).as[Long].collect().sorted.toSeq ==
+      Seq(1L, ScaleProbe.KeyOffset - 1, ScaleProbe.KeyOffset + 1, 2 * ScaleProbe.KeyOffset - 1))
+    val e = intercept[IllegalArgumentException](
+      ScaleProbe.replicate(Seq(7L, ScaleProbe.KeyOffset).toDF("k"), "k", 2))
+    assert(e.getMessage.contains("overlap"), e.getMessage)
+  }
 }

@@ -1,0 +1,168 @@
+package graft
+
+import graft.sources.{DedupIndex, FreqStore, HllStore, IvfIndex, KllStore}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The contract every versioned LSM store shares, checked table-driven
+  * over all five (DedupIndex, FreqStore, IvfIndex, HllStore, KllStore):
+  * unreadable markers fail loudly and survive repair, marker-less debris
+  * blocks a publish until repair, a deleted-and-re-initialized store
+  * serves its new markers, and each store's v=1 marker bytes are pinned.
+  * Plus the compaction guard: a staged base whose count merely STARTS
+  * with the chain's sum (2 vs 20) must not publish.
+  */
+class StoreContractSpec extends AnyFunSuite {
+  import SparkTestSession._
+  import spark.implicits._
+
+  private def tmp(): String = Files.createTempDirectory("graft_contract").toString
+
+  private val dayUs = 86400L * 1000000L
+
+  private def docs(ids: Long*): DataFrame =
+    ids.map(i => (i, Seq.tabulate(4)(j => s"w${i}x$j").mkString(" "))).toDF("doc_id", "text")
+
+  private def events(days: Long*): DataFrame =
+    days.map(d => (d * dayUs + 1L, d + 1L, d + 0.5)).toDF("t", "user_id", "value")
+      .select(timestamp_micros(col("t")).as("ts"), col("user_id"), col("value"))
+
+  private val centroids: DataFrame =
+    Seq((0, 0, 10L, 1L), (1, 0, 20L, 1L)).toDF("clabel", "cdim", "sq", "cnt")
+
+  private def assignment(ids: Long*): DataFrame =
+    ids.map(i => (i, (i % 2).toInt)).toDF("vec_id", "label")
+
+  private def vectors(ids: Long*): DataFrame =
+    ids.map(i => (i, 0, 10L + i)).toDF("vec_id", "dim", "q")
+
+  /** One store under the contract. `init(dir, n)` builds v=1 from n units
+    * of input and returns the chain total its stats report; `append`
+    * adds one unit no earlier input holds; `rel` is a payload relation.
+    */
+  private final case class Store(
+      name: String, rel: String, marker: String,
+      init: (String, Int) => Long, append: String => Long,
+      list: String => Seq[Long], repair: String => Seq[String])
+
+  private val stores = Seq(
+    Store("DedupIndex", "hashes",
+      """{"kind":"base","bands":4,"wk":2,"nh":2,"ns":8,"nw":6}""",
+      (d, n) => DedupIndex.init(spark, d, docs(1L to n.toLong: _*), bands = 4, windowK = 2)
+        .totalHashes,
+      d => DedupIndex.append(spark, d, docs(100L)).totalHashes,
+      DedupIndex.listVersions(spark, _), DedupIndex.repair(spark, _)),
+    Store("FreqStore", "freq",
+      """{"kind":"base","family":"unigram","nt":8,"nv":8,"nd":2}""",
+      (d, n) => FreqStore.init(spark, d, docs(1L to n.toLong: _*)).totalDocs,
+      d => FreqStore.append(spark, d, docs(100L)).totalDocs,
+      FreqStore.listVersions(spark, _), FreqStore.repair(spark, _)),
+    Store("IvfIndex", "assign",
+      """{"kind":"base","k":2,"na":2}""",
+      (d, n) => IvfIndex.init(spark, d, assignment(1L to n.toLong: _*), centroids)
+        .totalAssigned,
+      d => IvfIndex.append(spark, d, vectors(100L)).totalAssigned,
+      IvfIndex.listVersions(spark, _), IvfIndex.repair(spark, _)),
+    Store("HllStore", "sketches",
+      """{"kind":"base","nd":2,"corpus":"contract"}""",
+      (d, n) => HllStore.init(spark, d, events(0L until n.toLong: _*), "contract").totalDays,
+      d => HllStore.append(spark, d, events(100L), "contract").totalDays,
+      HllStore.listVersions(spark, _), HllStore.repair(spark, _)),
+    Store("KllStore", "sketches",
+      """{"kind":"base","nd":2,"corpus":"contract"}""",
+      (d, n) => KllStore.init(spark, d, events(0L until n.toLong: _*), "contract").totalDays,
+      d => KllStore.append(spark, d, events(100L), "contract").totalDays,
+      KllStore.listVersions(spark, _), KllStore.repair(spark, _)))
+
+  private def markerBody(dir: String, v: Long): String =
+    new String(Files.readAllBytes(Paths.get(s"$dir/v=$v/_COMMITTED")), "UTF-8")
+
+  private def deleteTree(dir: String): Unit =
+    Files.walk(Paths.get(dir)).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+
+  for (s <- stores) {
+    test(s"${s.name}: v=1 marker bytes are pinned") {
+      val dir = tmp()
+      s.init(dir, 2)
+      assert(markerBody(dir, 1L) == s.marker)
+    }
+
+    test(s"${s.name}: an unparseable committed marker fails loudly and repair leaves it") {
+      val dir = tmp()
+      s.init(dir, 2)
+      Files.write(Paths.get(s"$dir/v=1/_COMMITTED"), """{"not":"a marker"}""".getBytes("UTF-8"))
+      // the rewrite bypasses Hadoop's LocalFileSystem: drop its CRC sidecar
+      Files.deleteIfExists(Paths.get(s"$dir/v=1/._COMMITTED.crc"))
+      val e = intercept[IllegalStateException](s.repair(dir))
+      assert(e.getMessage.contains("unreadable"), s"unexpected: ${e.getMessage}")
+      val e2 = intercept[IllegalStateException](s.list(dir))
+      assert(e2.getMessage.contains("unreadable"), s"unexpected: ${e2.getMessage}")
+      assert(Files.exists(Paths.get(s"$dir/v=1/${s.rel}")), "repair reaped committed data")
+      assert(markerBody(dir, 1L) == """{"not":"a marker"}""")
+    }
+
+    test(s"${s.name}: marker-less debris blocks an append until repair reaps it") {
+      val dir = tmp()
+      val before = s.init(dir, 2)
+      Seq(1L).toDF("x").write.parquet(s"$dir/v=2/${s.rel}")
+      val e = intercept[IllegalStateException](s.append(dir))
+      assert(e.getMessage.contains("repair"), s"unexpected: ${e.getMessage}")
+      assert(s.list(dir) == Seq(1L), "a blocked claim published something")
+      assert(s.repair(dir).exists(_.endsWith("v=2")), "repair left the debris")
+      assert(s.append(dir) == before + 1)
+      assert(s.list(dir) == Seq(1L, 2L))
+    }
+
+    test(s"${s.name}: delete and re-init in one JVM serves the new markers, not cached ones") {
+      val dir = tmp()
+      val small = s.init(dir, 2)
+      assert(s.append(dir) == small + 1)
+      deleteTree(dir)
+      val large = s.init(dir, 3)
+      assert(large > small, s"re-init reported $large, the old incarnation had $small")
+      assert(s.list(dir) == Seq(1L))
+      assert(s.append(dir) == large + 1)
+    }
+  }
+
+  /** Copy one committed one-row part file of `relDir` next to itself until
+    * `rows()` lands in [20, 29]: a chain sum of 2 against a staged 2x.
+    */
+  private def inflateTo2x(relDir: String, rows: () => Long): Unit = {
+    val one = Files.list(Paths.get(relDir)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => p.getFileName.toString.startsWith("part-"))
+      .find(p => spark.read.parquet(p.toString).count() == 1L)
+      .getOrElse(fail(s"no one-row part file in $relDir"))
+    var i = 0
+    while (rows() < 20L) {
+      Files.copy(one, Paths.get(relDir, s"part-copy$i.parquet"))
+      i += 1
+    }
+    assert(rows() <= 29L)
+  }
+
+  test("IvfIndex.compact refuses a staged count that only starts with the chain's sum") {
+    val dir = tmp()
+    IvfIndex.init(spark, dir, assignment(1L), centroids)
+    assert(IvfIndex.append(spark, dir, vectors(2L)).totalAssigned == 2L)
+    inflateTo2x(s"$dir/v=1/assign", () => IvfIndex.assign(spark, dir).count())
+    val e = intercept[IllegalStateException](IvfIndex.compact(spark, dir))
+    assert(e.getMessage.contains("CHANGE"), s"unexpected: ${e.getMessage}")
+    assert(IvfIndex.listVersions(spark, dir) == Seq(1L, 2L), "a corrupt base was published")
+  }
+
+  test("DedupIndex.compact refuses a staged count that only starts with the chain's sum") {
+    val dir = tmp()
+    val pair = Seq((1L, "a b"), (2L, "c d")).toDF("doc_id", "text")
+    DedupIndex.init(spark, dir, pair.filter(col("doc_id") === 1L), bands = 4, windowK = 2)
+    val st = DedupIndex.append(spark, dir, pair.filter(col("doc_id") === 2L))
+    assert(st.totalWindows == 2L)
+    inflateTo2x(s"$dir/v=1/windows", () => DedupIndex.windows(spark, dir).count())
+    val e = intercept[IllegalStateException](DedupIndex.compact(spark, dir))
+    assert(e.getMessage.contains("CHANGE"), s"unexpected: ${e.getMessage}")
+    assert(DedupIndex.listVersions(spark, dir) == Seq(1L, 2L), "a corrupt base was published")
+  }
+}
