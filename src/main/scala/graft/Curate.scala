@@ -94,10 +94,7 @@ object Curate {
     val markerPath = new Path(outDir, Marker)
     if (f.exists(markerPath)) {
       val in = f.open(markerPath)
-      val prev =
-        try new String(
-          Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
-        finally in.close()
+      val prev = try new String(in.readAllBytes(), "UTF-8") finally in.close()
       require(prev == runTag,
         s"$outDir already holds a completed curation run '$prev' — a curated corpus is " +
           s"immutable; re-curate into a fresh dir (got tag '$runTag')")

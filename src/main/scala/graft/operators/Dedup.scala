@@ -945,8 +945,6 @@ object Dedup extends QueryModule {
         }
       labels = nextCp
       iter += 1
-      if (sys.env.contains("GRAFT_DEBUG"))
-        System.err.println(s"[q62] round $iter done at ${System.nanoTime() / 1e9}")
     }
     labels.select(col("u").as("doc_id"), col("comp").as("component_id"))
   }

@@ -621,16 +621,25 @@ object Extras extends QueryModule {
       "o_orderpriority" -> "o_orderpriority",
       "o_orderdate" -> "date_format(o_orderdate, 'yyyy-MM-dd')",
       "o_totalprice" -> "CAST(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS STRING)")
-    val stacked = t.orders.select(explode(map(
-      cols.flatMap { case (n, e) => Seq(lit(n), expr(e)) }: _*)).as(Seq("column", "value")))
+    columnProfile(t.orders.select(explode(map(
+      cols.flatMap { case (n, e) => Seq(lit(n), expr(e)) }: _*)).as(Seq("column", "value"))))
+  }
+
+  /** q287's per-column fold over stacked (column, value) pairs.
+    *
+    * r18: the modal pick rides the SAME per-column aggregate as the
+    * summary — min(struct(-c, value)) over the non-null values is exactly
+    * the old row_number-over-(c DESC, value ASC) = 1 winner (struct
+    * order: largest count, then smallest value) ONLY when the column has
+    * no nulls: the window ranked a null value group too (nulls first),
+    * the fold never does. q287's six columns are non-null by
+    * construction; a column holding nulls fails the query loudly instead
+    * of silently profiling a different modal value. The fold drops the
+    * window's exchange+sort and the 6-row join — one (column, value)
+    * rollup, one per-column fold, nothing else.
+    */
+  private[graft] def columnProfile(stacked: DataFrame): DataFrame = {
     val vals = stacked.groupBy(col("column"), col("value")).agg(count(lit(1)).as("c"))
-    // r18: the modal pick rides the SAME per-column aggregate as the
-    // summary — min(struct(-c, value)) is exactly the old
-    // row_number-over-(c DESC, value ASC) = 1 winner (struct order:
-    // largest count, then smallest value; these six columns are
-    // non-null by construction, so no null-ordering edge exists), which
-    // drops the window's exchange+sort and the 6-row join — one
-    // (column, value) rollup, one per-column fold, nothing else.
     val summary = vals
       .withColumn("t_e6", expr(
         "CASE WHEN value IS NULL THEN 0L " +
@@ -643,7 +652,10 @@ object Extras extends QueryModule {
         min(when(col("value").isNotNull,
           struct((-col("c")).as("neg_c"), col("value").as("value")))).as("top"))
     summary
-      .withColumn("top_value", col("top.value"))
+      .withColumn("top_value", when(col("n_null") > 0, raise_error(concat(
+        lit("q287 modal fold: column '"), col("column"),
+        lit("' holds nulls; the fold is exact only over non-null columns"))))
+        .otherwise(col("top.value")))
       .withColumn("top_c", -col("top.neg_c"))
       .drop("top")
       .withColumn("nn", col("n") - col("n_null"))

@@ -86,9 +86,8 @@ private[sources] abstract class DaySketchLedger(sketch: String, input: String)
       corpus: String): Path = {
     require(!corpus.contains("\"") && !corpus.contains("\\"),
       s"corpus tag must be quote/backslash-free (it is embedded in the marker JSON): $corpus")
-    stage(spark, dir, v) { staging =>
-      sk.write.mode("overwrite").parquet(s"$staging/sketches")
-      val nd = spark.read.parquet(s"$staging/sketches").count()
+    stage(spark, dir, v) { st =>
+      val nd = st.put("sketches", sk).count()
       s"""{"kind":"$kind","nd":$nd,"corpus":"$corpus"}"""
     }
   }

@@ -91,13 +91,10 @@ object DedupIndex extends VersionedStore[DedupMeta]("dedup index", "index update
       spark: SparkSession, dir: String, v: Long, kind: String, bands: Int, wk: Int,
       hashes: DataFrame, sigs: DataFrame, windows: DataFrame,
       tag: Option[String] = None): Path =
-    stage(spark, dir, v) { staging =>
-      hashes.write.mode("overwrite").parquet(s"$staging/hashes")
-      sigs.write.mode("overwrite").parquet(s"$staging/sigs")
-      windows.write.mode("overwrite").parquet(s"$staging/windows")
-      val nh = spark.read.parquet(s"$staging/hashes").count()
-      val ns = spark.read.parquet(s"$staging/sigs").count()
-      val nw = spark.read.parquet(s"$staging/windows").count()
+    stage(spark, dir, v) { st =>
+      val nh = st.put("hashes", hashes).count()
+      val ns = st.put("sigs", sigs).count()
+      val nw = st.put("windows", windows).count()
       val tagField = tag.map(t => s""","tag":"$t"""").getOrElse("")
       s"""{"kind":"$kind","bands":$bands,"wk":$wk,"nh":$nh,"ns":$ns,"nw":$nw$tagField}"""
     }

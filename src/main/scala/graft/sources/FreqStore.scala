@@ -271,9 +271,8 @@ object FreqStore extends VersionedStore[FreqMeta]("count store", "count update")
   private def stageFreq(
       spark: SparkSession, dir: String, v: Long, kind: String, fam: Family,
       freq: DataFrame, nd: Long, tag: Option[String] = None): Path =
-    stage(spark, dir, v) { staging =>
-      freq.write.mode("overwrite").parquet(s"$staging/freq")
-      val row = spark.read.parquet(s"$staging/freq").agg(
+    stage(spark, dir, v) { st =>
+      val row = st.put("freq", freq).agg(
         coalesce(sum(col("n")), lit(0L)).as("nt"), count(lit(1)).as("nv")).head()
       val tagField = tag.map(t => s""","tag":"$t"""").getOrElse("")
       s"""{"kind":"$kind","family":"${fam.name}","nt":${row.getLong(0)},""" +
@@ -373,7 +372,7 @@ object FreqStore extends VersionedStore[FreqMeta]("count store", "count update")
     taggedVersion(spark, windocDir, tag) match {
       case None => stats(spark, dir, cur)
       case Some(srcV) =>
-        val delta = docFilter(spark.read.parquet(s"${versionPath(windocDir, srcV)}/freq"))
+        val delta = docFilter(relation(spark, windocDir, srcV, "freq"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val nd = delta.agg(countDistinct(col("doc_id"))).head().getLong(0)

@@ -46,10 +46,8 @@ object IvfIndex extends VersionedStore[IvfMeta]("IVF index", "index update") {
   /** The frozen centroid table (clabel, cdim, sq, cnt) — stored with the
     * chain's newest base version.
     */
-  def centroids(spark: SparkSession, dir: String): DataFrame = {
-    val v = readChain(spark, dir).head
-    spark.read.parquet(s"${versionPath(dir, v)}/centroids")
-  }
+  def centroids(spark: SparkSession, dir: String): DataFrame =
+    relation(spark, dir, readChain(spark, dir).head, "centroids")
 
   /** The current (vec_id, label) assignment view. */
   def assign(spark: SparkSession, dir: String): DataFrame = chainRead(spark, dir, "assign")
@@ -60,10 +58,9 @@ object IvfIndex extends VersionedStore[IvfMeta]("IVF index", "index update") {
   private def stageIvf(
       spark: SparkSession, dir: String, v: Long, kind: String, k: Long,
       assign: DataFrame, centroids: Option[DataFrame]): Path =
-    stage(spark, dir, v) { staging =>
-      assign.write.mode("overwrite").parquet(s"$staging/assign")
-      centroids.foreach(_.write.mode("overwrite").parquet(s"$staging/centroids"))
-      val na = spark.read.parquet(s"$staging/assign").count()
+    stage(spark, dir, v) { st =>
+      val na = st.put("assign", assign).count()
+      centroids.foreach(st.put("centroids", _))
       s"""{"kind":"$kind","k":$k,"na":$na}"""
     }
 

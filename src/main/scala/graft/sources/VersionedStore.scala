@@ -1,7 +1,11 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** What the versioned-store core reads off a parsed `_COMMITTED` marker. */
 private[sources] trait VersionMeta {
@@ -26,11 +30,21 @@ private[sources] trait VersionMeta {
   *  - Layout: `dir/v=N` holds one version — its relations plus a
   *    `_COMMITTED` marker whose presence IS publication (CatalogStore's
   *    rule); marker-less `v=N` dirs are crash debris, `_staging/` is
-  *    private to writers.
+  *    private to writers. The marker is the store's own JSON body with
+  *    one last field the core owns, `"schema":{"<rel>":<StructType
+  *    json>,…}`: each relation's read schema (the written schema with
+  *    every field nullable, as parquet reads it back). Every relation
+  *    read declares it, so no read runs a footer-reading inference job —
+  *    the schema lives in the commit, as in Delta's log. The core splits
+  *    the field off before the store's grammar parses the rest. A marker
+  *    written before the field existed still reads: its relations
+  *    resolve through [[graft.Tables.parquetSchema]] (one inference per
+  *    file identity).
   *  - Read chain: the newest base plus every later delta; a relation's
   *    view is the union of its chain copies, merged by the store.
-  *  - Publish: stage into `_staging`, read the manifest counts BACK from
-  *    the staged files into the marker, then claim `v=N` through the
+  *  - Publish: stage into `_staging` through [[Staging.put]], read the
+  *    manifest counts BACK from the staged files into the marker (under
+  *    the recorded schemas), then claim `v=N` through the
   *    shared [[CasProtocol]] committer under this store's own in-JVM
   *    commit lock. A delta that adds nothing publishes no version.
   *  - Compaction folds the chain into one base and publishes only when
@@ -71,7 +85,12 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
     */
   protected def requireWritable(spark: SparkSession, dir: String, vs: Seq[Long]): Unit = ()
 
-  private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, M]()
+  /** A parsed marker: the store's body and each relation's declared read
+    * schema (None for a marker written before schemas were carried).
+    */
+  private final class Committed(val meta: M, val schemas: Option[Map[String, StructType]])
+
+  private val metaCache = new java.util.concurrent.ConcurrentHashMap[String, Committed]()
   private val commitLock = new Object
 
   protected final def fs(spark: SparkSession, dir: String): FileSystem =
@@ -81,25 +100,47 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
 
   private def readBody(f: FileSystem, p: Path): String = {
     val in = f.open(p)
-    try new String(
-      Iterator.continually(in.read()).takeWhile(_ != -1).map(_.toByte).toArray, "UTF-8")
+    try new String(in.readAllBytes(), "UTF-8")
     finally in.close()
   }
 
-  private def readMetaUncached(f: FileSystem, dir: String, v: Long): Option[M] = {
+  private val SchemaField = ""","schema":{"""
+  private val Json = new ObjectMapper()
+
+  // the schema field is the body's last; the store's own fields never
+  // hold `,"schema":{` (tags and corpus names are quote-free), so its
+  // first occurrence is the split point
+  private def parse(body: String): Option[Committed] = {
+    val b = body.trim
+    b.indexOf(SchemaField) match {
+      case -1 => parseMarker(b).map(new Committed(_, None))
+      case i if b.endsWith("}") =>
+        for {
+          m <- parseMarker(b.substring(0, i) + "}")
+          s <- scala.util.Try(
+            Json.readTree(b.substring(i + SchemaField.length - 1, b.length - 1))
+              .properties().asScala
+              .map(e => e.getKey -> DataType.fromJson(e.getValue.toString).asInstanceOf[StructType])
+              .toMap).toOption
+        } yield new Committed(m, Some(s))
+      case _ => None
+    }
+  }
+
+  private def readMetaUncached(f: FileSystem, dir: String, v: Long): Option[Committed] = {
     val p = new Path(versionPath(dir, v), CasProtocol.Marker)
     if (!f.exists(p)) return None
     // present-but-unparseable is CORRUPTION OR MIGRATION, never absence:
     // treating it as uncommitted hides the version from listVersions and
     // turns repair() into a committed-data reaper
-    parseMarker(readBody(f, p)).orElse(
+    parse(readBody(f, p)).orElse(
       throw new IllegalStateException(
         s"committed marker at $p is unreadable — $noun format migrated or marker " +
           "corrupt; refusing to treat the version as uncommitted (repair would reap " +
           s"committed data). Restore the marker or rebuild the $noun at a fresh path."))
   }
 
-  private def readMeta(f: FileSystem, dir: String, v: Long): Option[M] = {
+  private def readMeta(f: FileSystem, dir: String, v: Long): Option[Committed] = {
     val cached = metaCache.get(s"$dir|$v")
     if (cached != null) return Some(cached)
     val out = readMetaUncached(f, dir, v)
@@ -117,7 +158,7 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
 
   /** The committed marker of `v` (memoized). */
   protected final def meta(spark: SparkSession, dir: String, v: Long): M =
-    readMeta(fs(spark, dir), dir, v).get
+    readMeta(fs(spark, dir), dir, v).get.meta
 
   /** Committed versions ascending — marker presence IS publication. */
   def listVersions(spark: SparkSession, dir: String): Seq[Long] = {
@@ -158,11 +199,24 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
     vs.filter(v => lastBase.forall(v >= _))
   }
 
+  /** Relation `rel` of committed version `v`, read under the schema its
+    * marker declares; a pre-schema marker's relation resolves its schema
+    * through [[graft.Tables.parquetSchema]].
+    */
+  protected final def relation(
+      spark: SparkSession, dir: String, v: Long, rel: String): DataFrame = {
+    val path = s"${versionPath(dir, v)}/$rel"
+    val schema = readMeta(fs(spark, dir), dir, v).get.schemas match {
+      case Some(s) => s.getOrElse(rel, throw new IllegalStateException(
+        s"$noun version $v at $dir holds no relation '$rel'"))
+      case None => graft.Tables.parquetSchema(spark, path)
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
   /** Relation `rel`'s copies over the read chain, unioned (not merged). */
   protected final def chainRead(spark: SparkSession, dir: String, rel: String): DataFrame =
-    readChain(spark, dir)
-      .map(v => spark.read.parquet(s"${versionPath(dir, v)}/$rel"))
-      .reduce(_.unionByName(_))
+    readChain(spark, dir).map(relation(spark, dir, _, rel)).reduce(_.unionByName(_))
 
   private def totals(spark: SparkSession, dir: String): Seq[Long] =
     readChain(spark, dir).map(meta(spark, dir, _).counts).transpose.map(_.sum)
@@ -170,22 +224,44 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
   protected final def stats(spark: SparkSession, dir: String, v: Long): Stats =
     statsOf(v, meta(spark, dir, v), totals(spark, dir))
 
-  /** Stage version `v`: `payload` writes the relations under the staging
-    * dir it is given, reads their counts back from the staged files, and
-    * returns the marker body, which lands last.
+  /** The writer a [[stage]] payload publishes its relations through. */
+  protected final class Staging private[VersionedStore] (spark: SparkSession, dir: String) {
+    private[VersionedStore] val schemas = mutable.LinkedHashMap.empty[String, StructType]
+
+    /** Write `df` as relation `rel`, record its read schema for the
+      * marker, and return the staged relation read back under it.
+      */
+    def put(rel: String, df: DataFrame): DataFrame = {
+      val path = s"$dir/$rel"
+      df.write.mode("overwrite").parquet(path)
+      // file reads are nullable whatever the writer declared
+      val schema = StructType(df.schema.fields.map(_.copy(nullable = true)))
+      schemas(rel) = schema
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** Stage version `v`: `payload` puts the relations through the
+    * [[Staging]] writer it is given, reads their counts back from the
+    * staged relations `put` returns, and returns the store's marker body.
+    * The core appends the recorded schemas as the body's last field and
+    * writes the marker last.
     */
   protected final def stage(spark: SparkSession, dir: String, v: Long)(
-      payload: String => String): Path = {
+      payload: Staging => String): Path = {
     val staging = new Path(dir, s"_staging/v$v-${java.util.UUID.randomUUID()}")
-    val body = payload(staging.toString)
+    val writer = new Staging(spark, staging.toString)
+    val body = payload(writer).trim
+    require(body.endsWith("}"), s"$noun marker body is not a JSON object: $body")
+    val schemas = writer.schemas.map { case (rel, s) => s""""$rel":${s.json}""" }.mkString(",")
     val out = fs(spark, dir).create(new Path(staging, CasProtocol.Marker), false)
-    try out.write(body.getBytes("UTF-8"))
+    try out.write((body.dropRight(1) + SchemaField + schemas + "}}").getBytes("UTF-8"))
     finally out.close()
     staging
   }
 
   private def stagedMeta(spark: SparkSession, dir: String, staging: Path): M =
-    parseMarker(readBody(fs(spark, dir), new Path(staging, CasProtocol.Marker))).getOrElse(
+    parse(readBody(fs(spark, dir), new Path(staging, CasProtocol.Marker))).map(_.meta).getOrElse(
       throw new IllegalStateException(s"staged marker at $staging unreadable"))
 
   private def commit(spark: SparkSession, dir: String, staging: Path, v: Long): Unit =

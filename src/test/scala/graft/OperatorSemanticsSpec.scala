@@ -981,6 +981,18 @@ class ColumnProfileSpec extends AnyFunSuite {
       assert(!v._5, "no orders column is constant")
     }
   }
+
+  test("q287's modal fold fails loudly on a column holding nulls") {
+    import spark.implicits._
+    val clean = Seq(("a", "x"), ("a", "x"), ("a", "y")).toDF("column", "value")
+    val top = graft.operators.Extras.columnProfile(clean).collect()
+    assert(top.map(_.getAs[String]("top_value")).toSeq == Seq("x"))
+    // nulls outnumber every value: the old window would have picked null,
+    // the fold would silently pick "x" — it must refuse instead
+    val nulls = clean.union(Seq(("a", null), ("a", null), ("a", null)).toDF("column", "value"))
+    val e = intercept[Exception](graft.operators.Extras.columnProfile(nulls).collect())
+    assert(e.getMessage.contains("column 'a' holds nulls"), s"unexpected: ${e.getMessage}")
+  }
 }
 
 class PvmBridgeSpec extends AnyFunSuite {
