@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query timed at SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout (driver contract).
   */
@@ -16,31 +14,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parsed up front: a non-numeric SPARK_GRAFT_CPUS fails HERE, not as
-    // malformed JSON in the driver's artifact
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = Session.cpus
     val loadStart = loadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // single-file test tables: split scans so map work parallelizes
-      // (SURVEY §5 — at cluster scale the 128 MB default is correct)
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The driver-generated test tables are single-row-group parquet files,
-    // so a scan is ONE task no matter how small maxPartitionBytes gets —
-    // heavy map stages (window/shingle explodes, minhash) would run
-    // single-threaded until the first exchange. graft.local.split is the
-    // documented local-mode crutch for exactly this (Tables.localSplit):
-    // one key-repartition buys local[32]-wide map work. At cluster scale
-    // the scan itself splits (many files / row groups) and the conf stays
-    // off — PlanAudit audits the conf-off plans.
-    spark.conf.set("graft.local.split", "true")
+    val spark = Session(cpus, Session.Timed)
     // Every table's schema is resolved once per session (Tables.parquetSchema),
     // so min-of-reps would never see that cost: resolve all ten here,
     // before the warm-up's first load, and price it in prep_lsh_cache_s.
@@ -86,82 +62,34 @@ object Bench {
     // fills the temp volume on a bench-loop host
     val storesDir =
       java.nio.file.Files.createTempDirectory("graft_bench_stores").toString
-    locally {
-      import org.apache.spark.sql.functions.col
-      import graft.sources.FreqStore
-      val docs = Tables(spark, sfDir).documents
-        .select(col("doc_id"), col("source"), col("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        FreqStore.init(spark, s"$storesDir/freq", docs)
-        FreqStore.init(spark, s"$storesDir/bigram", docs, FreqStore.Bigram)
-        // ONE corpus window explode provisions the whole window family:
-        // the finer WindowDoc relation serves q113 directly and q122 via
-        // rollup, and the frozen-train WindowSrc store is a PROJECTION of
-        // it (the second, 90%-of-corpus explode the pre-r14 prep paid)
-        FreqStore.init(spark, s"$storesDir/windoc", docs, FreqStore.WindowDoc(8))
-        FreqStore.initWinSrcProjection(
-          spark, s"$storesDir/leak", s"$storesDir/windoc",
-          graft.operators.Dedup.leakTrainSlice)
-        // the persistent dedup index over the base corpus (q107's
-        // base/incoming split): q107 probes its hash+sig families and
-        // q181 calibrates the Bloom front against its stored hash set —
-        // the production shape, where the arriving batch is the only
-        // corpus scan the delta path pays (r16, the 17th store consumer)
-        graft.sources.DedupIndex.init(spark, s"$storesDir/dedup",
-          docs.filter(!col("source").like("src1%")), bands = 8, windowK = 8)
-        // the mergeable-sketch distinct ledger (r16 wave 40): q252 reads
-        // per-day HLL sketches and answers week windows by register-max
-        // union — the incremental-analytics artifact a dashboard session
-        // keeps next to the count stores
-        graft.sources.HllStore.init(
-          spark, s"$storesDir/hll", Tables(spark, sfDir).events, corpus = sfDir)
-        // the mergeable quantile ledger (r17): q255 merges per-day KLL
-        // sketches for week-window p50/p95 with zero raw re-scan
-        graft.sources.KllStore.init(
-          spark, s"$storesDir/kll", Tables(spark, sfDir).events, corpus = sfDir)
-        // the published catalog snapshot (r17): q68's base loads through
-        // the DSv2 time-travel read pinned at v=1
-        graft.sources.CatalogStore.init(
-          spark, s"$storesDir/catalog",
-          graft.operators.CatalogOps.catalogBase(Tables(spark, sfDir)))
-      } finally docs.unpersist()
-      // Bucketed fact layout (r17): OFF by default, measured. The 100 TB
-      // story of the orderkey/user_id fact joins is "exchange-free on
-      // bucketed storage" and PlanAudit `bucketed` mode proves the
-      // mechanism (zero spine exchanges, hash-identical answers) — but a
-      // bracketed bucketed/plain/bucketed bench A/B at sf0.1 measured the
-      // bucketed SESSION a net loss locally (median ratio 1.045,
-      // ~223 s plain vs ~238 s bucketed): the join-spine wins
-      // (q162/q200/q253, −0.2..−0.7 s each) are swamped by per-file scan
-      // overhead on megabyte-scale fact tables split into `buckets`
-      // parquet files (q222 +1.5 s, q249 +1.3 s, q237 +1.0 s — plain
-      // orders-scan consumers). At 100 TB the trade inverts (bucket files
-      // are GB-sized and the exchange is the dominant cost), which is why
-      // the layout, loader, and proof all ship — set
-      // GRAFT_BENCH_BUCKETS=<n> to time the bucketed session; the write
-      // is priced in prep_stores_s.
-      val buckets = sys.env.getOrElse("GRAFT_BENCH_BUCKETS", "0").toInt
-      if (buckets > 0) {
-        Tables.provisionBucketed(spark, sfDir, s"$storesDir/bucketed", buckets)
-        spark.conf.set("graft.bucketed", "true")
-      }
-      spark.conf.set("graft.catalog.store", s"$storesDir/catalog")
-      spark.conf.set("graft.kll.store", s"$storesDir/kll")
-      spark.conf.set("graft.hll.store", s"$storesDir/hll")
-      spark.conf.set("graft.freq.store", s"$storesDir/freq")
-      spark.conf.set("graft.bigram.store", s"$storesDir/bigram")
-      spark.conf.set("graft.win.store", s"$storesDir/windoc")
-      spark.conf.set("graft.leak.store", s"$storesDir/leak")
-      spark.conf.set("graft.delta.index", s"$storesDir/dedup")
-      // the store-backed leakage family shares one eval window stream
-      // (Dedup.evalPos under graft.lsh.cache) — build it here, priced,
-      // not in whichever of q120/q143/q146 happens to run first
-      graft.operators.Dedup.primeLeakEval(Tables(spark, sfDir))
-      // likewise the session store VIEWS (StoreViews): materialized now,
-      // priced in prep_stores_s, never hidden in a discarded first rep
-      graft.operators.Dedup.primeStoreViews(Tables(spark, sfDir))
+    StoreSet.provision(spark, sfDir, storesDir).foreach(s => spark.conf.set(s.conf, s.path))
+    // Bucketed fact layout (r17): OFF by default, measured. The 100 TB
+    // story of the orderkey/user_id fact joins is "exchange-free on
+    // bucketed storage" and PlanAudit `bucketed` mode proves the
+    // mechanism (zero spine exchanges, hash-identical answers) — but a
+    // bracketed bucketed/plain/bucketed bench A/B at sf0.1 measured the
+    // bucketed SESSION a net loss locally (median ratio 1.045,
+    // ~223 s plain vs ~238 s bucketed): the join-spine wins
+    // (q162/q200/q253, −0.2..−0.7 s each) are swamped by per-file scan
+    // overhead on megabyte-scale fact tables split into `buckets`
+    // parquet files (q222 +1.5 s, q249 +1.3 s, q237 +1.0 s — plain
+    // orders-scan consumers). At 100 TB the trade inverts (bucket files
+    // are GB-sized and the exchange is the dominant cost), which is why
+    // the layout, loader, and proof all ship — set
+    // GRAFT_BENCH_BUCKETS=<n> to time the bucketed session; the write
+    // is priced in prep_stores_s.
+    val buckets = sys.env.getOrElse("GRAFT_BENCH_BUCKETS", "0").toInt
+    if (buckets > 0) {
+      Tables.provisionBucketed(spark, sfDir, s"$storesDir/bucketed", buckets)
+      spark.conf.set("graft.bucketed", "true")
     }
+    // the store-backed leakage family shares one eval window stream
+    // (Dedup.evalPos under graft.lsh.cache) — build it here, priced,
+    // not in whichever of q120/q143/q146 happens to run first
+    graft.operators.Dedup.primeLeakEval(Tables(spark, sfDir))
+    // likewise the session store VIEWS (StoreViews): materialized now,
+    // priced in prep_stores_s, never hidden in a discarded first rep
+    graft.operators.Dedup.primeStoreViews(Tables(spark, sfDir))
     val prepStoresS = math.rint((System.nanoTime() - tStores) / 1e7) / 100
     // min of 2 reps per query: a single cold rep inherits whatever the VM
     // was doing that second (round-over-round numbers drifted ~1.8× with
@@ -208,68 +136,14 @@ object Bench {
       Util.deleteRecursively(storesDir)
       sys.exit(1)
     }
-    // drives the runs already taken and the JSON "reps" field
-    val nReps = reps.length
-    val results = reps.head.indices.map { i =>
-      reps.head(i)._1 -> reps.map(_(i)._2).min
-    }
-    // Keys shortened to the unique qNN prefix and values rounded to ms so
-    // the whole line stays well under 2000 chars: the driver keeps only the
-    // last 2000 chars of stdout, and the full-name line (~3.4 KB for 72
-    // queries) was truncated mid-line and never parsed (BENCH_r01/r02
-    // "parsed": null).
-    val prefixes = results.map(_._1.takeWhile(_ != '_'))
-    require(
-      prefixes.distinct.length == prefixes.length,
-      "duplicate qNN prefix would silently drop a timing from the JSON line")
-    val qs = results.map { case (k, v) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + math.rint(v * 1000) / 1000
-    }.mkString("{", ",", "}")
-    val total = math.rint(results.map(_._2).sum * 1000) / 1000
+    val results = mins(reps)
     // Per-rep times as integer-centisecond arrays aligned to the sorted
-    // query order of "queries" — a round-N outlier is self-adjudicating
-    // (both-reps-slow = sustained contention or regression; one-rep-slow =
-    // a transient the min already discards) without a manual re-run.
+    // query order — a round-N outlier is self-adjudicating (both-reps-slow
+    // = sustained contention or regression; one-rep-slow = a transient the
+    // min already discards) without a manual re-run.
     val repArrays = reps.zipWithIndex.map { case (r, i) =>
       s""""rep${i + 1}_cs":[${r.map(x => math.rint(x._2 * 100).toLong).mkString(",")}]"""
     }.mkString(",")
-    // At 114+ queries the full per-rep arrays overflow the driver's
-    // 2000-char tail window; the adjudication value lives almost entirely
-    // in the SLOWEST queries (the only ones an outlier story is ever
-    // about), so the fallback keeps per-rep centiseconds for the top-K by
-    // min time as a {"q38":[224,230],…} object instead of dropping all
-    // detail.
-    def slowestDetail(kSlow: Int): String = {
-      val byName = results.map(_._1).zipWithIndex.toMap
-      val entries = results.sortBy(-_._2).take(kSlow).sortBy(_._1).map { case (name, _) =>
-        val i = byName(name)
-        val cs = reps.map(r => math.rint(r(i)._2 * 100).toLong).mkString(",")
-        "\"" + name.takeWhile(_ != '_') + "\":[" + cs + "]"
-      }
-      s""""slow_reps":{${entries.mkString(",")}}"""
-    }
-    // The 150-query line has no room for rep ARRAYS even for the top 10 —
-    // but "queries" already carries each query's MIN at exact centisecond
-    // precision (2-decimal seconds), so the other rep is one signed
-    // delta: delta = rep2_cs − rep1_cs; the min rep is rep1 when
-    // delta ≥ 0. Reconstruction: lo = queries[q]·100,
-    // hi = lo + |delta| → (rep1, rep2) = delta ≥ 0 ? (lo, hi) : (hi, lo).
-    // ~9 chars/query keeps top-10 both-reps adjudication INSIDE the
-    // parsed artifact, which r14's tmpdir-only reps_file did not.
-    // Two reps: signed rep2−rep1 (the documented reconstruction). Three
-    // reps (contended run): the WORST other rep as a ≥0 delta against
-    // the min — which rep was the min stops mattering once the artifact
-    // says "contended"; the magnitude is the adjudication signal.
-    def slowestDelta(kSlow: Int): String = {
-      val byName = results.map(_._1).zipWithIndex.toMap
-      val entries = results.sortBy(-_._2).take(kSlow).sortBy(_._1).map { case (name, _) =>
-        val i = byName(name)
-        val cs = reps.map(r => math.rint(r(i)._2 * 100).toLong)
-        val d = if (nReps == 2) cs(1) - cs(0) else cs.max - cs.min
-        "\"" + name.takeWhile(_ != '_') + "\":" + d
-      }
-      s""""slow_rep_delta_cs":{${entries.mkString(",")}}"""
-    }
     // Full per-rep centisecond detail goes to an explicit output file —
     // GRAFT_BENCH_OUT if set, else the build's `target/` dir when the
     // bench runs from a checkout (gitignored build output — r17 verdict
@@ -277,12 +151,12 @@ object Bench {
     // NAMELESS sorted array, so the named per-query detail must live at
     // a path the driver can find deterministically; tmpdir is the
     // fallback), never the tracked tree itself: one object per run,
-    // query order = the sorted "queries" order, so any both-reps-slow
-    // outlier is adjudicable from the artifact alone. best-effort, but
-    // HONEST: advertise the path only when this run's write landed — a
-    // stale previous run's detail presented as this run's would
-    // misadjudicate an outlier; on failure try to remove any stale copy
-    // so nothing plausible-but-wrong remains
+    // query order = name order, as in the line's q_cs_sorted, so any
+    // both-reps-slow outlier is adjudicable from the artifact alone.
+    // best-effort, but HONEST: advertise the path only when this run's
+    // write landed — a stale previous run's detail presented as this
+    // run's would misadjudicate an outlier; on failure try to remove any
+    // stale copy so nothing plausible-but-wrong remains
     val benchOut = sys.env.get("GRAFT_BENCH_OUT")
     val defaultOut = {
       val t = java.nio.file.Paths.get("target")
@@ -322,129 +196,67 @@ object Bench {
           catch { case _: Throwable => () }
           false
       }
-    // JSON-escape the path: an exotic GRAFT_BENCH_OUT (quote, backslash)
-    // must not corrupt the whole bench line — that would lose the run's
-    // timings, the exact failure this field's honesty rules guard against
-    val repsPathJson = repsPath.toString.replace("\\", "\\\\").replace("\"", "\\\"")
-    val repsFileField =
-      if (repsFileOk) s""","reps_file":"$repsPathJson"""" else ""
     val loadEnd = loadAvg()
     spark.stop()
     // reclaim the session stores now that no query can read them
     Util.deleteRecursively(storesDir)
     // Print after stop so the JSON is the last line on stdout — the driver
     // parses it from the tail of the sbt output.
-    // sf as basename and the two load averages as one [start, end] array:
-    // ~30 chars that per-rep outlier detail spends better (the full sf
-    // path is the driver's own top-level "sf" field anyway)
-    val sfShort = new java.io.File(sfDir).getName
-    // present only when the contention heuristics tripped (and a third
-    // rep ran) — absence means a clean 2-rep window
-    val cf = if (contended) ""","contended":true""" else ""
-    val common =
-      s""""sf":"$sfShort","reps":$nReps,"agg":"min","load":[$loadStart,$loadEnd],""" +
-        s""""cpus":$cpus,"prep_lsh_cache_s":$prepLshS,"prep_stores_s":$prepStoresS$cf"""
-    val head =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        common + repsFileField
-    // the driver keeps only the last 2000 chars of output: an over-budget
-    // line would truncate MID-JSON and parse as nothing, so degrade in
-    // steps — full per-rep arrays, slowest-12 arrays, then (at today's
-    // 150 queries) per-query values at 2 decimals with the slowest-10
-    // second rep delta-encoded against the query's own min, then ever
-    // smaller detail before giving any prep field up
-    val qs2 = results.map { case (k, v) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + math.rint(v * 100) / 100
-    }.mkString("{", ",", "}")
-    val head2 =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs2,""" + common
-    // At 166 queries even the 2-decimal seconds map is ~1830 chars and the
-    // prep-bearing rungs overflow 1980 — the integer-CENTISECOND map
-    // ("queries_cs", unit in the name) buys ~2 chars/query, which is the
-    // difference between per-query detail + prep pricing + rep deltas all
-    // fitting, and the bare map alone squeaking in at zero margin.
-    // prep_s = [lsh_cache_s, stores_s] — the two roomy-rung prep fields
-    // as one compact array.
-    val qs3 = results.map { case (k, v) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + math.rint(v * 100).toLong
-    }.mkString("{", ",", "}")
-    val head3 =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries_cs":$qs3,""" +
-        s""""sf":"$sfShort","reps":$nReps,"agg":"min","load":[$loadStart,$loadEnd],""" +
-        s""""cpus":$cpus,"prep_s":[$prepLshS,$prepStoresS]$cf"""
-    val head2min =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs2,""" +
-        s""""sf":"$sfShort","reps":$nReps,"agg":"min","load":[$loadStart,$loadEnd],"cpus":$cpus$cf"""
-    // r15 shipped at 189 queries on the BARE queries_cs rung (1967 chars)
-    // — every srd-bearing rung above overflowed 1980 and the run's
-    // outliers were not adjudicable from the artifact (r15 verdict #3).
-    // head4 is the survives-200+-queries encoding: drop "metric"/"unit"
-    // (the driver's parser keys on the braces; "value" + the query map
-    // carry the content), drop "sf"/"cpus" (the driver records both at
-    // the artifact's top level next to "parsed"), strip the constant 'q'
-    // prefix from the map keys ("01" ≡ q01 — the suffix is already
-    // stripped on every compact rung), and integer-encode load (e2 =
-    // ×100) and prep (cs = centiseconds, [lsh_cache, stores]). "srd_cs"
-    // is slow_rep_delta_cs under the same reconstruction: lo =
-    // q_cs[q], hi = lo + |Δ|, (rep1, rep2) = Δ ≥ 0 ? (lo, hi) : (hi, lo).
-    val qs4 = results.map { case (k, v) =>
-      "\"" + k.drop(1).takeWhile(_ != '_') + "\":" + math.rint(v * 100).toLong
-    }.mkString("{", ",", "}")
-    def srd(kSlow: Int): String = {
-      val full = slowestDelta(kSlow)
-      "\"srd_cs\"" + full.stripPrefix("\"slow_rep_delta_cs\"").replace("{\"q", "{\"")
-        .replace(",\"q", ",\"")
-    }
-    val head4 =
-      s"""{"value":$total,"q_cs":$qs4,"reps":$nReps,"agg":"min",""" +
-        s""""load_e2":[${math.rint(loadStart * 100).toLong},${math.rint(loadEnd * 100).toLong}],""" +
-        s""""prep_cs":[${math.rint(prepLshS * 100).toLong},${math.rint(prepStoresS * 100).toLong}]$cf"""
-    // At 214 queries even head4's named centisecond map alone is ~1940
-    // chars — no srd-bearing rung above fits and the r15-verdict regression
-    // (outliers not adjudicable from the artifact) would return. head5
-    // drops the NAMES from the full map: "q_cs_sorted" is the centisecond
-    // values in the same name-sorted order every rung already uses
-    // ("q_order":"name" says so in-band; results preserves rep()'s
-    // sortBy(_._1)). The slowest-10 srd map keeps EXPLICIT names, so
-    // adjudication never needs the index reconstruction — the array is for
-    // completeness, and the full named per-rep detail still lands at
-    // reps_file when the write succeeds.
-    val qs5 = results.map { case (_, v) => math.rint(v * 100).toLong }
-      .mkString("[", ",", "]")
-    val head5 =
-      s"""{"value":$total,"q_cs_sorted":$qs5,"q_order":"name","reps":$nReps,"agg":"min",""" +
-        s""""load_e2":[${math.rint(loadStart * 100).toLong},${math.rint(loadEnd * 100).toLong}],""" +
-        s""""prep_cs":[${math.rint(prepLshS * 100).toLong},${math.rint(prepStoresS * 100).toLong}]$cf"""
-    val candidates =
-      Seq(s"$head,$repArrays}", s"$head,${slowestDetail(12)}}",
-        s"$head}",
-        s"$head2$repsFileField,${slowestDelta(10)}}",
-        s"$head2,${slowestDelta(10)}}",
-        s"$head2,${slowestDelta(8)}}",
-        s"$head2,${slowestDelta(6)}}",
-        s"$head2}",
-        s"$head3$repsFileField,${slowestDelta(10)}}",
-        s"$head3,${slowestDelta(10)}}",
-        // prefer slim-with-rep-detail over verbose-without: the bare
-        // queries_cs rung only wins once even head4+srd(6) overflows
-        s"$head4$repsFileField,${srd(10)}}",
-        s"$head4,${srd(10)}}",
-        s"$head4,${srd(8)}}",
-        s"$head4,${srd(6)}}",
-        // keyless-array rungs: slimmer than any named full map, still
-        // carrying named slow-rep detail — preferred over every bare
-        // named map below
-        s"$head5$repsFileField,${srd(12)}}",
-        s"$head5,${srd(12)}}",
-        s"$head5,${srd(8)}}",
-        s"$head3}",
-        s"$head4}",
-        s"$head5}",
-        s"$head2min}")
-    // 1980 against the 2000-char window: r12-r14 artifacts show only a
-    // trailing newline after the line, and every step down the ladder
-    // still parses
-    println(candidates.find(_.length <= 1980).getOrElse(candidates.last))
+    println(line(reps, (loadStart, loadEnd), (prepLshS, prepStoresS),
+      if (repsFileOk) Some(repsPath.toString) else None))
     Console.out.flush()
+  }
+
+  /** Each query's min over the reps, in the reps' name-sorted order. */
+  private def mins(reps: Seq[Seq[(String, Double)]]): Seq[(String, Double)] =
+    reps.head.indices.map(i => reps.head(i)._1 -> reps.map(_(i)._2).min)
+
+  /** The one JSON line the bench prints. Its reader keeps only the last
+    * 2000 chars of output, so an over-budget line would truncate MID-JSON
+    * and parse as nothing: this returns the richest rung that fits 1,980
+    * chars (r12-r14 artifacts show only a trailing newline after the line).
+    *
+    * At 290 queries no named full map fits, so "q_cs_sorted" is each
+    * query's min in centiseconds in name-sorted order ("q_order":"name"
+    * says so in-band). "srd_cs" keeps EXPLICIT names (the qNN prefix minus
+    * its 'q') for the slowest queries' other rep, as a centisecond delta
+    * against the min: with two reps the signed rep2 − rep1, so lo = min,
+    * hi = lo + |Δ|, (rep1, rep2) = Δ ≥ 0 ? (lo, hi) : (hi, lo); with three
+    * (a contended run, flagged "contended":true) the worst other rep as a
+    * ≥ 0 delta. "load_e2" is the [start, end] load average ×100, "prep_cs"
+    * is [lsh_cache, stores] prep; the full named per-rep detail lands at
+    * `repsFile` when its write succeeded.
+    */
+  private[graft] def line(
+      reps: Seq[Seq[(String, Double)]], load: (Double, Double), prep: (Double, Double),
+      repsFile: Option[String]): String = {
+    val results = mins(reps)
+    val prefixes = results.map(_._1.takeWhile(_ != '_'))
+    require(
+      prefixes.distinct.length == prefixes.length,
+      "duplicate qNN prefix would make the srd_cs keys ambiguous")
+    def cs(x: Double): Long = math.rint(x * 100).toLong
+    val total = math.rint(results.map(_._2).sum * 1000) / 1000
+    def srd(kSlow: Int): String =
+      results.zipWithIndex.sortBy(-_._1._2).take(kSlow).sortBy(_._1._1).map {
+        case ((name, _), i) =>
+          val c = reps.map(r => cs(r(i)._2))
+          val d = if (reps.length == 2) c(1) - c(0) else c.max - c.min
+          "\"" + name.stripPrefix("q").takeWhile(_ != '_') + "\":" + d
+      }.mkString("\"srd_cs\":{", ",", "}")
+    // a third rep runs only when the contention heuristics tripped
+    val cf = if (reps.length > 2) ""","contended":true""" else ""
+    val head =
+      s"""{"value":$total,"q_cs_sorted":${results.map(r => cs(r._2)).mkString("[", ",", "]")},""" +
+        s""""q_order":"name","reps":${reps.length},"agg":"min",""" +
+        s""""load_e2":[${cs(load._1)},${cs(load._2)}],"prep_cs":[${cs(prep._1)},${cs(prep._2)}]$cf"""
+    // JSON-escape the path: an exotic GRAFT_BENCH_OUT (quote, backslash)
+    // must not corrupt the whole line and lose the run's timings
+    val rf = repsFile.fold("") { p =>
+      val esc = p.replace("\\", "\\\\").replace("\"", "\\\"")
+      s""","reps_file":"$esc""""
+    }
+    val rungs = Seq(s"$head$rf,${srd(12)}}", s"$head,${srd(12)}}", s"$head,${srd(8)}}", s"$head}")
+    rungs.find(_.length <= 1980).getOrElse(rungs.last)
   }
 }

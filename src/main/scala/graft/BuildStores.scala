@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
-
 /** One-shot lake-artifact provisioner: builds every persistent store the
   * query library can probe — the from-scratch bootstrap a deployment runs
   * ONCE before ingest takes over incremental maintenance
@@ -10,34 +7,11 @@ import org.apache.spark.sql.functions.col
   *
   *   sbt "runMain graft.BuildStores <sfDir> <outDir> [bands] [windowK] [incoming]"
   *
-  * Artifacts (each an LSM/CAS store under `<outDir>/<name>`, see
-  * SURVEY.md; the session conf that points consumers at it in parens):
-  *   - `dedup`   — sources.DedupIndex: content hashes + minhash bands +
-  *                 window hashes of the CURATED BASE — the corpus minus
-  *                 the `incoming` source pattern (default `src1%`,
-  *                 `graft.delta.incoming`'s default), because the index's
-  *                 contract is that arriving batches are NOT yet in it
-  *                 (`graft.delta.index`; q107, Dedup.deltaSubstring).
-  *                 Pass an unmatchable pattern to index everything.
-  *   - `freq`    — FreqStore Unigram (`graft.freq.store`;
-  *                 q121/q130/q136).
-  *   - `bigram`  — FreqStore Bigram (`graft.bigram.store`;
-  *                 q77/q97/q139).
-  *   - `windoc`  — FreqStore WindowDoc over the corpus
-  *                 (`graft.win.store`; q113 reads it directly, q122
-  *                 through the (wh, source) group-size rollup).
-  *   - `leak`    — FreqStore WindowSrc over the frozen train slice
-  *                 (`graft.leak.store`; q120/q143/q146), PROJECTED from
-  *                 `windoc` (leakTrainSlice is a pure doc_id predicate)
-  *                 so the bootstrap explodes the corpus windows once,
-  *                 not twice.
-  *   - `ivf`     — sources.IvfIndex from the corpus identity quantizer
-  *                 (`graft.ivf.index`; q74).
-  *
-  * Prints one JSON line per artifact with its version-1 stats so the
-  * bootstrap is auditable; reruns fail loudly on already-initialized
-  * stores (this is a bootstrap, not a sync — incremental maintenance is
-  * the stores' `append`).
+  * The artifacts, and the session conf that points consumers at each, are
+  * [[StoreSet]]'s one list. Prints one JSON line per artifact with its
+  * version-1 stats so the bootstrap is auditable; reruns fail loudly on
+  * already-initialized stores (this is a bootstrap, not a sync —
+  * incremental maintenance is the stores' `append`).
   */
 object BuildStores {
   def main(args: Array[String]): Unit = {
@@ -47,64 +21,9 @@ object BuildStores {
     val bands = args.lift(2).map(_.toInt).getOrElse(8)
     val windowK = args.lift(3).map(_.toInt).getOrElse(8)
     val incoming = args.lift(4).getOrElse("src1%")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.{DedupIndex, FreqStore, IvfIndex}
-    val t = Tables(spark, sfDir)
-    val docs = t.documents
-      .select(col("doc_id"), col("source"), col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val d = DedupIndex.init(
-        spark, s"$outDir/dedup", docs.filter(!col("source").like(incoming)),
-        bands = bands, windowK = windowK)
-      println(s"""{"store":"dedup","version":${d.version},"hashes":${d.totalHashes},""" +
-        s""""sigs":${d.totalSigs},"windows":${d.totalWindows}}""")
-      Seq(
-        ("freq", FreqStore.Unigram: FreqStore.Family, docs),
-        ("bigram", FreqStore.Bigram: FreqStore.Family, docs),
-        ("windoc", FreqStore.WindowDoc(windowK): FreqStore.Family, docs)
-      ).foreach { case (name, fam, input) =>
-        val s = FreqStore.init(spark, s"$outDir/$name", input, fam)
-        println(s"""{"store":"$name","family":"${s.family}","version":${s.version},""" +
-          s""""rows":${s.newVocab},"n":${s.totalTokens},"docs":${s.totalDocs}}""")
-      }
-      // the frozen-train WindowSrc rollup is a PROJECTION of the windoc
-      // relation (one store-scale aggregate) — the second corpus window
-      // explode the pre-r14 bootstrap paid is gone
-      val lk = FreqStore.initWinSrcProjection(
-        spark, s"$outDir/leak", s"$outDir/windoc",
-        graft.operators.Dedup.leakTrainSlice)
-      println(s"""{"store":"leak","family":"${lk.family}","version":${lk.version},""" +
-        s""""rows":${lk.newVocab},"n":${lk.totalTokens},"docs":${lk.totalDocs}}""")
-      val (assign, centroids) = graft.operators.Similarity.corpusQuantizer(t)
-      val iv = IvfIndex.init(spark, s"$outDir/ivf", assign, centroids)
-      println(s"""{"store":"ivf","version":${iv.version},"k":${iv.k},"assigned":${iv.totalAssigned}}""")
-      // `hll` — sources.HllStore: per-day mergeable HLL distinct-user
-      // sketches (`graft.hll.store`; q252 answers week windows by
-      // register-max union of the stored days)
-      val hl = graft.sources.HllStore.init(spark, s"$outDir/hll", t.events, corpus = sfDir)
-      println(s"""{"store":"hll","version":${hl.version},"days":${hl.totalDays}}""")
-      // `kll` — sources.KllStore: per-day mergeable quantile sketches
-      // (`graft.kll.store`; q255 answers week-window p50/p95 by merging
-      // the stored days)
-      val kl = graft.sources.KllStore.init(spark, s"$outDir/kll", t.events, corpus = sfDir)
-      println(s"""{"store":"kll","version":${kl.version},"days":${kl.totalDays}}""")
-      // `catalog` — sources.CatalogStore: the published dataset catalog
-      // (`graft.catalog.store`; q68's base loads the v=1 snapshot through
-      // the DSv2 time-travel read)
-      val cv = graft.sources.CatalogStore.init(
-        spark, s"$outDir/catalog", graft.operators.CatalogOps.catalogBase(t))
-      println(s"""{"store":"catalog","version":$cv}""")
-    } finally docs.unpersist()
+    val spark = Session()
+    StoreSet.provision(spark, sfDir, outDir, bands, windowK, incoming)
+      .foreach(s => println(s.json))
     spark.stop()
   }
 }

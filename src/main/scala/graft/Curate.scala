@@ -268,18 +268,7 @@ object Curate {
     require(args.length >= 2, "usage: graft.Curate <sfDir> <outDir> [runTag]")
     val (sfDir, outDir) = (args(0), args(1))
     val runTag = args.lift(2).getOrElse("curate-1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("graft.local.split", "true")
+    val spark = Session(extra = Session.Timed)
     val report = run(spark, sfDir, outDir, runTag)
     spark.stop()
     println(report.toJson)

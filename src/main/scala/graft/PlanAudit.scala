@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: audits the physical plan of every query against the scale
   * invariants in SURVEY.md §5 and prints one line per query.
   *
@@ -1105,20 +1103,12 @@ object PlanAudit {
     // no-leaked-store-set hygiene as Bench (r13 advice)
     lazy val storesTmp =
       java.nio.file.Files.createTempDirectory("graft_planaudit_stores").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(
-        "spark.sql.autoBroadcastJoinThreshold",
-        // bucketed mode also turns AUTO broadcasts off (scale-mode
-        // parity): at 100 TB neither fact side broadcasts, and a tiny-SF
-        // auto-broadcast would hide the very orderkey exchange whose
-        // elimination this mode exists to pin
-        if (scaleMode || bucketedMode) "-1" else "10485760")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // bucketed mode also turns AUTO broadcasts off (scale-mode parity): at
+    // 100 TB neither fact side broadcasts, and a tiny-SF auto-broadcast
+    // would hide the very orderkey exchange whose elimination this mode
+    // exists to pin
+    val spark = Session(4, Map("spark.sql.autoBroadcastJoinThreshold" ->
+      (if (scaleMode || bucketedMode) "-1" else "10485760")), logLevel = "ERROR")
     // `bucketed` mode (r16 verdict #1): prove the six-times-claimed
     // "exchange-free on bucketed storage" — provision bucketBy-written
     // lineitem/orders, then pin that each target query's ORDERKEY
@@ -1187,33 +1177,8 @@ object PlanAudit {
     // stores mode: provision the full artifact set at the audit SF and
     // point every consumer conf at it — the audited plans are then the
     // bench session's actual store-backed shapes
-    if (storesMode) {
-      import graft.sources.{DedupIndex, FreqStore, IvfIndex}
-      import org.apache.spark.sql.functions.col
-      val out = storesTmp
-      val t = Tables(spark, sfDir)
-      val docs = t.documents.select(col("doc_id"), col("source"), col("text"))
-      DedupIndex.init(spark, s"$out/dedup",
-        docs.filter(!col("source").like("src1%")), bands = 8, windowK = 8)
-      FreqStore.init(spark, s"$out/freq", docs)
-      FreqStore.init(spark, s"$out/bigram", docs, FreqStore.Bigram)
-      FreqStore.init(spark, s"$out/windoc", docs, FreqStore.WindowDoc(8))
-      FreqStore.initWinSrcProjection(
-        spark, s"$out/leak", s"$out/windoc", graft.operators.Dedup.leakTrainSlice)
-      val (assign, centroids) = graft.operators.Similarity.corpusQuantizer(t)
-      IvfIndex.init(spark, s"$out/ivf", assign, centroids)
-      graft.sources.HllStore.init(spark, s"$out/hll", t.events, corpus = sfDir)
-      graft.sources.KllStore.init(spark, s"$out/kll", t.events, corpus = sfDir)
-      graft.sources.CatalogStore.init(
-        spark, s"$out/catalog", graft.operators.CatalogOps.catalogBase(t))
-      Map(
-        "graft.freq.store" -> s"$out/freq", "graft.bigram.store" -> s"$out/bigram",
-        "graft.win.store" -> s"$out/windoc", "graft.leak.store" -> s"$out/leak",
-        "graft.delta.index" -> s"$out/dedup", "graft.ivf.index" -> s"$out/ivf",
-        "graft.hll.store" -> s"$out/hll", "graft.kll.store" -> s"$out/kll",
-        "graft.catalog.store" -> s"$out/catalog")
-        .foreach { case (k, v) => spark.conf.set(k, v) }
-    }
+    if (storesMode)
+      StoreSet.provision(spark, sfDir, storesTmp).foreach(s => spark.conf.set(s.conf, s.path))
     val auditSet =
       if (storesMode) SparkEntry.queries.filter(q => storeExchangeBudget.contains(q._1))
       else SparkEntry.queries

@@ -67,19 +67,11 @@ object ScaleProbe {
   private def session(cpus: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the scaled tables are 64 files of a few MB each: 4 MB splits give
-      // one scan task per file (the probe's stand-in for a real lake's
-      // file count) — the default 128 MB split would pack the whole scan
-      // into ~4 tasks and starve the 32-core session at the map stage
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    // the scaled tables are 64 files of a few MB each: 4 MB splits give
+    // one scan task per file (the probe's stand-in for a real lake's
+    // file count) — the default 128 MB split would pack the whole scan
+    // into ~4 tasks and starve the 32-core session at the map stage
+    Session(cpus, Map("spark.sql.files.maxPartitionBytes" -> "4m"))
   }
 
   /** Replica key stride: rep r's copy of a base key k is k + r·KeyOffset. */
@@ -120,7 +112,6 @@ object ScaleProbe {
       val tGen = System.nanoTime()
       val rowCounts = {
         val spark = session(32)
-        spark.sparkContext.setLogLevel("WARN")
         spark.sparkContext.setJobDescription(s"scaleprobe: generate x$mult")
         val li = replicate(spark.read.parquet(s"$baseDir/lineitem.parquet"), "l_orderkey", mult)
           .drop("rep")
@@ -159,7 +150,6 @@ object ScaleProbe {
       buckets.foreach { n =>
         val cpus = cpusList.last
         val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         Tables.provisionBucketed(spark, out, s"$out/bucketed", n)
         def timeAll(tag: String): Map[String, Double] = queries.map { name =>
           val fn = SparkEntry.queries(name)
@@ -199,7 +189,6 @@ object ScaleProbe {
       // ---- time each core count in its own session ----
       def run(cpus: Int): Map[String, Double] = {
         val spark = session(cpus)
-        spark.sparkContext.setLogLevel("WARN")
         // JIT/codegen warmup on the scaled relations (not timed)
         spark.read.parquet(s"$out/lineitem.parquet").count()
         spark.read.parquet(s"$out/documents.parquet").count()

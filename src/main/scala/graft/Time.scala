@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: time named queries N times each (warm JVM, median-friendly
   * output) — `runMain graft.Time <sfDir> <reps> q62_dup_clusters ...`.
   *
@@ -17,19 +15,8 @@ object Time {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // single-file test tables: split scans so map work parallelizes
-      // (SURVEY §5 — at cluster scale the 128 MB default is correct)
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's session, so a solo time is of the plan the bench runs
+    val spark = Session(extra = Session.Timed)
     Util.timeConfs.foreach { case (k, v) =>
       spark.conf.set(k, v)
       println(s"[time] conf $k=$v")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,19 +17,10 @@ object Verify {
       System.err.println(
         s"[verify] WARNING: relative outDir '$outDir' writes into the working tree")
     val only = args.drop(2).toSet // dev convenience; driver passes 2 args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // scheduler mode is a SparkConf read at context creation (a local
-      // property would be a no-op); FAIR keeps one slow query from
-      // starving the rest when several run concurrently below
-      .config("spark.scheduler.mode", "FAIR")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // scheduler mode is a SparkConf read at context creation (a local
+    // property would be a no-op); FAIR keeps one slow query from
+    // starving the rest when several run concurrently below
+    val spark = Session(extra = Map("spark.scheduler.mode" -> "FAIR"))
     new java.io.File(outDir).mkdirs()
     // Queries are independent jobs; run several concurrently so the 32
     // local cores aren't idle between the small per-query jobs (Spark's

@@ -2,36 +2,23 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The one-shot artifact provisioner (graft.BuildStores) and the fully
-  * provisioned session: all six store confs set AT ONCE, every
-  * store-backed consumer still output-identical to its derived run —
-  * the stores must compose, not just work one at a time.
+/** The provisioned store set (graft.StoreSet, which BuildStores, Bench and
+  * PlanAudit `stores` mode all call) and the fully provisioned session: all
+  * nine store confs set AT ONCE, every store-backed consumer still
+  * output-identical to its derived run — the stores must compose, not just
+  * work one at a time.
   */
 class BuildStoresSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("a fully provisioned session: every store-backed consumer equals derived") {
     val out = java.nio.file.Files.createTempDirectory("graft_provision").toString
-    // the provisioner's artifact set, built through the library API the
-    // main wires (the main itself owns a SparkSession, so the spec drives
-    // the same calls against the shared test session)
-    import graft.sources.{DedupIndex, FreqStore, IvfIndex}
-    import org.apache.spark.sql.functions.col
+    val built = StoreSet.provision(spark, sf, out)
+    assert(built.map(_.conf).toSet == Set(
+      "graft.delta.index", "graft.freq.store", "graft.bigram.store", "graft.win.store",
+      "graft.leak.store", "graft.ivf.index", "graft.hll.store", "graft.kll.store",
+      "graft.catalog.store"))
     val t = Tables(spark, sf)
-    val docs = t.documents.select(col("doc_id"), col("source"), col("text"))
-    // the dedup index covers the CURATED BASE: the corpus minus the
-    // delta-incoming slice (q107's contract — arriving batches are new)
-    DedupIndex.init(spark, s"$out/dedup",
-      docs.filter(!col("source").like("src1%")), bands = 8, windowK = 8)
-    FreqStore.init(spark, s"$out/freq", docs)
-    FreqStore.init(spark, s"$out/bigram", docs, FreqStore.Bigram)
-    // r14 provisioning: ONE corpus window explode (the finer WindowDoc
-    // relation), with the frozen-train WindowSrc store PROJECTED from it
-    FreqStore.init(spark, s"$out/windoc", docs, FreqStore.WindowDoc(8))
-    FreqStore.initWinSrcProjection(
-      spark, s"$out/leak", s"$out/windoc", graft.operators.Dedup.leakTrainSlice)
-    val (assign, centroids) = graft.operators.Similarity.corpusQuantizer(t)
-    IvfIndex.init(spark, s"$out/ivf", assign, centroids)
 
     val consumers = Seq(
       "q121_token_rarity", "q130_cms_calibration", "q136_vocab_coverage", // unigram
@@ -40,17 +27,13 @@ class BuildStoresSpec extends AnyFunSuite {
       "q120_split_leakage", "q143_leakage_by_source", "q146_leak_severity", // leak
       "q122_window_novelty", "q113_substring_windows",                    // windoc
       "q107_delta_dedup",                                                 // dedup index
-      "q74_ivf_multiprobe")                                               // ivf index
+      "q74_ivf_multiprobe",                                               // ivf index
+      "q252_hll_rollup",                                                  // hll
+      "q255_kll_quantiles",                                               // kll
+      "q68_dataset_upsert")                                               // catalog
     val derived = consumers.map(q =>
       q -> SparkEntry.queries(q)(spark, sf).collect().toSeq).toMap
-    val confs = Map(
-      "graft.freq.store" -> s"$out/freq",
-      "graft.bigram.store" -> s"$out/bigram",
-      "graft.win.store" -> s"$out/windoc",
-      "graft.leak.store" -> s"$out/leak",
-      "graft.delta.index" -> s"$out/dedup",
-      "graft.ivf.index" -> s"$out/ivf")
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    built.foreach(s => spark.conf.set(s.conf, s.path))
     // the session pair/component cache composes with the stores (the
     // Bench session runs with ALL of these on at once)
     spark.conf.set("graft.lsh.cache", "true")
@@ -61,7 +44,7 @@ class BuildStoresSpec extends AnyFunSuite {
       assert(SparkEntry.queries(q)(spark, sf).collect().toSeq == derived(q),
         s"$q diverges in the fully provisioned session")
     } finally {
-      confs.keys.foreach(spark.conf.unset)
+      built.foreach(s => spark.conf.unset(s.conf))
       spark.conf.unset("graft.lsh.cache")
       graft.operators.Dedup.clearPairCache()
     }

@@ -492,9 +492,10 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("adaptive query execution is on in the bench/verify sessions") {
-    // Bench/Verify build their own sessions with AQE; the shared test
-    // session inherits Spark 4 defaults where AQE is enabled.
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    // every main builds its session through Session: the default profile
+    // (Verify) and the timed one (Bench) both carry AQE
+    assert(Session.confs(4)("spark.sql.adaptive.enabled") == "true")
+    assert(Session.confs(4, Session.Timed)("spark.sql.adaptive.enabled") == "true")
   }
 
   test("SynthSource drives a 2M-doc dedup-shaped pipeline storage-free") {

@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Source-level guards over `src/main/scala/graft`: every driver
-  * `.collect()` is an audited, bounded site, and no versioned-store
-  * reader infers a parquet schema except the core's one pre-schema
-  * fallback. Comment lines and imports are ignored; counts are per file,
+  * `.collect()` is an audited, bounded site, every main's session comes
+  * from the one factory, and no versioned-store reader infers a parquet
+  * schema except the core's one pre-schema fallback. Comment lines and imports are ignored; counts are per file,
   * so moving a site within its file needs no edit here, and adding or
   * removing one does.
   */
@@ -48,6 +48,11 @@ class SourceGuardSpec extends AnyFunSuite {
       s"collect sites changed: ${(got.toSet diff collectAllowlist.toSet).mkString(", ")} " +
         s"(allowlist: ${(collectAllowlist.toSet diff got.toSet).mkString(", ")}) — bound the " +
         "new collect (limit(n + 1) and check) and add it to the allowlist with its bound")
+  }
+
+  test("SparkSession.builder appears only in the session factory") {
+    assert(sites(sources, """SparkSession\s*\.builder\b""".r) == Map("Session.scala" -> 1),
+      "build main sessions with graft.Session, passing only the confs that differ")
   }
 
   test("store readers declare their schema: the core's fallback is the one inference") {
