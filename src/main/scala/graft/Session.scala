@@ -49,6 +49,10 @@ object Session {
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
+    // the unpartitioned windows PlanAudit allows (provably tiny relations)
+    // would each log a WARN per run, burying real failures
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec", org.apache.logging.log4j.Level.ERROR)
     spark
   }
 }

@@ -4,9 +4,9 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The ONE compare-and-swap publish protocol every versioned lake
-  * artifact shares (CatalogStore and VersionedSink snapshots, and the LSM
-  * stores — DedupIndex, FreqStore, IvfIndex, HllStore, KllStore — through
-  * their shared [[VersionedStore]] core): claim `v=N` atomically, and
+  * artifact shares (VersionedSink snapshots, and the six stores —
+  * CatalogStore, DedupIndex, FreqStore, IvfIndex, HllStore, KllStore —
+  * through their shared [[VersionedStore]] core): claim `v=N` atomically, and
   * clear crash debris only through the explicit quiesced-writers repair
   * op. The claim semantics — including the TOCTOU fix that removed the
   * inline orphan-delete — have exactly one implementation to keep correct.
@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * Store-specific knowledge stays out of this object: what a marker
   * contains is injected as the `committed` predicate, which must re-read
   * the marker uncached ([[VersionedStore]] states the marker-cache
-  * contract the LSM stores share); this object owns only the
+  * contract the stores share); this object owns only the
   * claim/lose/repair mechanics.
   *
   * HOW the slot is claimed is a per-filesystem [[VersionCommitter]] seam

@@ -50,7 +50,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * column — see [[CatalogStore]]'s layout), read from the marker on every
   * load, so loading the table runs no job and a store deleted and
   * re-published at the same path serves its new schema. A marker written
-  * before the schema was carried falls back to one footer inference.
+  * before the schema was carried resolves it through the versioned-store
+  * core: one footer inference per file identity.
   */
 class CatalogSnapshotSource extends TableProvider {
   private def resolve(options: CaseInsensitiveStringMap): (String, Long) = {

@@ -1,10 +1,20 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
+
+/** A catalog version's manifest: row count and content hash. Every catalog
+  * version is a base, so its read chain is the version alone and the
+  * chain's "sums" are its own rows and xor.
+  */
+private[sources] final case class CatalogMeta(rows: Long, xor: Long) extends VersionMeta {
+  def kind: String = "base"
+  def counts: Seq[Long] = Seq(rows, xor)
+}
 
 /** The EXECUTE path for catalog maintenance — where q68 (upsert) and q85
   * (retention GC) stop being plan-as-query and actually mutate durable
@@ -19,15 +29,18 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   _staging/v2-<uuid>/...           a writer's private, in-flight snapshot
   * }}}
   *
-  * The marker is one JSON object, `{"rows":N,"xor":X,"schema":{…}}`: the
-  * snapshot manifest (row count and content hash, see [[manifestOf]]) and
-  * the snapshot's read schema (`StructType.json` of the data columns plus
-  * the `shard` partition column). Every reader declares that schema
-  * instead of inferring it from parquet footers, so a read runs no
-  * schema-inference job — the schema lives in the commit, as in Delta's
-  * log. A marker written before the schema was carried (`{"rows":N,
-  * "xor":X}`) still reads: its snapshot's schema is inferred once per
-  * read. Anything else in the marker is corruption and fails the read.
+  * The store is a [[VersionedStore]] whose one relation is the ROOT
+  * relation (the snapshot at `v=N`, partitioned by `shard`) and whose
+  * every version is a base. The core owns the listing, the marker's
+  * schema field, the CAS publish, repair and the gc walk; this object
+  * keeps only what is the catalog's: the marker body `{"rows":N,"xor":X}`
+  * (the snapshot manifest, see [[manifestOf]]), the keep-latest merge,
+  * create/delete validation, the verifying reads and the shard-pruned
+  * [[get]], and file compaction. The marker's schema is the snapshot's
+  * read schema (data columns plus `shard`); a marker written before the
+  * schema was carried resolves it through the core's one inference per
+  * file identity. Anything else in the marker is corruption: listing,
+  * repair and every read fail on it loudly.
   *
   * Write protocol (crash-safe, idempotent, COMPARE-AND-SWAP — the batch
   * analog of the exactly-once streaming sink spec'd in SourcesSpec):
@@ -36,19 +49,19 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   2. if the batch changes nothing, short-circuit: no new version,
   *   3. else write snapshot + `_COMMITTED` marker into a PRIVATE staging
   *      dir (unique per attempt — concurrent writers never share a path),
-  *   4. publish by atomically claiming `v=N` — a no-overwrite rename of
-  *      staging onto it where rename is atomic (HDFS, POSIX), a
-  *      conditional put of the claim file on object stores (the
-  *      [[CasProtocol]] committer seam picks per scheme) — so of two
-  *      writers that both merged against v=N−1, exactly one wins and the
-  *      loser throws — a concurrent batch can be REJECTED but never LOST.
-  *      The reference gets this serialization from its step-function
-  *      executions; the store supplies its own.
+  *   4. publish by atomically claiming `v=N` through the core's
+  *      [[CasProtocol]] committer, so of two writers that both merged
+  *      against v=N−1, exactly one wins and the loser throws — a
+  *      concurrent batch can be REJECTED but never LOST. The reference
+  *      gets this serialization from its step-function executions; the
+  *      store supplies its own.
   *
   * The published version is derived, never pointed at: current = max v
-  * whose dir holds `_COMMITTED`. A crash before rename leaves only private
-  * staging junk (reclaimed by GC); there is no pointer file to tear and no
-  * recheck-then-publish window.
+  * whose dir holds `_COMMITTED`. A crash before the claim leaves only
+  * private staging junk (reclaimed by GC); there is no pointer file to
+  * tear and no recheck-then-publish window. Listing may serve memoized
+  * markers; the verifying reads re-read the marker of the version they
+  * serve.
   *
   * Scale shape: the merge is one |catalog|+|batch| union → per-key window
   * (single shuffle on dataset_key); snapshots are sharded by key hash so
@@ -56,11 +69,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Version history means GC (q85's execute side) is directory removal,
   * never row rewrites.
   */
-object CatalogStore {
+object CatalogStore extends VersionedStore[CatalogMeta]("catalog", "batch") {
 
   final case class UpsertStats(version: Long, inserted: Long, updated: Long, unchanged: Long)
 
   final case class DeleteStats(version: Long, deleted: Long)
+
+  /** The core's per-version figure: the version number. */
+  type Stats = Long
 
   /** Legal dataset titles — reference `dataset_properties.py:4`
     * (TITLE_PATTERN): ASCII alphanumerics, underscore, hyphen, plus the
@@ -70,35 +86,17 @@ object CatalogStore {
   val TitlePattern: String = "^[āēīōūĀĒĪŌŪA-Za-z0-9_-]+$"
 
   private val Shards = 16
-  private val Marker = "_COMMITTED"
 
-  private def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // strict: a marker with anything after its one object is corruption
+  private val Json = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
-  private def snapshotPath(dir: String, version: Long) = s"$dir/v=$version"
+  protected def parseMarker(body: String): Option[CatalogMeta] =
+    scala.util.Try(Json.readTree(body)).toOption.collect {
+      case n if n.size == 2 && n.path("rows").isIntegralNumber && n.path("xor").isIntegralNumber =>
+        CatalogMeta(n.get("rows").asLong, n.get("xor").asLong)
+    }
 
-  private def isCommitted(f: FileSystem, dir: String, version: Long): Boolean =
-    f.exists(new Path(snapshotPath(dir, version), Marker))
-
-  /** Committed snapshot versions, ascending. Only the atomic publish
-    * rename creates a `_COMMITTED` marker, so presence IS publication; a
-    * marker-less `v=N` dir (pre-CAS crash debris, manual garbage) is not
-    * data and is invisible here.
-    */
-  def listVersions(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = fs(spark, dir)
-    if (!f.exists(new Path(dir))) return Seq.empty
-    f.listStatus(new Path(dir)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v=") => s.stripPrefix("v=").toLong }
-      .filter(v => isCommitted(f, dir, v))
-      .sorted
-  }
-
-  /** The published version, if any: the newest committed snapshot. */
-  def currentVersion(spark: SparkSession, dir: String): Option[Long] =
-    listVersions(spark, dir).lastOption
+  protected def statsOf(v: Long, m: CatalogMeta, totals: Seq[Long]): Long = v
 
   /** Snapshot manifest: row count + order-independent content hash
     * (bit_xor of per-row xxhash64 — commutative, so shard/task order
@@ -116,143 +114,76 @@ object CatalogStore {
     count(lit(1)),
     coalesce(expr("bit_xor(xxhash64(dataset_key, title, revision))"), lit(0L)))
 
-  /** A parsed `_COMMITTED` marker. `schema` is the snapshot's read schema
-    * (data columns plus `shard`); None for a marker written before the
-    * schema was carried.
+  /** Write the snapshot into a private staging dir, sharded, with its
+    * manifest computed by reading BACK the staged files (so it certifies
+    * what landed on disk, not what the writer meant to write) — everything
+    * after this is the CAS claim.
     */
-  private final case class Manifest(rows: Long, xor: Long, schema: Option[StructType])
+  private[graft] def stage(df: DataFrame, dir: String, version: Long): Path =
+    stage(df.sparkSession, dir, version) { st =>
+      val sharded = df.select(
+        col("dataset_key"),
+        col("title"),
+        col("revision"),
+        pmod(hash(col("dataset_key")), lit(Shards)).as("shard"))
+      val (rows, x) = manifestOf(
+        st.put("", sharded, "shard").select("dataset_key", "title", "revision"))
+      s"""{"rows":$rows,"xor":$x}"""
+    }
 
-  private val ManifestJson = """(?s)\{"rows":(-?\d+),"xor":(-?\d+)(?:,"schema":(\{.*\}))?\}""".r
-
-  private def parseManifest(s: String): Option[Manifest] = s.trim match {
-    case ManifestJson(rows, x, null) => Some(Manifest(rows.toLong, x.toLong, None))
-    case ManifestJson(rows, x, schema) =>
-      scala.util.Try(DataType.fromJson(schema)).toOption.collect {
-        case st: StructType => Manifest(rows.toLong, x.toLong, Some(st))
-      }
-    case _ => None
-  }
-
-  private def readMarker(f: FileSystem, marker: Path): Option[Manifest] = {
-    val buf = new Array[Byte](f.getFileStatus(marker).getLen.toInt)
-    val in = f.open(marker)
-    try in.readFully(0, buf)
-    finally in.close()
-    parseManifest(new String(buf, "UTF-8"))
-  }
-
-  /** Write the snapshot into a private staging dir and drop the commit
-    * marker — carrying the snapshot's read schema and its manifest,
-    * computed by reading BACK the staged files under that schema (so the
-    * manifest certifies what landed on disk, not what the writer meant to
-    * write) — everything after this is a single atomic rename.
+  /** The CAS publish: claim `v=N` with the staged snapshot. Exactly one
+    * claimant of a version succeeds; the loser throws loudly with its
+    * batch unpublished (re-read and retry is the caller's move). A
+    * marker-less `v=N` dir occupying the slot blocks the claim — clearing
+    * it is the explicit [[repair]] op, never this path.
     */
-  private[graft] def stage(df: DataFrame, dir: String, version: Long): Path = {
-    val spark = df.sparkSession
-    val staging = new Path(dir, s"_staging/v$version-${java.util.UUID.randomUUID()}")
-    val sharded = df.select(
-      col("dataset_key"),
-      col("title"),
-      col("revision"),
-      pmod(hash(col("dataset_key")), lit(Shards)).as("shard"))
-    sharded.write
-      .partitionBy("shard")
-      .mode("overwrite")
-      .parquet(staging.toString)
-    // file reads are nullable whatever the writer declared
-    val schema = StructType(sharded.schema.fields.map(_.copy(nullable = true)))
-    val (rows, x) = manifestOf(
-      spark.read.schema(schema).parquet(staging.toString).select("dataset_key", "title", "revision"))
-    val f = spark.sparkContext.hadoopConfiguration
-    val out = staging.getFileSystem(f).create(new Path(staging, Marker), false)
-    try out.write(s"""{"rows":$rows,"xor":$x,"schema":${schema.json}}""".getBytes("UTF-8"))
-    finally out.close()
-    staging
-  }
-
-  /** In-JVM claim serialization: the Spark driver is the commit
-    * coordinator (as in Delta's local log protocol), so two writer threads
-    * in one driver serialize here and the existence check below is
-    * race-free. Cross-process safety is the [[VersionCommitter]] seam's
-    * CONTRACT, selected per filesystem scheme: atomic no-overwrite rename
-    * where the filesystem has one (HDFS: atomic in the NameNode), a
-    * conditional-put claim on object stores whose copy-emulated rename
-    * would let two racers both "succeed" (CasProtocolSpec proves both
-    * directions against a non-atomic FS shim). RawLocalFileSystem alone
-    * would NOT suffice cross-thread — its rename can fall back to a copy
-    * INTO an existing destination dir — which is exactly what this lock
-    * forecloses.
-    */
-  private val commitLock = new Object
-
-  /** The CAS publish: claim `v=N` by renaming the staged snapshot onto it
-    * with NO overwrite. Exactly one claimant of a version succeeds; the
-    * loser throws loudly with its batch unpublished (re-read and retry is
-    * the caller's move). A marker-less `v=N` dir occupying the slot blocks
-    * the claim (it may be a rename in flight from another JVM) — clearing
-    * it is the explicit repair() op, never this path.
-    */
-  // CAS claim delegates to the shared [[CasProtocol]] — one
-  // implementation of the no-overwrite claim and its TOCTOU-safe failure
-  // handling for every versioned store
   private[graft] def commit(spark: SparkSession, dir: String, staging: Path, version: Long): Unit =
-    CasProtocol.claim(
-      spark, dir, staging, new Path(snapshotPath(dir, version)), version, commitLock,
-      () => isCommitted(fs(spark, dir), dir, version), "batch")
+    publish(spark, dir, staging, version)
 
-  /** Explicit crash-debris cleanup: deletes marker-less `v=N` dirs (a
-    * crashed writer's partial claim) and everything under `_staging`.
-    * MUST run with writers quiesced — a marker-less dir is
-    * indistinguishable from a rename in flight. Never touches committed
-    * versions. Returns the deleted paths.
+  /** Stage version `v` as the snapshot of version `before`, rewritten with
+    * one task per shard: HashPartitioning's partition id is
+    * pmod(murmur3(keys, seed 42), n) — the very expression the writer
+    * uses for the shard column (SQL hash() is the same murmur3/42) — so
+    * repartition(Shards, dataset_key) lands partition i == shard i
+    * exactly, and each shard is one file. A repartitionByRange(shard)
+    * only samples boundaries: with 16 distinct values two shards can
+    * coalesce into one partition and the co-location silently degrades.
     */
-  def repair(spark: SparkSession, dir: String): Seq[String] =
-    CasProtocol.repair(spark, dir, v => isCommitted(fs(spark, dir), dir, v))
+  protected def stageBase(spark: SparkSession, dir: String, v: Long, before: Long): Path =
+    stage(readVersion(spark, dir, before).repartition(Shards, col("dataset_key")), dir, v)
 
   /** Create the store with an initial catalog of (dataset_key, title,
     * revision) rows. Fails if already initialized.
     */
-  def init(spark: SparkSession, dir: String, initial: DataFrame): Long = {
-    require(currentVersion(spark, dir).isEmpty, s"catalog at $dir already initialized")
-    commit(spark, dir, stage(initial, dir, 1L), 1L)
-    1L
-  }
+  def init(spark: SparkSession, dir: String, initial: DataFrame): Long =
+    initWith(spark, dir)(stage(initial, dir, 1L))
+
+  /** The published version; a catalog that was never initialized fails. */
+  private def published(spark: SparkSession, dir: String): Long =
+    currentVersion(spark, dir)
+      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
 
   /** The published snapshot (shard column dropped — storage detail). */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val v = currentVersion(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
-    readVersion(spark, dir, v)
-  }
+  def read(spark: SparkSession, dir: String): DataFrame =
+    readVersion(spark, dir, published(spark, dir))
 
-  /** The committed marker of `version`, verified readable — the shared
-    * front half of every read path.
+  /** A published snapshot and the marker it is served under, re-read
+    * from disk (never the memo), so what a read verifies is the manifest
+    * as it stands now — the shared front half of every read path.
     */
-  private def markerManifest(spark: SparkSession, dir: String, version: Long): Manifest = {
-    val f = fs(spark, dir)
-    require(isCommitted(f, dir, version), s"v=$version was never published at $dir")
-    readMarker(f, new Path(snapshotPath(dir, version), Marker)).getOrElse(
-      throw new IllegalStateException(
-        s"v=$version at $dir: unreadable snapshot manifest in $Marker — refusing to serve"))
+  private def served(spark: SparkSession, dir: String, version: Long): (CatalogMeta, DataFrame) = {
+    val (m, schema) = servedSchema(spark, dir, version, "")
+    (m, spark.read.schema(schema).parquet(versionPath(dir, version)))
   }
-
-  /** The snapshot's files, read with the schema its marker declares (a
-    * pre-schema marker infers it: one footer-reading job).
-    */
-  private def snapshotFiles(spark: SparkSession, dir: String, version: Long, m: Manifest): DataFrame =
-    m.schema.fold(spark.read)(s => spark.read.schema(s)).parquet(snapshotPath(dir, version))
 
   /** The data columns of a published snapshot — its marker's schema minus
     * the `shard` storage detail. Runs no job unless the marker predates
-    * the schema field.
+    * the schema field and its files were never resolved.
     */
-  private[sources] def snapshotSchema(spark: SparkSession, dir: String, version: Long): StructType = {
-    val m = markerManifest(spark, dir, version)
-    val full = m.schema.getOrElse(snapshotFiles(spark, dir, version, m).schema)
-    StructType(full.fields.filterNot(_.name == "shard"))
-  }
+  private[sources] def snapshotSchema(spark: SparkSession, dir: String, version: Long): StructType =
+    StructType(servedSchema(spark, dir, version, "")._2.fields.filterNot(_.name == "shard"))
 
-  private def verify(dir: String, version: Long, m: Manifest, rows: Long, xor: Long): Unit =
+  private def verify(dir: String, version: Long, m: CatalogMeta, rows: Long, xor: Long): Unit =
     if (rows != m.rows || xor != m.xor)
       throw new IllegalStateException(
         s"v=$version at $dir is CORRUPT: manifest says rows=${m.rows} xor=${m.xor}, " +
@@ -271,12 +202,15 @@ object CatalogStore {
     * scan is cheap; an unparseable marker is treated as corruption, not
     * leniency.
     */
-  def readVersion(spark: SparkSession, dir: String, version: Long): DataFrame = {
-    val m = markerManifest(spark, dir, version)
-    val df = snapshotFiles(spark, dir, version, m).select("dataset_key", "title", "revision")
+  def readVersion(spark: SparkSession, dir: String, version: Long): DataFrame =
+    verified(spark, dir, version)._2
+
+  private def verified(spark: SparkSession, dir: String, version: Long): (CatalogMeta, DataFrame) = {
+    val (m, files) = served(spark, dir, version)
+    val df = files.select("dataset_key", "title", "revision")
     val (gotRows, gotXor) = manifestOf(df)
     verify(dir, version, m, gotRows, gotXor)
-    df
+    (m, df)
   }
 
   /** The DSv2 snapshot scan's driver materialization: the same loud-fail
@@ -296,7 +230,7 @@ object CatalogStore {
       spark: SparkSession, dir: String, version: Long,
       maxRows: Int, what: String)
       : (Array[org.apache.spark.sql.Row], StructType) = {
-    val m = markerManifest(spark, dir, version)
+    val (m, files) = served(spark, dir, version)
     // the metadata-scale bound is checked against the MANIFEST before
     // anything is collected (the published row count is part of the
     // atomic commit artifact), and the collect itself stops at maxRows+1
@@ -307,7 +241,7 @@ object CatalogStore {
     require(m.rows <= maxRows,
       s"$what: control-plane gather exceeded its declared domain bound of $maxRows rows " +
         s"(manifest says ${m.rows}) — the relation is not metadata-scale; keep it in the engine")
-    val df = snapshotFiles(spark, dir, version, m).select("dataset_key", "title", "revision")
+    val df = files.select("dataset_key", "title", "revision")
     val rows = df.coalesce(1).limit(maxRows + 1).collect()
     if (rows.length > m.rows)
       throw new IllegalStateException(
@@ -420,8 +354,7 @@ object CatalogStore {
     * current).
     */
   def upsert(spark: SparkSession, dir: String, changes: DataFrame): UpsertStats = {
-    val current = currentVersion(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
+    val current = published(spark, dir)
     val m = merged(readVersion(spark, dir, current), changes).localCheckpoint()
     val counts = m.groupBy(col("action")).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -430,7 +363,7 @@ object CatalogStore {
     if (ins + upd == 0) UpsertStats(current, 0L, 0L, unch)
     else {
       val next = current + 1
-      commit(spark, dir, stage(m, dir, next), next)
+      publish(spark, dir, stage(m, dir, next), next)
       UpsertStats(next, ins, upd, unch)
     }
   }
@@ -448,16 +381,14 @@ object CatalogStore {
     * probe is the only job.
     */
   def get(spark: SparkSession, dir: String, key: Any): Option[(String, Long)] = {
-    val current = currentVersion(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
-    val m = markerManifest(spark, dir, current)
+    val (_, files) = served(spark, dir, published(spark, dir))
     // seed 42 = the default of SQL hash(), which stage()'s pmod(hash(key))
     // partitioned by
     val h = org.apache.spark.sql.catalyst.expressions
       .Murmur3Hash(Seq(org.apache.spark.sql.catalyst.expressions.Literal(key)), 42)
       .eval(null).asInstanceOf[Int]
     val shard = ((h % Shards) + Shards) % Shards
-    snapshotFiles(spark, dir, current, m)
+    files
       .filter(col("shard") === shard && col("dataset_key") === lit(key))
       .select(col("title"), col("revision").cast("long"))
       .collect() // ≤1 row: snapshots are unique per key
@@ -475,11 +406,10 @@ object CatalogStore {
     * where two rows hold the title fails loudly too.
     */
   def findByTitle(spark: SparkSession, dir: String, title: String): Option[(Any, Long)] = {
-    val current = currentVersion(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
-    val m = markerManifest(spark, dir, current)
+    val current = published(spark, dir)
+    val (m, files) = served(spark, dir, current)
     val hit = col("title") === lit(title)
-    val r = snapshotFiles(spark, dir, current, m)
+    val r = files
       .agg(manifestCols.head, manifestCols.tail :+ count(when(hit, lit(1))) :+
         max(when(hit, struct(col("dataset_key"), col("revision").cast("long")))): _*)
       .head()
@@ -531,21 +461,20 @@ object CatalogStore {
         s"${r.getAs[String]("violation")}: ${r.getAs[Long]("n")} key(s), e.g. '${r.getAs[String]("example")}'")
       throw new IllegalArgumentException(s"delete rejected at $dir — ${detail.mkString("; ")}")
     }
-    val current = currentVersion(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
+    val current = published(spark, dir)
     val k = keys.select(col("dataset_key")).distinct()
     val nDoomed = k.count()
     if (nDoomed == 0) return DeleteStats(current, 0L)
     val survivors = readVersion(spark, dir, current).join(k, Seq("dataset_key"), "left_anti")
     val next = current + 1
-    commit(spark, dir, stage(survivors, dir, next), next)
+    publish(spark, dir, stage(survivors, dir, next), next)
     DeleteStats(next, nDoomed)
   }
 
   final case class CompactStats(version: Long, filesBefore: Long, filesAfter: Long, rows: Long)
 
-  private def dataFileCount(f: FileSystem, dir: String, version: Long): Long = {
-    val it = f.listFiles(new Path(snapshotPath(dir, version)), true)
+  private def dataFileCount(spark: SparkSession, dir: String, version: Long): Long = {
+    val it = fs(spark, dir).listFiles(new Path(versionPath(dir, version)), true)
     var n = 0L
     while (it.hasNext) {
       val s = it.next()
@@ -558,64 +487,41 @@ object CatalogStore {
     * needs: each upsert's snapshot carries tasks×shards part files, and
     * after N batches a metadata-scale catalog is thousands of tiny files
     * whose open/footer cost dominates reads. Rewrites the CURRENT
-    * snapshot with rows co-located per shard (one hash shuffle whose
-    * partition id provably equals the writer's shard id → exactly one
-    * file per shard) and publishes it through the SAME CAS
-    * path as any other writer, so compaction serializes against
-    * concurrent upserts instead of clobbering them — a racing batch makes
-    * the compactor lose loudly, like any optimistic writer.
+    * snapshot with exactly one file per shard ([[stageBase]]) and
+    * publishes it through the SAME CAS path as any other writer, so
+    * compaction serializes against concurrent upserts instead of
+    * clobbering them — a racing batch makes the compactor lose loudly,
+    * like any optimistic writer.
     *
-    * Content is proven unchanged, not assumed: the new snapshot's
-    * manifest (rows + order-independent xor) must equal the source
-    * version's, or compaction aborts with nothing published. No-ops when
-    * the snapshot is already at ≤ one file per shard.
+    * Content is proven unchanged, not assumed: the source is
+    * manifest-verified, and the core's compaction guard publishes the
+    * rewrite only if its staged manifest (rows + order-independent xor)
+    * equals the source's. No-ops when the snapshot is already at ≤ one
+    * file per shard.
     */
   def compact(spark: SparkSession, dir: String): CompactStats = {
-    val current = currentVersion(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no published catalog at $dir"))
-    val f = fs(spark, dir)
-    val before = dataFileCount(f, dir, current)
-    val df = readVersion(spark, dir, current) // manifest-verified source
-    val (srcRows, srcXor) = manifestOf(df)
-    if (before <= Shards) return CompactStats(current, before, before, srcRows)
+    val current = published(spark, dir)
+    val before = dataFileCount(spark, dir, current)
+    val (m, _) = verified(spark, dir, current)
+    if (before <= Shards) return CompactStats(current, before, before, m.rows)
     val next = current + 1
-    // one task per shard, GUARANTEED: HashPartitioning's partition id is
-    // pmod(murmur3(keys, seed 42), n) — the very expression the writer
-    // uses for the shard column (SQL hash() is the same murmur3/42) — so
-    // repartition(Shards, dataset_key) lands partition i == shard i
-    // exactly. A repartitionByRange(shard) only samples boundaries: with
-    // 16 distinct values two shards can coalesce into one partition and
-    // the one-file-per-shard co-location silently degrades.
-    val clustered = df.repartition(Shards, col("dataset_key"))
-    val staging = stage(clustered, dir, next)
-    // the staged manifest certifies what landed on disk; equality with the
-    // source manifest proves the rewrite moved every row and nothing else
-    val staged = readMarker(f, new Path(staging, Marker)).getOrElse(
-      throw new IllegalStateException(s"compaction staged an unreadable manifest at $staging"))
-    if (staged.rows != srcRows || staged.xor != srcXor) {
-      f.delete(staging, true)
-      throw new IllegalStateException(
-        s"compaction of v=$current would CHANGE content (rows $srcRows→${staged.rows}, " +
-          s"xor $srcXor→${staged.xor}) — aborted, nothing published")
-    }
-    commit(spark, dir, staging, next)
-    CompactStats(next, before, dataFileCount(f, dir, next), srcRows)
+    publishUnchanged(spark, dir, next, m.counts, stageBase(spark, dir, next, current))
+    CompactStats(next, before, dataFileCount(spark, dir, next), m.rows)
   }
 
   /** Version-retention GC — q85's execute side: drop all but the newest
-    * `keep` snapshots (the published one always survives) and sweep
-    * abandoned staging dirs. Pure directory removal; returns the versions
-    * reclaimed. Not concurrency-safe against in-flight writers (their
-    * staging may be swept) — run it like the reference runs maintenance,
-    * between imports.
+    * `keep` snapshots (the published one always survives: every version
+    * is a base, so the core's read chain is the current version alone)
+    * and sweep abandoned staging dirs. Pure directory removal; returns
+    * the versions reclaimed, ascending. Not concurrency-safe against
+    * in-flight writers (their staging may be swept) — run it like the
+    * reference runs maintenance, between imports.
     */
   def gcVersions(spark: SparkSession, dir: String, keep: Int): Seq[Long] = {
     require(keep >= 1, "must keep at least one version")
-    val f = fs(spark, dir)
-    val current = currentVersion(spark, dir).getOrElse(return Seq.empty)
-    val doomed = listVersions(spark, dir).reverse.drop(keep).filter(_ != current)
-    doomed.foreach(v => f.delete(new Path(snapshotPath(dir, v)), true))
-    f.delete(new Path(dir, "_staging"), true)
+    if (currentVersion(spark, dir).isEmpty) return Seq.empty
+    val doomed = gcHistory(spark, dir, keep - 1)
+    fs(spark, dir).delete(new Path(dir, "_staging"), true)
     doomed
   }
 }

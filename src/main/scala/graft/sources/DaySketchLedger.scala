@@ -95,6 +95,11 @@ private[sources] abstract class DaySketchLedger(sketch: String, input: String)
   protected def stageBase(spark: SparkSession, dir: String, v: Long, before: DayLedgerStats): Path =
     stageDays(spark, dir, v, "base", sketches(spark, dir), corpus(spark, dir))
 
+  /** Fold the chain into one base version, the view unchanged (a chain
+    * of one is a no-op).
+    */
+  def compact(spark: SparkSession, dir: String): DayLedgerStats = foldChain(spark, dir)
+
   /** Build v=1 from an events frame. Fails if already initialized.
     * `corpus` names the event corpus (e.g. the source dir) — recorded in
     * the marker and enforced on provenance-checked reads and appends.

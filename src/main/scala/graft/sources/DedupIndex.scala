@@ -144,6 +144,11 @@ object DedupIndex extends VersionedStore[DedupMeta]("dedup index", "index update
       stageIndex(spark, dir, cur + 1, "delta", bands, wk, newH, newS, newW, tag))
   }
 
+  /** Fold the chain into one base version, the view unchanged (a chain
+    * of one is a no-op).
+    */
+  def compact(spark: SparkSession, dir: String): IndexStats = foldChain(spark, dir)
+
   /** Maintenance policy: fold the chain once it exceeds `maxChain`
     * versions — what ingest applies after appends so read fan-in stays
     * bounded as batches accumulate. Content-preserving by compact's

@@ -405,6 +405,11 @@ object FreqStore extends VersionedStore[FreqMeta]("count store", "count update")
     publishOrDrop(spark, dir, cur, stageOnePass(spark, dir, cur + 1, "delta", fam, batch, tag))
   }
 
+  /** Fold the chain into one base version, the view unchanged (a chain
+    * of one is a no-op).
+    */
+  def compact(spark: SparkSession, dir: String): FreqStats = foldChain(spark, dir)
+
   /** Maintenance policy: fold the chain once it exceeds `maxChain`
     * versions — what ingest applies after appends so read fan-in stays
     * bounded as batches accumulate (an unbounded delta chain turns every

@@ -67,6 +67,11 @@ object IvfIndex extends VersionedStore[IvfMeta]("IVF index", "index update") {
   protected def stageBase(spark: SparkSession, dir: String, v: Long, before: IvfIndexStats): Path =
     stageIvf(spark, dir, v, "base", before.k, assign(spark, dir), Some(centroids(spark, dir)))
 
+  /** Fold the chain into one base version, the view unchanged (a chain
+    * of one is a no-op).
+    */
+  def compact(spark: SparkSession, dir: String): IvfIndexStats = foldChain(spark, dir)
+
   /** Build v=1 from a quantizer: the (vec_id, label) assignment and its
     * (clabel, cdim, sq, cnt) centroid table — either the corpus's own
     * labels (`Similarity.corpusQuantizer`, the identity quantizer q74

@@ -22,7 +22,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * ONLY task-committed files and publishes them as the next `v=N`
   * snapshot through [[CasProtocol.claim]] — marker-last, atomic rename on
   * HDFS/POSIX, conditional-put claim on object stores, exactly like
-  * CatalogStore/FreqStore/DedupIndex/IvfIndex.
+  * the six stores on the [[VersionedStore]] core.
   *
   * Why DSv2 here: Spark's connector commit protocol is the idiomatic
   * answer to partial-write visibility — speculative or failed task

@@ -21,25 +21,30 @@ private[sources] trait VersionMeta {
   def tag: Option[String] = None
 }
 
-/** The ONE version-chain implementation every LSM store shares
-  * ([[DedupIndex]], [[FreqStore]], [[IvfIndex]] and the day-sketch
-  * ledgers [[HllStore]] / [[KllStore]]). A store keeps only its marker
-  * codec (`parseMarker` plus the body its `stage` payload returns), its
-  * relations and its derive/merge rule; the mechanics live here:
+/** The ONE versioned-store implementation all six stores share: the
+  * LSM chains ([[DedupIndex]], [[FreqStore]], [[IvfIndex]] and the
+  * day-sketch ledgers [[HllStore]] / [[KllStore]]) and the dataset
+  * catalog ([[CatalogStore]], every version a base). A store keeps only
+  * its marker codec (`parseMarker` plus the body its `stage` payload
+  * returns), its relations and its derive/merge rule; the mechanics live
+  * here:
   *
   *  - Layout: `dir/v=N` holds one version — its relations plus a
-  *    `_COMMITTED` marker whose presence IS publication (CatalogStore's
-  *    rule); marker-less `v=N` dirs are crash debris, `_staging/` is
-  *    private to writers. The marker is the store's own JSON body with
-  *    one last field the core owns, `"schema":{"<rel>":<StructType
-  *    json>,…}`: each relation's read schema (the written schema with
-  *    every field nullable, as parquet reads it back). Every relation
-  *    read declares it, so no read runs a footer-reading inference job —
-  *    the schema lives in the commit, as in Delta's log. The core splits
-  *    the field off before the store's grammar parses the rest. A marker
-  *    written before the field existed still reads: its relations
-  *    resolve through [[graft.Tables.parquetSchema]] (one inference per
-  *    file identity).
+  *    `_COMMITTED` marker whose presence IS publication; marker-less
+  *    `v=N` dirs are crash debris, `_staging/` is private to writers.
+  *    A relation lives in `v=N/<rel>/`, or — the ROOT relation `""`, a
+  *    version's only relation when it has one — at `v=N/` itself,
+  *    possibly partitioned (the catalog's `v=N/shard=k/part-*`). The
+  *    marker is the store's own JSON body with one last field the core
+  *    owns, `"schema"`: each relation's read schema (the written schema
+  *    with every field nullable, as parquet reads it back), as
+  *    `{"<rel>":<StructType json>,…}`, or the root relation's bare
+  *    StructType json. Every relation read declares it, so no read runs
+  *    a footer-reading inference job — the schema lives in the commit,
+  *    as in Delta's log. The core splits the field off before the
+  *    store's grammar parses the rest. A marker written before the field
+  *    existed still reads: its relations resolve through
+  *    [[graft.Tables.parquetSchema]] (one inference per file identity).
   *  - Read chain: the newest base plus every later delta; a relation's
   *    view is the union of its chain copies, merged by the store.
   *  - Publish: stage into `_staging` through [[Staging.put]], read the
@@ -47,8 +52,8 @@ private[sources] trait VersionMeta {
   *    the recorded schemas), then claim `v=N` through the
   *    shared [[CasProtocol]] committer under this store's own in-JVM
   *    commit lock. A delta that adds nothing publishes no version.
-  *  - Compaction folds the chain into one base and publishes only when
-  *    the staged marker's parsed counts equal the chain's sums exactly.
+  *  - Compaction rewrites the view as one base and publishes only when
+  *    the staged marker's parsed counts equal the source's exactly.
   *
   * Marker-cache contract: committed markers are IMMUTABLE (a version is
   * created or deleted whole, never rewritten), so successful marker reads
@@ -59,8 +64,8 @@ private[sources] trait VersionMeta {
   * previous incarnation's markers for reused version numbers here (the
   * single-writer, no-out-of-band-deletion contract; route a foreign
   * re-init through this JVM's init/repair). The commit and repair
-  * predicates always re-read the marker uncached, so publishes are safe
-  * regardless.
+  * predicates, and [[servedSchema]], always re-read the marker uncached,
+  * so publishes are safe regardless.
   *
   * `noun` names the store in messages ("dedup index"); `what` names a
   * publish in a lost race's message ("index update").
@@ -107,9 +112,12 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
   private val SchemaField = ""","schema":{"""
   private val Json = new ObjectMapper()
 
+  private def structOf(json: String): StructType = DataType.fromJson(json).asInstanceOf[StructType]
+
   // the schema field is the body's last; the store's own fields never
   // hold `,"schema":{` (tags and corpus names are quote-free), so its
-  // first occurrence is the split point
+  // first occurrence is the split point. A bare StructType (a textual
+  // "type") is the root relation's; a relation map's values are objects
   private def parse(body: String): Option[Committed] = {
     val b = body.trim
     b.indexOf(SchemaField) match {
@@ -117,11 +125,11 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
       case i if b.endsWith("}") =>
         for {
           m <- parseMarker(b.substring(0, i) + "}")
-          s <- scala.util.Try(
-            Json.readTree(b.substring(i + SchemaField.length - 1, b.length - 1))
-              .properties().asScala
-              .map(e => e.getKey -> DataType.fromJson(e.getValue.toString).asInstanceOf[StructType])
-              .toMap).toOption
+          s <- scala.util.Try {
+            val field = Json.readTree(b.substring(i + SchemaField.length - 1, b.length - 1))
+            if (field.path("type").isTextual) Map("" -> structOf(field.toString))
+            else field.properties().asScala.map(e => e.getKey -> structOf(e.getValue.toString)).toMap
+          }.toOption
         } yield new Committed(m, Some(s))
       case _ => None
     }
@@ -135,7 +143,7 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
     // turns repair() into a committed-data reaper
     parse(readBody(f, p)).orElse(
       throw new IllegalStateException(
-        s"committed marker at $p is unreadable — $noun format migrated or marker " +
+        s"committed marker at $p is unreadable — $noun format migrated or manifest " +
           "corrupt; refusing to treat the version as uncommitted (repair would reap " +
           s"committed data). Restore the marker or rebuild the $noun at a fresh path."))
   }
@@ -199,19 +207,40 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
     vs.filter(v => lastBase.forall(v >= _))
   }
 
-  /** Relation `rel` of committed version `v`, read under the schema its
-    * marker declares; a pre-schema marker's relation resolves its schema
-    * through [[graft.Tables.parquetSchema]].
+  /** Where relation `rel` of version `v` lives: `v=N/<rel>`, or `v=N`
+    * itself for the root relation `""`.
     */
-  protected final def relation(
-      spark: SparkSession, dir: String, v: Long, rel: String): DataFrame = {
-    val path = s"${versionPath(dir, v)}/$rel"
-    val schema = readMeta(fs(spark, dir), dir, v).get.schemas match {
+  private def relationPath(dir: String, v: Long, rel: String): String =
+    if (rel.isEmpty) versionPath(dir, v) else s"${versionPath(dir, v)}/$rel"
+
+  // the schema marker `c` declares for `rel`; a pre-schema marker's
+  // relation resolves through the one footer-inference cache
+  private def schemaOf(
+      spark: SparkSession, dir: String, v: Long, rel: String, c: Committed): StructType =
+    c.schemas match {
       case Some(s) => s.getOrElse(rel, throw new IllegalStateException(
         s"$noun version $v at $dir holds no relation '$rel'"))
-      case None => graft.Tables.parquetSchema(spark, path)
+      case None => graft.Tables.parquetSchema(spark, relationPath(dir, v, rel))
     }
-    spark.read.schema(schema).parquet(path)
+
+  /** Relation `rel` of committed version `v`, read under the schema its
+    * (memoized) marker declares.
+    */
+  protected final def relation(
+      spark: SparkSession, dir: String, v: Long, rel: String): DataFrame =
+    spark.read.schema(schemaOf(spark, dir, v, rel, readMeta(fs(spark, dir), dir, v).get))
+      .parquet(relationPath(dir, v, rel))
+
+  /** Version `v`'s marker re-read from disk, bypassing the memo, and
+    * relation `rel`'s read schema under it — for a read that verifies
+    * what it serves against the marker as it stands now. A `v` that was
+    * never published fails (IllegalArgumentException).
+    */
+  protected final def servedSchema(
+      spark: SparkSession, dir: String, v: Long, rel: String): (M, StructType) = {
+    val c = readMetaUncached(fs(spark, dir), dir, v)
+    require(c.isDefined, s"v=$v was never published at $dir")
+    (c.get.meta, schemaOf(spark, dir, v, rel, c.get))
   }
 
   /** Relation `rel`'s copies over the read chain, unioned (not merged). */
@@ -228,12 +257,13 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
   protected final class Staging private[VersionedStore] (spark: SparkSession, dir: String) {
     private[VersionedStore] val schemas = mutable.LinkedHashMap.empty[String, StructType]
 
-    /** Write `df` as relation `rel`, record its read schema for the
-      * marker, and return the staged relation read back under it.
+    /** Write `df` as relation `rel` (`""`: the root relation, alone in its
+      * version), partitioned by `partitionBy`, record its read schema for
+      * the marker, and return the staged relation read back under it.
       */
-    def put(rel: String, df: DataFrame): DataFrame = {
-      val path = s"$dir/$rel"
-      df.write.mode("overwrite").parquet(path)
+    def put(rel: String, df: DataFrame, partitionBy: String*): DataFrame = {
+      val path = if (rel.isEmpty) dir else s"$dir/$rel"
+      df.write.partitionBy(partitionBy: _*).mode("overwrite").parquet(path)
       // file reads are nullable whatever the writer declared
       val schema = StructType(df.schema.fields.map(_.copy(nullable = true)))
       schemas(rel) = schema
@@ -253,9 +283,12 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
     val writer = new Staging(spark, staging.toString)
     val body = payload(writer).trim
     require(body.endsWith("}"), s"$noun marker body is not a JSON object: $body")
-    val schemas = writer.schemas.map { case (rel, s) => s""""$rel":${s.json}""" }.mkString(",")
+    val schemas = writer.schemas.toSeq match {
+      case Seq(("", root)) => root.json
+      case rels => rels.map { case (rel, s) => s""""$rel":${s.json}""" }.mkString("{", ",", "}")
+    }
     val out = fs(spark, dir).create(new Path(staging, CasProtocol.Marker), false)
-    try out.write((body.dropRight(1) + SchemaField + schemas + "}}").getBytes("UTF-8"))
+    try out.write((body.dropRight(1) + SchemaField.dropRight(1) + schemas + "}").getBytes("UTF-8"))
     finally out.close()
     staging
   }
@@ -264,7 +297,10 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
     parse(readBody(fs(spark, dir), new Path(staging, CasProtocol.Marker))).map(_.meta).getOrElse(
       throw new IllegalStateException(s"staged marker at $staging unreadable"))
 
-  private def commit(spark: SparkSession, dir: String, staging: Path, v: Long): Unit =
+  /** Claim `v` with the staged version `staging` through the CAS
+    * protocol; a lost race throws with nothing published.
+    */
+  protected final def publish(spark: SparkSession, dir: String, staging: Path, v: Long): Unit =
     CasProtocol.claim(
       spark, dir, staging, new Path(versionPath(dir, v)), v, commitLock,
       () => committed(spark, dir)(v), what)
@@ -273,7 +309,7 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
   protected final def initWith(spark: SparkSession, dir: String)(staged: => Path): Stats = {
     invalidate(dir)
     require(currentVersion(spark, dir).isEmpty, s"$noun at $dir already initialized")
-    commit(spark, dir, staged, 1L)
+    publish(spark, dir, staged, 1L)
     stats(spark, dir, 1L)
   }
 
@@ -286,7 +322,7 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
       fs(spark, dir).delete(staging, true)
       stats(spark, dir, cur)
     } else {
-      commit(spark, dir, staging, cur + 1)
+      publish(spark, dir, staging, cur + 1)
       stats(spark, dir, cur + 1)
     }
 
@@ -296,36 +332,45 @@ private[sources] abstract class VersionedStore[M <: VersionMeta](noun: String, w
     CasProtocol.repair(spark, dir, committed(spark, dir))
   }
 
-  /** Fold the base+delta chain into a single base version, keeping read
-    * fan-in bounded as deltas accumulate. The view is unchanged: the
-    * staged marker's parsed counts must equal the chain's sums, or
-    * nothing publishes. Earlier versions stay readable history.
+  /** The compaction guard: publish the staged rewrite `staging` as `v`
+    * only if its marker's parsed counts equal `want` (the source's)
+    * exactly; otherwise delete it and throw, nothing published.
     */
-  def compact(spark: SparkSession, dir: String): Stats = {
-    val cur = head(spark, dir)
-    if (readChain(spark, dir).size <= 1) return stats(spark, dir, cur) // already one base
-    val want = totals(spark, dir)
-    val before = statsOf(cur, meta(spark, dir, cur), want)
-    val staging = stageBase(spark, dir, cur + 1, before)
+  protected final def publishUnchanged(
+      spark: SparkSession, dir: String, v: Long, want: Seq[Long], staging: Path): Unit = {
     val got = stagedMeta(spark, dir, staging).counts
     if (got != want) {
       fs(spark, dir).delete(staging, true)
       throw new IllegalStateException(
-        s"compaction would CHANGE the $noun view (chain counts ${want.mkString(",")}, " +
+        s"compaction would CHANGE the $noun view (source counts ${want.mkString(",")}, " +
           s"staged ${got.mkString(",")}) — aborted")
     }
-    commit(spark, dir, staging, cur + 1)
+    publish(spark, dir, staging, v)
+  }
+
+  /** Fold the base+delta chain into a single base version, keeping read
+    * fan-in bounded as deltas accumulate. The view is unchanged: the
+    * staged marker's parsed counts must equal the chain's sums, or
+    * nothing publishes. Earlier versions stay readable history. A chain
+    * of one is a no-op.
+    */
+  protected final def foldChain(spark: SparkSession, dir: String): Stats = {
+    val cur = head(spark, dir)
+    if (readChain(spark, dir).size <= 1) return stats(spark, dir, cur) // already one base
+    val want = totals(spark, dir)
+    val before = statsOf(cur, meta(spark, dir, cur), want)
+    publishUnchanged(spark, dir, cur + 1, want, stageBase(spark, dir, cur + 1, before))
     stats(spark, dir, cur + 1)
   }
 
   /** Maintenance policy: fold the chain once it exceeds `maxChain`
-    * versions. Content-preserving by compact's invariant; a replayed
-    * compact of an already-short chain is a no-op.
+    * versions. Content-preserving by the fold's invariant; a replayed
+    * fold of an already-short chain is a no-op.
     */
   protected final def compactIfLonger(spark: SparkSession, dir: String, maxChain: Int): Stats = {
     require(maxChain >= 2, s"maxChain must be >= 2: $maxChain")
     val cur = head(spark, dir)
-    if (readChain(spark, dir).size > maxChain) compact(spark, dir)
+    if (readChain(spark, dir).size > maxChain) foldChain(spark, dir)
     else stats(spark, dir, cur)
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The persistent incremental dedup index (sources.DedupIndex): LSM
-  * base+delta versioning through the CatalogStore CAS protocol, q107
+  * base+delta versioning through the versioned-store core's CAS publish, q107
   * reading the stored artifacts instead of deriving the base, and the
   * incremental == rebuild equivalence that makes "maintain, don't
   * re-derive" an actual theorem about this code rather than a docstring.

@@ -6,8 +6,10 @@ import scala.jdk.CollectionConverters._
 
 /** Source-level guards over `src/main/scala/graft`: every driver
   * `.collect()` is an audited, bounded site, every main's session comes
-  * from the one factory, and no versioned-store reader infers a parquet
-  * schema except the core's one pre-schema fallback. Comment lines and imports are ignored; counts are per file,
+  * from the one factory, no versioned-store reader infers a parquet
+  * schema except the core's one pre-schema fallback, and only the
+  * versioned-store core and the sink call the CAS protocol. Comment
+  * lines and imports are ignored; counts are per file,
   * so moving a site within its file needs no edit here, and adding or
   * removing one does.
   */
@@ -57,10 +59,15 @@ class SourceGuardSpec extends AnyFunSuite {
 
   test("store readers declare their schema: the core's fallback is the one inference") {
     val stores = sources.filter(_._1.startsWith("sources/"))
-    // a DataFrameReader not followed by .schema(...) infers from footers;
-    // CatalogStore's pre-schema snapshot fallback is its one such reader
-    assert(sites(stores, """\.read\b(?!\.schema\()""".r) == Map("sources/CatalogStore.scala" -> 1))
-    // the LSM stores' pre-schema fallback: one resolution, in the core
+    // a DataFrameReader not followed by .schema(...) infers from footers
+    assert(sites(stores, """\.read\b(?!\.schema\()""".r) == Map.empty)
+    // every store's pre-schema fallback: one resolution, in the core
     assert(sites(stores, """parquetSchema\(""".r) == Map("sources/VersionedStore.scala" -> 1))
+  }
+
+  test("the CAS claim and repair run only in the versioned-store core and the sink") {
+    assert(sites(sources, """CasProtocol\.(?:claim|repair)\(""".r) ==
+      Map("sources/VersionedStore.scala" -> 2, "sources/VersionedSink.scala" -> 1),
+      "publish through VersionedStore (or VersionedSink), not a store's own CAS calls")
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import graft.sources.{DedupIndex, FreqStore, HllStore, IvfIndex, KllStore}
+import graft.sources.{CatalogStore, DedupIndex, FreqStore, HllStore, IvfIndex, KllStore}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -9,8 +9,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The contract every versioned LSM store shares, checked table-driven
-  * over all five (DedupIndex, FreqStore, IvfIndex, HllStore, KllStore):
+/** The contract every versioned store shares, checked table-driven over
+  * all six (DedupIndex, FreqStore, IvfIndex, HllStore, KllStore and
+  * CatalogStore, whose one relation is the root relation at `v=N`):
   * unreadable markers fail loudly and survive repair, marker-less debris
   * blocks a publish until repair, a deleted-and-re-initialized store
   * serves its new markers, and each store's v=1 marker bytes are pinned.
@@ -44,9 +45,13 @@ class StoreContractSpec extends AnyFunSuite {
   private def vectors(ids: Long*): DataFrame =
     ids.map(i => (i, 0, 10L + i)).toDF("vec_id", "dim", "q")
 
+  private def catalog(keys: Long*): DataFrame =
+    keys.map(k => (k, s"t$k", 1)).toDF("dataset_key", "title", "revision")
+
   /** One store under the contract. `init(dir, n)` builds v=1 from n units
-    * of input and returns the chain total its stats report; `append`
-    * adds one unit no earlier input holds; `rel` is a payload relation;
+    * of input and returns the chain total its stats report (the catalog:
+    * its snapshot's row count); `append` adds one unit no earlier input
+    * holds; `rel` is a payload relation (`""`: the root relation);
     * `reads` are the store's public relation views. `marker` is the v=1
     * marker `init(dir, 2)` writes; `preSchema` is the same marker as
     * written before markers carried relation schemas.
@@ -114,21 +119,44 @@ class StoreContractSpec extends AnyFunSuite {
       (d, n) => KllStore.init(spark, d, events(0L until n.toLong: _*), "contract").totalDays,
       d => KllStore.append(spark, d, events(100L), "contract").totalDays,
       KllStore.listVersions(spark, _), KllStore.repair(spark, _),
-      d => Seq(KllStore.sketches(spark, d))))
+      d => Seq(KllStore.sketches(spark, d))),
+    Store("CatalogStore", "",
+      """{"rows":2,"xor":3189361229453205932,"schema":{"type":"struct","fields":[""" +
+        """{"name":"dataset_key","type":"long","nullable":true,"metadata":{}},""" +
+        """{"name":"title","type":"string","nullable":true,"metadata":{}},""" +
+        """{"name":"revision","type":"integer","nullable":true,"metadata":{}},""" +
+        """{"name":"shard","type":"integer","nullable":true,"metadata":{}}]}}""",
+      """{"rows":2,"xor":3189361229453205932}""",
+      (d, n) => {
+        CatalogStore.init(spark, d, catalog(1L to n.toLong: _*))
+        CatalogStore.read(spark, d).count()
+      },
+      d => {
+        val st = CatalogStore.upsert(spark, d, catalog(100L))
+        st.inserted + st.updated + st.unchanged
+      },
+      CatalogStore.listVersions(spark, _), CatalogStore.repair(spark, _),
+      d => Seq(CatalogStore.read(spark, d))))
 
   private def markerBody(dir: String, v: Long): String =
     new String(Files.readAllBytes(Paths.get(s"$dir/v=$v/_COMMITTED")), "UTF-8")
 
-  /** The relation schemas a marker declares, by relation name. */
+  /** The relation schemas a marker declares, by relation name; a bare
+    * StructType is the root relation's (`""`).
+    */
   private def declared(body: String): Map[String, StructType] = {
     val field = ""","schema":{"""
     val i = body.indexOf(field)
     assert(i > 0 && body.endsWith("}}"), s"marker carries no schema field: $body")
-    new ObjectMapper().readTree(body.substring(i + field.length - 1, body.length - 1))
-      .properties().asScala
-      .map(e => e.getKey -> DataType.fromJson(e.getValue.toString).asInstanceOf[StructType])
-      .toMap
+    val tree = new ObjectMapper().readTree(body.substring(i + field.length - 1, body.length - 1))
+    def struct(json: String) = DataType.fromJson(json).asInstanceOf[StructType]
+    if (tree.path("type").isTextual) Map("" -> struct(tree.toString))
+    else tree.properties().asScala.map(e => e.getKey -> struct(e.getValue.toString)).toMap
   }
+
+  /** Where relation `rel` of version `v` lives (the root relation: `v=N`). */
+  private def relDir(dir: String, v: Long, rel: String): String =
+    if (rel.isEmpty) s"$dir/v=$v" else s"$dir/v=$v/$rel"
 
   /** Overwrite `dir`'s v=`v` marker in place, dropping the CRC sidecar
     * Hadoop's LocalFileSystem would check it against.
@@ -157,14 +185,14 @@ class StoreContractSpec extends AnyFunSuite {
       assert(e.getMessage.contains("unreadable"), s"unexpected: ${e.getMessage}")
       val e2 = intercept[IllegalStateException](s.list(dir))
       assert(e2.getMessage.contains("unreadable"), s"unexpected: ${e2.getMessage}")
-      assert(Files.exists(Paths.get(s"$dir/v=1/${s.rel}")), "repair reaped committed data")
+      assert(Files.exists(Paths.get(relDir(dir, 1L, s.rel))), "repair reaped committed data")
       assert(markerBody(dir, 1L) == """{"not":"a marker"}""")
     }
 
     test(s"${s.name}: marker-less debris blocks an append until repair reaps it") {
       val dir = tmp()
       val before = s.init(dir, 2)
-      Seq(1L).toDF("x").write.parquet(s"$dir/v=2/${s.rel}")
+      Seq(1L).toDF("x").write.parquet(relDir(dir, 2L, s.rel))
       val e = intercept[IllegalStateException](s.append(dir))
       assert(e.getMessage.contains("repair"), s"unexpected: ${e.getMessage}")
       assert(s.list(dir) == Seq(1L), "a blocked claim published something")
@@ -207,12 +235,15 @@ class StoreContractSpec extends AnyFunSuite {
       s.append(dir)
       for (v <- Seq(1L, 2L)) {
         val schemas = declared(markerBody(dir, v))
-        val rels = Files.list(Paths.get(s"$dir/v=$v")).toArray
+        val subdirs = Files.list(Paths.get(s"$dir/v=$v")).toArray
           .map(_.asInstanceOf[java.nio.file.Path]).filter(Files.isDirectory(_))
           .map(_.getFileName.toString).toSet
+        // a version whose subdirectories are all partition dirs (`k=v`)
+        // holds the root relation
+        val rels = if (subdirs.forall(_.contains("="))) Set("") else subdirs
         assert(schemas.keySet == rels, s"v=$v declares ${schemas.keySet}, holds $rels")
         schemas.foreach { case (rel, declaredSchema) =>
-          assert(declaredSchema == spark.read.parquet(s"$dir/v=$v/$rel").schema, s"v=$v/$rel")
+          assert(declaredSchema == spark.read.parquet(relDir(dir, v, rel)).schema, s"v=$v/$rel")
         }
       }
     }
