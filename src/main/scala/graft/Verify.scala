@@ -21,6 +21,11 @@ object Verify {
     // property would be a no-op); FAIR keeps one slow query from
     // starving the rest when several run concurrently below
     val spark = Session(extra = Map("spark.scheduler.mode" -> "FAIR"))
+    // the per-query pools below are meant as default pools (FIFO inside,
+    // weight 1), which an undeclared pool is; Spark still WARNs once per
+    // query that it was not configured, burying the failure lines
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.scheduler.FairSchedulableBuilder", org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
     // Queries are independent jobs; run several concurrently so the 32
     // local cores aren't idle between the small per-query jobs (Spark's

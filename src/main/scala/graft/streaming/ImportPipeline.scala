@@ -1,5 +1,10 @@
 package graft.streaming
 
+import java.util.concurrent.{
+  Callable, ConcurrentHashMap, ConcurrentLinkedQueue, Executors, Future, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -36,17 +41,36 @@ import graft.sources.CatalogStore
   *      (dataset_key, title, revision) rows upserted into the
   *      `CatalogStore` (populate_catalog's root-catalog update).
   *
+  * A batch's side-effects run as a small fixed set of concurrent
+  * branches (nothing reads another branch's output except where noted):
+  *   - the ACCEPTED chain, on the batch thread, writes the accepted docs,
+  *     copies their assets, then upserts the catalog;
+  *   - the QUARANTINE branch, started once the accepted write has cached
+  *     the validated batch, writes and counts the quarantined docs;
+  *   - after that publish, one MAINTAIN branch per maintained store
+  *     appends and compacts it (a train projection runs in its windoc
+  *     store's branch, after the delta it reads is committed).
+  * Every branch has joined before the batch returns or throws.
+  *
   * EXACTLY-ONCE across restarts, without a transactional sink: the
   * streaming checkpoint makes batch REPLAY the only failure mode (a crash
   * after side-effects but before the commit marker re-runs the same batch
   * id with the same file list), and every side-effect is idempotent under
-  * replay —
+  * replay, in whatever order the branches reached it —
   *   - accepted/quarantine parquet goes to a DETERMINISTIC per-batch dir
   *     (`batch=<id>`) in overwrite mode: a replay rewrites the same rows
-  *     at the same path;
+  *     at the same path. Nothing reads the quarantine dir inside the
+  *     batch, so its write may land before or after the catalog publish;
   *   - `CatalogStore.upsert` keeps the base row on revision ties, so
   *     re-applying an already-published change batch publishes nothing
-  *     (the store's documented replays-are-no-ops contract).
+  *     (the store's documented replays-are-no-ops contract);
+  *   - the catalog publishes before any maintained store is touched (the
+  *     order readers rely on: no store holds a batch the catalog has not
+  *     published), and each store append carries the batch tag, so on
+  *     replay a store that already committed the batch is a marker-scan
+  *     no-op while a sibling whose branch failed commits it once. The
+  *     stores have separate dirs, commit markers and tags, so no store's
+  *     outcome depends on another's.
   *
   * Scale shape: everything before the upsert is map-side per micro-batch
   * (the rules relation rides inside an explode); the upsert is the
@@ -60,9 +84,24 @@ object ImportPipeline {
   val inputSchema: StructType = StructType.fromDDL(
     "doc_id BIGINT, dataset_key STRING, title STRING, revision BIGINT, j STRING")
 
+  /** What one batch did. `stageMs` is each stage's wall time in ms —
+    * `quarantine`, `accepted`, `assets` (when assets are copied),
+    * `catalog`, and one entry per maintained store dir (projections
+    * included) when the batch maintained its stores. Branches overlap, so
+    * the times do not add up to the batch's. Timings are not part of a
+    * batch's identity: two stats compare equal on their counts alone.
+    */
   final case class BatchStats(
       batchId: Long, accepted: Long, quarantined: Long, publishedVersion: Long,
-      assetsCopied: Long = 0L)
+      assetsCopied: Long)(val stageMs: Map[String, Long])
+
+  object BatchStats {
+    /** Stats of a batch that ran no timed stage. */
+    def apply(
+        batchId: Long, accepted: Long, quarantined: Long, publishedVersion: Long,
+        assetsCopied: Long = 0L): BatchStats =
+      new BatchStats(batchId, accepted, quarantined, publishedVersion, assetsCopied)(Map.empty)
+  }
 
   /** The reference's `import_asset_file/task.py` EXECUTE step (S3 Batch
     * copy of each staged asset to its storage-bucket target key,
@@ -272,6 +311,55 @@ object ImportPipeline {
     rules
   }
 
+  /** The Spark job tag every job of a batch stage carries:
+    * `graft.ingest.<stage>`, the stage named as in [[BatchStats.stageMs]].
+    */
+  val StageTag = "graft.ingest."
+
+  /** Starts a batch branch: `op` runs on a pool thread of its own; the
+    * result is readable once the batch has joined.
+    */
+  private trait Fork { def apply[T](op: => T): Future[T] }
+
+  /** Runs `body` on the calling thread with a [[Fork]] onto a pool of
+    * `size` threads made for this call, then joins every forked branch
+    * before it returns or throws, so nothing a branch reads is released
+    * under it. A pool thread is made when its branch is forked, by the
+    * forking thread, so it inherits that thread's Spark local properties:
+    * the streaming query's job group (which `stop()` cancels), the SQL
+    * execution id and any caller's tags. The first failure in time is
+    * rethrown as it was thrown, the others attached to it as suppressed.
+    * A join interrupted by `stop()` interrupts the branches and still
+    * waits them out.
+    */
+  private def inBranches[A](name: String, size: Int)(body: Fork => A): A = {
+    val pool = Executors.newFixedThreadPool(size, (r: Runnable) => {
+      val t = new Thread(r, s"graft-ingest-$name")
+      t.setDaemon(true)
+      t
+    })
+    val failures = new ConcurrentLinkedQueue[Throwable]()
+    val out =
+      try Some(body(new Fork {
+        def apply[T](op: => T): Future[T] = pool.submit(new Callable[T] {
+          def call(): T = try op catch { case t: Throwable => failures.add(t); throw t }
+        })
+      }))
+      catch { case t: Throwable => failures.add(t); None }
+    pool.shutdown()
+    var interrupted = false
+    while (!pool.isTerminated)
+      try pool.awaitTermination(1, TimeUnit.MINUTES)
+      catch { case _: InterruptedException => interrupted = true; pool.shutdownNow() }
+    if (interrupted) Thread.currentThread().interrupt()
+    failures.asScala.toList match {
+      case first :: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case Nil => out.get
+    }
+  }
+
   private[graft] def processBatch(
       spark: SparkSession,
       batch: DataFrame,
@@ -333,14 +421,18 @@ object ImportPipeline {
         .join(badDocs.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .persist()
       try {
-        // deterministic per-batch dirs + overwrite = idempotent replay
-        quarantined.write.mode("overwrite").parquet(s"$quarantineDir/batch=$tag")
-        accepted.write.mode("overwrite").parquet(s"$acceptedDir/batch=$tag")
-        // the import_asset_file EXECUTE step: accepted docs' verified
-        // asset payloads land at their manifest target keys
-        val nAssets = (assetPayloads, assetLakeDir) match {
-          case (Some(p), Some(lake)) => copyAssets(accepted, p, lake, tag)
-          case _                     => 0L
+        val stageMs = new ConcurrentHashMap[String, Long]()
+        // a job tag, not a job group: a group would replace the streaming
+        // query's own, which stop() cancels
+        def stage[A](name: String)(op: => A): A = {
+          val jobTag = StageTag + name.replace(',', '_') // tags hold no commas
+          spark.sparkContext.addJobTag(jobTag)
+          val t0 = System.nanoTime()
+          try op
+          finally {
+            spark.sparkContext.removeJobTag(jobTag)
+            stageMs.put(name, (System.nanoTime() - t0) / 1000000L)
+          }
         }
         // The pipeline is the SINGLE serialized writer of the catalog it
         // publishes to and of its maintained stores (micro-batches run one
@@ -355,57 +447,90 @@ object ImportPipeline {
         // rewording can never silently disable self-repair)
         def withSelfRepair[A](repair: => Seq[String])(op: => A): A =
           graft.sources.CasProtocol.selfRepairing(repair)(op)
-        val stats = withSelfRepair(CatalogStore.repair(spark, catalogDir)) {
-          CatalogStore.upsert(
-            spark, catalogDir,
-            accepted.select(col("dataset_key"), col("title"), col("revision")))
-        }
-        // 6. MAINTAIN — append the accepted batch to the configured lake
-        // indexes, tagged with this batch's output tag so a replay after a
-        // crash-between-side-effects is a marker-scan no-op (exactly-once
-        // for the count-merge stores; the set stores are idempotent anyway)
-        if (!maintain.isEmpty && !accepted.isEmpty) {
-          val corpus = accepted.select(
-            col("doc_id"), col("dataset_key").as("source"), col("j").as("text"))
-          maintain.dedupIndexDir.foreach { d =>
-            withSelfRepair(graft.sources.DedupIndex.repair(spark, d)) {
-              graft.sources.DedupIndex.append(spark, d, corpus, tag = Some(tag))
-              graft.sources.DedupIndex.compactIfNeeded(spark, d, maintain.maxChain)
+        val storeDirs =
+          maintain.dedupIndexDir.toSeq ++ maintain.freqStoreDirs ++ maintain.trainFreqStoreDirs
+        var maintained = false
+        val (nAccepted, nQuarantined, version, nAssets) =
+          try inBranches(tag, 1 + storeDirs.size) { fork =>
+            // deterministic per-batch dirs + overwrite = idempotent replay
+            val nAccepted = stage("accepted") {
+              accepted.write.mode("overwrite").parquet(s"$acceptedDir/batch=$tag")
+              accepted.count()
             }
-          }
-          maintain.freqStoreDirs.foreach { d =>
-            withSelfRepair(graft.sources.FreqStore.repair(spark, d)) {
-              graft.sources.FreqStore.append(spark, d, corpus, tag = Some(tag))
-              graft.sources.FreqStore.compactIfNeeded(spark, d, maintain.maxChain)
+            // forked once the accepted write has cached the validated
+            // batch: started beside it, both writes would validate it
+            val nQuarantined = fork(stage("quarantine") {
+              quarantined.write.mode("overwrite").parquet(s"$quarantineDir/batch=$tag")
+              quarantined.count()
+            })
+            // the import_asset_file EXECUTE step: accepted docs' verified
+            // asset payloads land at their manifest target keys
+            val nAssets = (assetPayloads, assetLakeDir) match {
+              case (Some(p), Some(lake)) => stage("assets")(copyAssets(accepted, p, lake, tag))
+              case _                     => 0L
             }
-          }
-          // frozen-train stores get ONLY the train-bucket slice — an
-          // eval-bucket doc in a train-window store is unremovable
-          // contamination of the leakage audits (count-merge is additive)
-          maintain.trainFreqStoreDirs.foreach { d =>
-            withSelfRepair(graft.sources.FreqStore.repair(spark, d)) {
-              graft.sources.FreqStore.append(
-                spark, d, graft.operators.Dedup.leakTrainSlice(corpus), tag = Some(tag))
-              graft.sources.FreqStore.compactIfNeeded(spark, d, maintain.maxChain)
+            val published = stage("catalog") {
+              withSelfRepair(CatalogStore.repair(spark, catalogDir)) {
+                CatalogStore.upsert(
+                  spark, catalogDir,
+                  accepted.select(col("dataset_key"), col("title"), col("revision")))
+              }
             }
-          }
-          // projected frozen-train stores ride the windoc append that
-          // already happened above: one explode per batch, the train
-          // slice comes from the committed delta, not the corpus
-          maintain.trainProjections.foreach { p =>
-            withSelfRepair(graft.sources.FreqStore.repair(spark, p.dir)) {
-              graft.sources.FreqStore.appendWinSrcProjection(
-                spark, p.dir, p.windocDir, tag, graft.operators.Dedup.leakTrainSlice)
-              graft.sources.FreqStore.compactIfNeeded(spark, p.dir, maintain.maxChain)
+            // 6. MAINTAIN — append the accepted batch to the configured lake
+            // indexes, one branch per store, tagged with this batch's output
+            // tag so a replay after a crash-between-side-effects is a
+            // marker-scan no-op (exactly-once for the count-merge stores;
+            // the set stores are idempotent anyway)
+            if (!maintain.isEmpty && nAccepted > 0) {
+              maintained = true
+              val corpus = accepted.select(
+                col("doc_id"), col("dataset_key").as("source"), col("j").as("text"))
+              maintain.dedupIndexDir.foreach { d =>
+                fork(stage(d)(withSelfRepair(graft.sources.DedupIndex.repair(spark, d)) {
+                  graft.sources.DedupIndex.append(spark, d, corpus, tag = Some(tag))
+                  graft.sources.DedupIndex.compactIfNeeded(spark, d, maintain.maxChain)
+                }))
+              }
+              maintain.freqStoreDirs.foreach { d =>
+                fork {
+                  stage(d)(withSelfRepair(graft.sources.FreqStore.repair(spark, d)) {
+                    graft.sources.FreqStore.append(spark, d, corpus, tag = Some(tag))
+                    graft.sources.FreqStore.compactIfNeeded(spark, d, maintain.maxChain)
+                  })
+                  // projected frozen-train stores ride the windoc append
+                  // just committed: one explode per batch, the train slice
+                  // comes from the committed delta, not the corpus
+                  maintain.trainProjections.filter(_.windocDir == d).foreach { p =>
+                    stage(p.dir)(withSelfRepair(graft.sources.FreqStore.repair(spark, p.dir)) {
+                      graft.sources.FreqStore.appendWinSrcProjection(
+                        spark, p.dir, p.windocDir, tag, graft.operators.Dedup.leakTrainSlice)
+                      graft.sources.FreqStore.compactIfNeeded(spark, p.dir, maintain.maxChain)
+                    })
+                  }
+                }
+              }
+              // frozen-train stores get ONLY the train-bucket slice — an
+              // eval-bucket doc in a train-window store is unremovable
+              // contamination of the leakage audits (count-merge is additive)
+              maintain.trainFreqStoreDirs.foreach { d =>
+                fork(stage(d)(withSelfRepair(graft.sources.FreqStore.repair(spark, d)) {
+                  graft.sources.FreqStore.append(
+                    spark, d, graft.operators.Dedup.leakTrainSlice(corpus), tag = Some(tag))
+                  graft.sources.FreqStore.compactIfNeeded(spark, d, maintain.maxChain)
+                }))
+              }
             }
+            (nAccepted, nQuarantined, published.version, nAssets)
+          } finally {
+            // a session that both ingests AND audits (graft.lsh.cache on)
+            // must not serve pre-batch store views: the pipeline is the
+            // only legitimate in-session mutator, so it invalidates the
+            // session-cached merged views it made stale — also when a
+            // sibling store's branch failed after others committed
+            if (maintained) graft.operators.StoreViews.clear()
           }
-          // a session that both ingests AND audits (graft.lsh.cache on)
-          // must not serve pre-batch store views: the pipeline is the
-          // only legitimate in-session mutator, so it invalidates the
-          // session-cached merged views it just made stale
-          graft.operators.StoreViews.clear()
-        }
-        BatchStats(statsId, accepted.count(), quarantined.count(), stats.version, nAssets)
+        new BatchStats(statsId, nAccepted, nQuarantined.get(), version, nAssets)(
+          stageMs.asScala.toMap)
       } finally {
         quarantined.unpersist()
         accepted.unpersist()

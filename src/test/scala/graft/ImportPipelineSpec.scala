@@ -576,4 +576,97 @@ class ImportPipelineSpec extends AnyFunSuite {
     assert(quar.select(col("violated_rules")).head().getSeq[Int](0) == Seq(1, 2))
     assert(spark.read.parquet(s"$root/accepted/batch=0").isEmpty)
   }
+
+  /** A catalog at `root/catalog` plus three maintained stores seeded from
+    * a two-doc corpus (ids 101/102, TRAIN buckets): a dedup index, a
+    * corpus-wide count store and a frozen-train count store.
+    */
+  private def maintainedLake(root: String): ImportPipeline.MaintainedIndexes = {
+    import spark.implicits._
+    import graft.sources.{DedupIndex, FreqStore}
+    CatalogStore.init(spark, s"$root/catalog",
+      Seq(("ds-a", "Alpha v1", 1L)).toDF("dataset_key", "title", "revision"))
+    val seed = Seq(
+      (101L, "seed", "alpha beta gamma delta epsilon zeta eta theta"),
+      (102L, "seed", "iota kappa lambda mu nu xi omicron pi")).toDF("doc_id", "source", "text")
+    DedupIndex.init(spark, s"$root/dedup", seed, bands = 8)
+    FreqStore.init(spark, s"$root/freq", seed)
+    FreqStore.init(spark, s"$root/leak", graft.operators.Dedup.leakTrainSlice(seed))
+    ImportPipeline.MaintainedIndexes(
+      dedupIndexDir = Some(s"$root/dedup"), freqStoreDirs = Seq(s"$root/freq"),
+      trainFreqStoreDirs = Seq(s"$root/leak"))
+  }
+
+  /** Batch 0 of the maintained-lake tests: two accepted docs (ids 1 and
+    * 2, TRAIN buckets) and one quarantined.
+    */
+  private def batch0: DataFrame = {
+    import spark.implicits._
+    Seq(
+      doc(1L, "ds-a", "Alpha v2", 2L, valid = true),
+      doc(2L, "ds-c", "Gamma v1", 1L, valid = true),
+      doc(3L, "ds-d", "Delta v1", 1L, valid = false))
+      .toDF("doc_id", "dataset_key", "title", "revision", "j")
+  }
+
+  private def process(root: String, maintain: ImportPipeline.MaintainedIndexes) =
+    ImportPipeline.processBatch(
+      spark, batch0, 0L, s"$root/catalog", s"$root/accepted", s"$root/quarantine", rules,
+      maintain = maintain)
+
+  test("a maintained batch times each stage and tags every job with exactly one stage") {
+    val root = java.nio.file.Files.createTempDirectory("graft_import_stages").toString
+    val maintain = maintainedLake(root)
+    val (out, jobs) = JobProbe.probe(spark)(process(root, maintain))
+    val stats = out.get
+    assert(stats == ImportPipeline.BatchStats(0L, 2L, 1L, 2L), s"stats: $stats")
+    val stages =
+      Set("quarantine", "accepted", "catalog", s"$root/dedup", s"$root/freq", s"$root/leak")
+    assert(stats.stageMs.keySet == stages, s"stages: ${stats.stageMs}")
+    val stageTags = jobs.map(_.tags.filter(_.startsWith(ImportPipeline.StageTag)))
+    assert(jobs.nonEmpty && stageTags.forall(_.size == 1),
+      s"jobs without exactly one stage tag: ${jobs.zip(stageTags).filter(_._2.size != 1).map(_._1)}")
+    assert(stageTags.flatten.toSet == stages.map(ImportPipeline.StageTag + _),
+      "every stage runs jobs under its own tag")
+    assert(jobs.forall(_.endedInBlock), "a job outlived the batch")
+  }
+
+  test("a failing store branch fails the batch after its siblings commit; a replay completes it once") {
+    import graft.sources.{DedupIndex, FreqStore}
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_import_fail").toString
+    val lake = maintainedLake(root)
+    // a store this JVM has not listed yet (its markers are not memoized),
+    // with its committed marker made unreadable: its listing fails loudly
+    val broken = s"$root/freq_moved"
+    Files.move(Paths.get(s"$root/freq"), Paths.get(broken))
+    val maintain = lake.copy(freqStoreDirs = Seq(broken))
+    val marker = Paths.get(s"$broken/v=1/_COMMITTED")
+    val good = Files.readAllBytes(marker)
+    Files.deleteIfExists(Paths.get(s"$broken/v=1/._COMMITTED.crc"))
+    Files.write(marker, "not a marker".getBytes("UTF-8"))
+
+    val (out, jobs) = JobProbe.probe(spark)(process(root, maintain))
+    val e = out.failed.get
+    assert(e.isInstanceOf[IllegalStateException] && e.getMessage.contains(s"$broken/v=1"),
+      s"the broken store's own exception: $e")
+    // the catalog published first, and the sibling branches had finished
+    // when the batch threw: their versions are out, no job still runs
+    assert(CatalogStore.currentVersion(spark, s"$root/catalog").contains(2L))
+    assert(DedupIndex.currentVersion(spark, s"$root/dedup").contains(2L))
+    assert(FreqStore.currentVersion(spark, s"$root/leak").contains(2L))
+    assert(jobs.nonEmpty && jobs.forall(_.endedInBlock), "a job outlived the failed batch")
+
+    // the marker restored, the batch's replay commits it to the broken
+    // store once and is a no-op everywhere else
+    Files.write(marker, good)
+    assert(process(root, maintain) == ImportPipeline.BatchStats(0L, 2L, 1L, 2L))
+    assert(CatalogStore.listVersions(spark, s"$root/catalog") == Seq(1L, 2L))
+    assert(DedupIndex.listVersions(spark, s"$root/dedup") == Seq(1L, 2L))
+    assert(FreqStore.listVersions(spark, broken) == Seq(1L, 2L))
+    assert(FreqStore.listVersions(spark, s"$root/leak") == Seq(1L, 2L))
+    assert(DedupIndex.hashes(spark, s"$root/dedup").count() == 4L)
+    assert(FreqStore.totalDocs(spark, broken) == 4L)
+    assert(FreqStore.totalDocs(spark, s"$root/leak") == 4L)
+  }
 }

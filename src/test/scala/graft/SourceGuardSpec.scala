@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * `.collect()` is an audited, bounded site, every main's session comes
   * from the one factory, no versioned-store reader infers a parquet
   * schema except the core's one pre-schema fallback, and only the
-  * versioned-store core and the sink call the CAS protocol. Comment
+  * versioned-store core and the sink call the CAS protocol, and thread
+  * pools are made only where audited. Comment
   * lines and imports are ignored; counts are per file,
   * so moving a site within its file needs no edit here, and adding or
   * removing one does.
@@ -63,6 +64,14 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(sites(stores, """\.read\b(?!\.schema\()""".r) == Map.empty)
     // every store's pre-schema fallback: one resolution, in the core
     assert(sites(stores, """parquetSchema\(""".r) == Map("sources/VersionedStore.scala" -> 1))
+  }
+
+  test("thread pools are made only at the audited sites") {
+    // Verify's 8 query threads for the run; ImportPipeline's per-batch
+    // branch pool, shut down and joined before each batch returns
+    assert(sites(sources, """Executors\.new""".r) ==
+      Map("Verify.scala" -> 1, "streaming/ImportPipeline.scala" -> 1),
+      "a new pool must be bounded and short-lived: audit it and add it here")
   }
 
   test("the CAS claim and repair run only in the versioned-store core and the sink") {
