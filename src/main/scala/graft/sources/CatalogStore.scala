@@ -1,11 +1,17 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, sources => pushed}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{
+  BoundReference, Cast, EqualTo, EvalMode, Literal, Murmur3Hash, Predicate, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** A catalog version's manifest: row count and content hash. Every catalog
   * version is a base, so its read chain is the version alone and the
@@ -35,7 +41,7 @@ private[sources] final case class CatalogMeta(rows: Long, xor: Long) extends Ver
   * schema field, the CAS publish, repair and the gc walk; this object
   * keeps only what is the catalog's: the marker body `{"rows":N,"xor":X}`
   * (the snapshot manifest, see [[manifestOf]]), the keep-latest merge,
-  * create/delete validation, the verifying reads and the shard-pruned
+  * create/delete validation, the verifying reads and the driver-side
   * [[get]], and file compaction. The marker's schema is the snapshot's
   * read schema (data columns plus `shard`); a marker written before the
   * schema was carried resolves it through the core's one inference per
@@ -369,31 +375,77 @@ object CatalogStore extends VersionedStore[CatalogMeta]("catalog", "batch") {
   }
 
   /** Point lookup by dataset_key — the DynamoDB get-item analog
-    * (reference `datasets/get.py:28-55`, `get_dataset_single`). The shard
-    * is computed DRIVER-SIDE with the same Murmur3 hash the writer
-    * partitioned by, so the read PARTITION-PRUNES to 1/16th of the
-    * snapshot files before the key filter even runs — the point-read
-    * access path a metadata store needs at scale, no full-snapshot scan,
-    * no manifest re-verification (that is `readVersion`'s job). `key`
-    * must carry the snapshot's key TYPE (a Long-keyed store probes with a
-    * Long). Returns (title, revision-as-long), None when absent (the
-    * reference's 404). The read declares the marker's schema, so the
-    * probe is the only job.
+    * (reference `datasets/get.py:28-55`, `get_dataset_single`). No plan,
+    * no Spark job: the catalog is metadata-scale, so the get is served on
+    * the driver from one shard's files, the way a table log serves
+    * metadata reads from small files. The published version and its
+    * marker's schema are resolved as every verifying read does (the
+    * marker re-read from disk); the shard is computed DRIVER-SIDE with
+    * the same Murmur3 hash the writer partitioned by; only
+    * `v=N/shard=k` is listed (no directory: the key is absent), and its
+    * part files are read through Spark's own Parquet reader under the
+    * marker's data schema with the key equality pushed down. The key
+    * match and the `revision` cast are Catalyst expressions, so they are
+    * the DataFrame API's `col === lit(key)` and `.cast("long")`.
+    *
+    * Verified: a key held by two rows fails loudly (snapshots are unique
+    * per key). NOT verified: the manifest — a lost or extra file in this
+    * or another shard is `readVersion`'s and `findByTitle`'s to catch.
+    * `key` must carry the snapshot's key TYPE (a Long-keyed store probes
+    * with a Long): another type hashes to another shard, so it is refused.
+    * Returns (title, revision-as-long), None when absent (the reference's
+    * 404).
     */
   def get(spark: SparkSession, dir: String, key: Any): Option[(String, Long)] = {
-    val (_, files) = served(spark, dir, published(spark, dir))
+    val version = published(spark, dir)
+    val schema = snapshotSchema(spark, dir, version)
+    def bound(name: String) = {
+      val i = schema.fieldIndex(name)
+      BoundReference(i, schema(i).dataType, schema(i).nullable)
+    }
+    val probe = Literal(key)
+    val keyCol = bound("dataset_key")
+    require(keyCol.dataType == probe.dataType,
+      s"get at $dir: key $key is ${probe.dataType.simpleString}, " +
+        s"the snapshot's dataset_key is ${keyCol.dataType.simpleString}")
     // seed 42 = the default of SQL hash(), which stage()'s pmod(hash(key))
     // partitioned by
-    val h = org.apache.spark.sql.catalyst.expressions
-      .Murmur3Hash(Seq(org.apache.spark.sql.catalyst.expressions.Literal(key)), 42)
-      .eval(null).asInstanceOf[Int]
+    val h = Murmur3Hash(Seq(probe), 42).eval(null).asInstanceOf[Int]
     val shard = ((h % Shards) + Shards) % Shards
-    files
-      .filter(col("shard") === shard && col("dataset_key") === lit(key))
-      .select(col("title"), col("revision").cast("long"))
-      .collect() // ≤1 row: snapshots are unique per key
-      .headOption
-      .map(r => (r.getString(0), r.getLong(1)))
+    val files =
+      try fs(spark, dir).listStatus(new Path(versionPath(dir, version), s"shard=$shard"))
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    // the files a DataFrame read of the directory serves: hidden (`.`) and
+    // metadata (`_`) names are not data
+    val parts = files.filter(f => f.isFile && !f.getPath.getName.startsWith(".") &&
+      !f.getPath.getName.startsWith("_"))
+    if (parts.isEmpty) return None
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Seq(pushed.EqualTo("dataset_key", key)),
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
+    // interpreted: a generated predicate inlines a numeric key, so every
+    // new key would compile a class
+    val hit = Predicate.createInterpreted(EqualTo(keyCol, probe))
+    val conf = spark.sessionState.conf
+    val out = UnsafeProjection.create(Seq(bound("title"), Cast(
+      bound("revision"), LongType, Option(conf.sessionLocalTimeZone), EvalMode.fromSQLConf(conf))))
+    val toRow = CatalystTypeConverters.createToScalaConverter(
+      new StructType().add("title", schema("title").dataType).add("revision", LongType))
+    val hits = parts.toSeq.flatMap { f =>
+      val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath), 0L,
+        f.getLen, Array.empty[String], f.getModificationTime, f.getLen))
+      // no task closes it on the driver: a read that throws mid-file would
+      // leave the file open
+      try rows.filter(hit.eval).map(r => toRow(out(r)).asInstanceOf[Row]).toList
+      finally rows match {
+        case c: java.io.Closeable => c.close()
+        case _                    =>
+      }
+    }
+    if (hits.size > 1)
+      throw new IllegalStateException(
+        s"v=$version at $dir: ${hits.size} rows hold dataset_key '$key' — keys must be unique")
+    hits.headOption.map(r => (r.getString(0), r.getLong(1)))
   }
 
   /** Lookup by title — the `datasets_title_idx` GSI analog (reference
@@ -402,14 +454,17 @@ object CatalogStore extends VersionedStore[CatalogMeta]("catalog", "batch") {
     * cost of a secondary index the store doesn't materialize. The scan is
     * ONE aggregate that computes the manifest check (as [[readVersion]]
     * does) and the title match together, so a corrupt snapshot still
-    * fails loudly. [[createViolations]] keeps titles unique; a snapshot
-    * where two rows hold the title fails loudly too.
+    * fails loudly; it runs over one partition, so the global aggregate
+    * plans no exchange and the whole lookup is one job (AQE would run a
+    * partial-then-final aggregate as two). [[createViolations]] keeps
+    * titles unique; a snapshot where two rows hold the title fails
+    * loudly too.
     */
   def findByTitle(spark: SparkSession, dir: String, title: String): Option[(Any, Long)] = {
     val current = published(spark, dir)
     val (m, files) = served(spark, dir, current)
     val hit = col("title") === lit(title)
-    val r = files
+    val r = files.coalesce(1)
       .agg(manifestCols.head, manifestCols.tail :+ count(when(hit, lit(1))) :+
         max(when(hit, struct(col("dataset_key"), col("revision").cast("long")))): _*)
       .head()

@@ -401,7 +401,9 @@ object ImportPipeline {
         .filter(col("violated") === 1)
         .groupBy(col("doc_id"))
         .agg(sort_array(collect_set(col("rule_id"))).as("violated_rules"))
-      val badDocs = assetPayloads match {
+      // cached: the quarantine and accepted sides both join it, and each
+      // would otherwise re-run the rules (and asset) aggregation
+      val badDocs = (assetPayloads match {
         case None =>
           badRules.withColumn("n_bad_assets", lit(0L))
         case Some(payloads) =>
@@ -415,7 +417,7 @@ object ImportPipeline {
               col("doc_id"),
               coalesce(col("violated_rules"), array().cast("array<int>")).as("violated_rules"),
               coalesce(col("n_bad_assets"), lit(0L)).as("n_bad_assets"))
-      }
+      }).persist()
       val quarantined = imported.join(badDocs, Seq("doc_id")).persist()
       val accepted = imported
         .join(badDocs.select(col("doc_id")), Seq("doc_id"), "left_anti")
@@ -534,6 +536,7 @@ object ImportPipeline {
       } finally {
         quarantined.unpersist()
         accepted.unpersist()
+        badDocs.unpersist()
       }
     } finally imported.unpersist()
   }

@@ -547,7 +547,7 @@ class CatalogStoreSpec extends AnyFunSuite {
     assert(CatalogStore.get(spark, dir, "k1").contains(("string-key", 1L)))
   }
 
-  test("reads declare the marker's schema: get is one job, findByTitle infers nothing") {
+  test("reads declare the marker's schema: get runs no job, findByTitle is one job and infers nothing") {
     val dir = tmp()
     CatalogStore.init(spark, dir, base())
     val r = base().orderBy(col("dataset_key")).head()
@@ -556,11 +556,94 @@ class CatalogStoreSpec extends AnyFunSuite {
     assert(marker.contains("\"schema\":{"), s"marker: $marker")
     val (got, getJobs) = JobProbe.jobs(spark)(CatalogStore.get(spark, dir, k))
     assert(got.contains((t, 1L)))
-    assert(getJobs.size == 1, s"get ran ${getJobs.size} jobs:\n${getJobs.mkString("\n--\n")}")
+    assert(getJobs.isEmpty, s"get ran ${getJobs.size} jobs:\n${getJobs.mkString("\n--\n")}")
+    // a miss is served on the driver too
+    val (miss, missJobs) = JobProbe.jobs(spark)(CatalogStore.get(spark, dir, -987654321L))
+    assert(miss.isEmpty && missJobs.isEmpty, s"miss jobs:\n${missJobs.mkString("\n--\n")}")
+    // the scan, the manifest check and the title match: one job
     val (found, findJobs) = JobProbe.jobs(spark)(CatalogStore.findByTitle(spark, dir, t))
     assert(found.contains((k, 1L)))
-    assert(findJobs.nonEmpty && !findJobs.exists(JobProbe.isInference),
+    assert(findJobs.size == 1 && !findJobs.exists(JobProbe.isInference),
       s"findByTitle jobs:\n${findJobs.mkString("\n--\n")}")
+  }
+
+  /** The shard the writer's pmod(hash(key), 16) puts `key` in. */
+  private def shardOf(key: Any): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
+    val h = Murmur3Hash(Seq(Literal(key)), 42).eval(null).asInstanceOf[Int]
+    ((h % 16) + 16) % 16
+  }
+
+  test("a get whose shard has no directory is a miss") {
+    import spark.implicits._
+    val dir = tmp()
+    CatalogStore.init(spark, dir, Seq((1L, "only", 1)).toDF("dataset_key", "title", "revision"))
+    val absent = (2L to 1000L).find(k => shardOf(k) != shardOf(1L)).get
+    assert(!new java.io.File(s"$dir/v=1/shard=${shardOf(absent)}").exists,
+      "fixture: the probed shard must have no directory")
+    val (got, jobs) = JobProbe.jobs(spark)(CatalogStore.get(spark, dir, absent))
+    assert(got.isEmpty && jobs.isEmpty, s"jobs:\n${jobs.mkString("\n--\n")}")
+    assert(CatalogStore.get(spark, dir, 1L).contains(("only", 1L)))
+  }
+
+  test("a String-keyed store serves gets; a probe of another key type is refused") {
+    import spark.implicits._
+    val dir = tmp()
+    val rows = (1 to 40).map(i => (s"ds-$i", s"title-$i", i % 3 + 1))
+    CatalogStore.init(spark, dir, rows.toDF("dataset_key", "title", "revision"))
+    rows.foreach { case (k, t, rev) =>
+      assert(CatalogStore.get(spark, dir, k).contains((t, rev.toLong)), s"key $k")
+    }
+    assert(CatalogStore.get(spark, dir, "ds-404").isEmpty)
+    val e = intercept[IllegalArgumentException](CatalogStore.get(spark, dir, 1L))
+    assert(e.getMessage.contains("dataset_key is string"), s"got: ${e.getMessage}")
+  }
+
+  test("get agrees with a DataFrame probe for every key of a multi-file snapshot, before and after compaction") {
+    val dir = tmp()
+    // the compaction test's fragmentation: 25 merge tasks, co-prime with
+    // the 16 shards, so a shard holds several part files
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "25")
+    try {
+      CatalogStore.init(spark, dir, base())
+      CatalogStore.upsert(spark, dir, changes())
+      CatalogStore.upsert(spark, dir, changes().withColumn("revision", col("revision") + 10))
+    } finally {
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      spark.conf.set("spark.sql.shuffle.partitions", "4")
+    }
+    // the reference: the DataFrame API's key match and cast over the same
+    // files, every row at once
+    def agrees(): Unit = {
+      val v = CatalogStore.currentVersion(spark, dir).get
+      val rows = spark.read.parquet(s"$dir/v=$v")
+        .select(col("dataset_key"), col("title"), col("revision").cast("long")).collect()
+      val want = rows.map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+      assert(want.size == rows.length && rows.nonEmpty)
+      (want.keys ++ Seq(-987654321L, 123456789L)).foreach { k =>
+        assert(CatalogStore.get(spark, dir, k) == want.get(k), s"key $k at v=$v")
+      }
+    }
+    val shardFiles = new java.io.File(s"$dir/v=3").listFiles()
+      .filter(_.getName.startsWith("shard="))
+      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
+    assert(shardFiles.exists(_ > 1), "fixture: some shard must hold several part files")
+    agrees()
+    assert(CatalogStore.compact(spark, dir).version == 4L)
+    agrees()
+  }
+
+  test("a get of a key held by two rows fails loudly") {
+    val dir = tmp()
+    CatalogStore.init(spark, dir, base())
+    val k = base().orderBy(col("dataset_key")).head().getAs[Long]("dataset_key")
+    val part = new java.io.File(s"$dir/v=1/shard=${shardOf(k)}").listFiles()
+      .filter(_.getName.endsWith(".parquet")).maxBy(_.length)
+    java.nio.file.Files.copy(
+      part.toPath, new java.io.File(part.getParentFile, "part-99999-dup.parquet").toPath)
+    val e = intercept[IllegalStateException](CatalogStore.get(spark, dir, k))
+    assert(e.getMessage.contains(s"2 rows hold dataset_key '$k'"), s"got: ${e.getMessage}")
   }
 
   test("a marker written without a schema still reads, through one inference") {

@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * `.collect()` is an audited, bounded site, every main's session comes
   * from the one factory, no versioned-store reader infers a parquet
   * schema except the core's one pre-schema fallback, and only the
-  * versioned-store core and the sink call the CAS protocol, and thread
+  * versioned-store core and the sink call the CAS protocol, only the
+  * catalog's point get reads Parquet on the driver, and thread
   * pools are made only where audited. Comment
   * lines and imports are ignored; counts are per file,
   * so moving a site within its file needs no edit here, and adding or
@@ -40,8 +41,8 @@ class SourceGuardSpec extends AnyFunSuite {
     "operators/Lake.scala" -> 1, // rules file, limit(10001)
     "operators/TextAnalysis.scala" -> 1, // limit(want) candidate pairs
     // verified collect limit(maxRows + 1); violation kinds (≤ 2 rows, twice);
-    // one row per merge action; a point get (≤ 1 row)
-    "sources/CatalogStore.scala" -> 5,
+    // one row per merge action
+    "sources/CatalogStore.scala" -> 4,
     "streaming/ImportPipeline.scala" -> 2) // limit(5) error samples, twice
 
   test("every driver .collect() is one of the audited, bounded sites") {
@@ -64,6 +65,13 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(sites(stores, """\.read\b(?!\.schema\()""".r) == Map.empty)
     // every store's pre-schema fallback: one resolution, in the core
     assert(sites(stores, """parquetSchema\(""".r) == Map("sources/VersionedStore.scala" -> 1))
+  }
+
+  test("only the catalog's point get reads Parquet on the driver") {
+    // one shard's files of a metadata-scale store; anything bigger is a
+    // Spark job's to read
+    assert(sites(sources, """buildReader(?:WithPartitionValues)?\(""".r) ==
+      Map("sources/CatalogStore.scala" -> 1))
   }
 
   test("thread pools are made only at the audited sites") {
