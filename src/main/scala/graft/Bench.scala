@@ -87,7 +87,7 @@ object Bench {
     // (Dedup.evalPos under graft.lsh.cache) — build it here, priced,
     // not in whichever of q120/q143/q146 happens to run first
     graft.operators.Dedup.primeLeakEval(Tables(spark, sfDir))
-    // likewise the session store VIEWS (StoreViews): materialized now,
+    // likewise the session store VIEWS (SessionCache): materialized now,
     // priced in prep_stores_s, never hidden in a discarded first rep
     graft.operators.Dedup.primeStoreViews(Tables(spark, sfDir))
     val prepStoresS = math.rint((System.nanoTime() - tStores) / 1e7) / 100

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Dev tool: audits the physical plan of every query against the scale
   * invariants in SURVEY.md §5 and prints one line per query.
   *
@@ -1083,6 +1085,62 @@ object PlanAudit {
     Set("q113_substring_windows", "q122_window_novelty", "q159_context_entropy",
       "q164_kn_continuation")
 
+  /** The queries a mode audits, in name order: the store consumers in
+    * `stores` mode, every query otherwise.
+    */
+  private def auditSet(storesMode: Boolean)
+      : Seq[(String, (SparkSession, String) => DataFrame)] =
+    (if (storesMode) SparkEntry.queries.filter(q => storeExchangeBudget.contains(q._1))
+     else SparkEntry.queries).toSeq.sortBy(_._1)
+
+  /** One `OK  ` or `WARN` line per audited query: the default and `scale`
+    * modes' audit and `stores` mode's first, uncached pass. The session's
+    * confs (broadcast threshold, store confs) must already be set.
+    */
+  def auditLines(
+      spark: SparkSession,
+      sfDir: String,
+      scaleMode: Boolean,
+      storesMode: Boolean): Seq[String] =
+    auditSet(storesMode).map { case (name, fn) =>
+      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+      val exchanges = "Exchange".r.findAllIn(plan).length - "BroadcastExchange".r.findAllIn(plan).length
+      val issues = Seq.newBuilder[String]
+      val budget = if (storesMode) storeExchangeBudget else exchangeBudget
+      if (!scaleMode && exchanges > budget(name))
+        issues += s"shuffles=$exchanges>budget=${budget(name)}"
+      if (!scaleMode && !storesMode && expectBroadcast(name) && !plan.contains("BroadcastExchange"))
+        issues += "no-broadcast"
+      if (storesMode && !plan.contains("v="))
+        issues += "no-store-read"
+      if (storesMode && storeCorpusFree(name) && plan.contains("documents.parquet"))
+        issues += "corpus-scan-in-store-path"
+      if (!allowCross(name) && plan.contains("Cross")) issues += "cartesian"
+      // flag only a Filter whose direct child scan pushed nothing — a filter
+      // on a window/join-computed column legitimately can't push down
+      val lines = plan.linesIterator.toVector
+      val badPush = lines.zipWithIndex.exists { case (l, i) =>
+        l.contains("Filter (") && lines.drop(i + 1).headOption.exists(n =>
+          n.contains("FileScan") && n.contains("PushedFilters: []"))
+      }
+      // stores mode: the leakage trio's eval-slice filter is a computed
+      // md5 bucket directly above the documents scan — inherently
+      // unpushable (q103's engine-stable split is the point); the train
+      // side reads the store, only the 10% eval share scans at all
+      val storesUnpushed = storesMode && Set(
+        "q120_split_leakage", "q143_leakage_by_source", "q146_leak_severity")(name)
+      if (badPush && !allowUnpushed(name) && !storesUnpushed)
+        issues += "unpushed-scan-filter"
+      // an unpartitioned window serializes the whole relation through one
+      // task — only legal over a provably tiny relation (q83's per-batch
+      // maxima: |batches| rows, bounded by stream duration, not volume)
+      val globalWindow = plan.linesIterator.exists(l =>
+        l.contains("Window ") && l.contains("], [], ["))
+      if (globalWindow && !allowGlobalWindow(name)) issues += "unpartitioned-window"
+      val i = issues.result()
+      f"${if (i.isEmpty) "OK  " else "WARN"} $name%-26s shuffles=$exchanges%-2d ${i.mkString(", ")}"
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     // `scale` mode: disable AUTO broadcasts (tiny-SF accidents that hide
@@ -1179,48 +1237,9 @@ object PlanAudit {
     // bench session's actual store-backed shapes
     if (storesMode)
       StoreSet.provision(spark, sfDir, storesTmp).foreach(s => spark.conf.set(s.conf, s.path))
-    val auditSet =
-      if (storesMode) SparkEntry.queries.filter(q => storeExchangeBudget.contains(q._1))
-      else SparkEntry.queries
-    var warns = 0
-    auditSet.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-      val exchanges = "Exchange".r.findAllIn(plan).length - "BroadcastExchange".r.findAllIn(plan).length
-      val issues = Seq.newBuilder[String]
-      val budget = if (storesMode) storeExchangeBudget else exchangeBudget
-      if (!scaleMode && exchanges > budget(name))
-        issues += s"shuffles=$exchanges>budget=${budget(name)}"
-      if (!scaleMode && !storesMode && expectBroadcast(name) && !plan.contains("BroadcastExchange"))
-        issues += "no-broadcast"
-      if (storesMode && !plan.contains("v="))
-        issues += "no-store-read"
-      if (storesMode && storeCorpusFree(name) && plan.contains("documents.parquet"))
-        issues += "corpus-scan-in-store-path"
-      if (!allowCross(name) && plan.contains("Cross")) issues += "cartesian"
-      // flag only a Filter whose direct child scan pushed nothing — a filter
-      // on a window/join-computed column legitimately can't push down
-      val lines = plan.linesIterator.toVector
-      val badPush = lines.zipWithIndex.exists { case (l, i) =>
-        l.contains("Filter (") && lines.drop(i + 1).headOption.exists(n =>
-          n.contains("FileScan") && n.contains("PushedFilters: []"))
-      }
-      // stores mode: the leakage trio's eval-slice filter is a computed
-      // md5 bucket directly above the documents scan — inherently
-      // unpushable (q103's engine-stable split is the point); the train
-      // side reads the store, only the 10% eval share scans at all
-      val storesUnpushed = storesMode && Set(
-        "q120_split_leakage", "q143_leakage_by_source", "q146_leak_severity")(name)
-      if (badPush && !allowUnpushed(name) && !storesUnpushed)
-        issues += "unpushed-scan-filter"
-      // an unpartitioned window serializes the whole relation through one
-      // task — only legal over a provably tiny relation (q83's per-batch
-      // maxima: |batches| rows, bounded by stream duration, not volume)
-      val globalWindow = plan.linesIterator.exists(l =>
-        l.contains("Window ") && l.contains("], [], ["))
-      if (globalWindow && !allowGlobalWindow(name)) issues += "unpartitioned-window"
-      val tag = { val i = issues.result(); if (i.isEmpty) "OK  " else { warns += 1; "WARN" } }
-      println(f"$tag $name%-26s shuffles=$exchanges%-2d ${issues.result().mkString(", ")}")
-    }
+    val lines = auditLines(spark, sfDir, scaleMode, storesMode)
+    lines.foreach(println)
+    var warns = lines.count(_.startsWith("WARN"))
     // stores mode, second pass: the BENCH session's actual plans (session
     // cache on, views primed). Exchange budgets don't apply — the cached
     // views print their build lineage inside InMemoryRelation, inflating
@@ -1234,7 +1253,7 @@ object PlanAudit {
       graft.operators.Dedup.primePairCache(t)
       graft.operators.Dedup.primeLeakEval(t)
       graft.operators.Dedup.primeStoreViews(t)
-      auditSet.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      auditSet(storesMode).foreach { case (name, fn) =>
         val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
         val issues = Seq.newBuilder[String]
         if (!plan.contains("v=") && !plan.contains("InMemoryTableScan"))
@@ -1247,7 +1266,7 @@ object PlanAudit {
         println(f"$tag $name%-26s [cached] ${i.mkString(", ")}")
       }
       spark.conf.unset("graft.lsh.cache")
-      graft.operators.Dedup.clearPairCache()
+      graft.operators.SessionCache.clear()
     }
     println(s"${if (warns == 0) "ALL OK" else s"$warns warnings"}")
     spark.stop()

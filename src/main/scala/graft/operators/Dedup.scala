@@ -131,7 +131,7 @@ object Dedup extends QueryModule {
     * of re-deriving the band join.
     */
   private def lshCandidates(t: Tables): DataFrame =
-    if (pairCacheOn(t))
+    if (SessionCache.on(t.spark))
       pairStats(t).select(col("doc_a"), col("doc_b"), col("n_shared_bands"))
     else {
       // (band, sig) rows straight off the kernel array via posexplode —
@@ -163,12 +163,6 @@ object Dedup extends QueryModule {
   // candidate relation. Cached ≡ derived is pinned in DedupSpec's
   // pair-cache test; every consumer computes its own floats from the
   // integers, so rounding disciplines are untouched.
-
-  private val pairStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def pairCacheOn(t: Tables): Boolean =
-    t.spark.conf.get("graft.lsh.cache", "false").toBoolean
 
   /** (doc_a, doc_b, n_shared_bands, first_band, shared, nsh_a, nsh_b) —
     * every LSH candidate pair with its integer statistics: bands agreeing
@@ -210,7 +204,7 @@ object Dedup extends QueryModule {
     * discard the build from whichever family query ran first.
     */
   def primePairCache(t: Tables): Long =
-    if (pairCacheOn(t))
+    if (SessionCache.on(t.spark))
       pairStats(t).count() + components(t).count() + sourceShingles(t).count() +
         cdcChunks(t).count()
     else 0L
@@ -221,7 +215,7 @@ object Dedup extends QueryModule {
     * min-of-2 discard the first consumer's build.
     */
   def primeLeakEval(t: Tables): Long =
-    if (pairCacheOn(t) && t.spark.conf.get("graft.leak.store", "").nonEmpty)
+    if (SessionCache.on(t.spark) && t.spark.conf.get("graft.leak.store", "").nonEmpty)
       evalPos(t, windowK(t)).count()
     else 0L
 
@@ -233,7 +227,7 @@ object Dedup extends QueryModule {
     * discarded first rep happened to trigger it.
     */
   def primeStoreViews(t: Tables): Long =
-    if (!pairCacheOn(t)) 0L
+    if (!SessionCache.on(t.spark)) 0L
     else {
       val k = windowK(t)
       // family-validate BEFORE building each view (the consumers'
@@ -247,7 +241,7 @@ object Dedup extends QueryModule {
             val fam = graft.sources.FreqStore.storeFamily(t.spark, dir)
             require(fam == want,
               s"$c at $dir holds family '${fam.name}', not ${want.name} — wrong store")
-            StoreViews.counts(t.spark, dir).count()
+            SessionCache.storeCounts(t.spark, dir).count()
           }
         }
         .sum +
@@ -275,37 +269,8 @@ object Dedup extends QueryModule {
   def leakTrainSlice(docs: DataFrame): DataFrame =
     docs.filter(splitBucket < 90)
 
-  /** Drop the session pair cache: unpersist every cached relation and
-    * forget it. Necessary when turning the cache OFF mid-session —
-    * persist() registers the plan fragment in Spark's CacheManager, so
-    * even conf-off derived runs would silently read the cached relation
-    * until it is unpersisted (the test suites pin derived-plan shapes and
-    * must not inherit a cache from an earlier cache-on consumer).
-    */
-  def clearPairCache(): Unit = {
-    pairStatsCache.forEach((_, df) => { df.unpersist(); () })
-    pairStatsCache.clear()
-    componentsCache.forEach((_, df) => { df.unpersist(); () })
-    componentsCache.clear()
-    evalPosCache.forEach((_, df) => { df.unpersist(); () })
-    evalPosCache.clear()
-    sourceShinglesCache.forEach((_, df) => { df.unpersist(); () })
-    sourceShinglesCache.clear()
-    cdcChunksCache.forEach((_, df) => { df.unpersist(); () })
-    cdcChunksCache.clear()
-    Similarity.clearCellCache()
-    StoreViews.clear()
-  }
-
   private def pairStats(t: Tables): DataFrame =
-    if (!pairCacheOn(t)) pairStatsDerive(t)
-    else {
-      val key = s"${t.spark.sparkContext.applicationId}|${t.dir}|${bands(t)}"
-      pairStatsCache.computeIfAbsent(
-        key,
-        _ => pairStatsDerive(t)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+    SessionCache.cached(t.spark, "pairStats", t.dir, bands(t))(pairStatsDerive(t))
 
   // Jaccard from the pair integers, with the union-size-0 guard (two
   // shingle-less docs) that would otherwise divide by zero under ANSI
@@ -862,20 +827,10 @@ object Dedup extends QueryModule {
   // The component labels are a pure function of (corpus, bands, τ) —
   // like pairStats, the q62/q79/q147 consumers share one derivation per
   // session under graft.lsh.cache (primed and priced in Bench's prep).
-  private val componentsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   // exposed to [[graft.Curate]]: the near-dup stage drops exactly the
   // docs q62/q79 label as non-representatives of their component
   private[graft] def components(t: Tables): DataFrame =
-    if (!pairCacheOn(t)) componentsDerive(t)
-    else {
-      val key = s"${t.spark.sparkContext.applicationId}|${t.dir}|${bands(t)}"
-      componentsCache.computeIfAbsent(
-        key,
-        _ => componentsDerive(t)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+    SessionCache.cached(t.spark, "components", t.dir, bands(t))(componentsDerive(t))
 
   private def componentsDerive(t: Tables): DataFrame = {
     val pairs = jaccardPairs(t).select(col("doc_a"), col("doc_b"))
@@ -1900,13 +1855,6 @@ object Dedup extends QueryModule {
     * that looks shuffle-optimal can lose to codegen by an order of
     * magnitude — measure with the Time knob before switching.
     */
-  // q203/q210's shared chunk relation — session-cached under
-  // `graft.lsh.cache` (the pairStats family pattern: computeIfAbsent on
-  // appId|dir, primed in Bench prep, cached ≡ derived in PairCacheSpec)
-  // so the two CDC consumers pay the corpus chunking pass once
-  private val cdcChunksCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** (doc_id, source, cid, hh, nch) — every content-defined chunk with
     * its md5 and char length; see q203's scaladoc for the boundary rule
     * and the rejected HOF formulation.
@@ -1931,12 +1879,12 @@ object Dedup extends QueryModule {
         col("doc_id"), col("source"), col("cid"),
         md5(col("chunk")).as("hh"), length(col("chunk")).as("nch"))
 
+  // q203/q210's shared chunk relation — session-cached under
+  // `graft.lsh.cache` (primed in Bench prep, cached ≡ derived in
+  // PairCacheSpec) so the two CDC consumers pay the corpus chunking pass
+  // once
   private def cdcChunks(t: Tables): DataFrame =
-    if (!pairCacheOn(t)) cdcChunksDerive(t)
-    else cdcChunksCache.computeIfAbsent(
-      s"${t.spark.sparkContext.applicationId}|${t.dir}",
-      _ => cdcChunksDerive(t)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SessionCache.cached(t.spark, "cdcChunks", t.dir)(cdcChunksDerive(t))
 
   private def q203(t: Tables): DataFrame = {
     val chunks = cdcChunks(t)
@@ -2201,15 +2149,8 @@ object Dedup extends QueryModule {
   // query's plan) — within the audit session the corpus scan + shingle
   // kernel + dedup shuffle run once, both consumers read the persisted
   // relation
-  private val sourceShinglesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def sourceShingles(t: Tables): DataFrame =
-    if (!pairCacheOn(t)) sourceShinglesDerive(t)
-    else sourceShinglesCache.computeIfAbsent(
-      s"${t.spark.sparkContext.applicationId}|${t.dir}",
-      _ => sourceShinglesDerive(t)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SessionCache.cached(t.spark, "sourceShingles", t.dir)(sourceShinglesDerive(t))
 
   private def sourceShinglesDerive(t: Tables): DataFrame =
     Tables.localSplit(t.documents, col("doc_id"))
@@ -2495,7 +2436,7 @@ object Dedup extends QueryModule {
           case graft.sources.FreqStore.WindowSrc(sk) =>
             require(sk == k,
               s"$conf at $dir was built at windowK=$sk, session wants $k — rebuild")
-            Some(StoreViews.counts(t.spark, dir))
+            Some(SessionCache.storeCounts(t.spark, dir))
           case graft.sources.FreqStore.WindowDoc(sk) =>
             require(sk == k,
               s"$conf at $dir was built at windowK=$sk, session wants $k — rebuild")
@@ -2504,7 +2445,7 @@ object Dedup extends QueryModule {
             // distinct-doc count per (wh, source) is count(*), no
             // countDistinct shuffle; the rollup itself is session-cached
             // (several consumers, several branches)
-            Some(StoreViews.cachedForStore(t.spark, dir, "winsrcview")(
+            Some(SessionCache.storeView(t.spark, "winsrcview", dir)(
               graft.sources.FreqStore.counts(t.spark, dir)
                 .groupBy(col("wh"), col("source"))
                 .agg(count(lit(1)).as("n"))))
@@ -2559,15 +2500,8 @@ object Dedup extends QueryModule {
   // (q120/q143/q146) share ONE materialized eval window stream instead
   // of re-exploding it each — the same audit-session discipline as
   // pairStats; BuildStoresSpec runs the family with cache + stores on.
-  private val evalPosCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def evalPos(t: Tables, k: Int): DataFrame =
-    if (!pairCacheOn(t)) evalPosDerive(t, k)
-    else evalPosCache.computeIfAbsent(
-      s"${t.spark.sparkContext.applicationId}|${t.dir}|$k",
-      _ => evalPosDerive(t, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SessionCache.cached(t.spark, "evalPos", t.dir, k)(evalPosDerive(t, k))
 
   private def evalPosDerive(t: Tables, k: Int): DataFrame =
     Tables.localSplit(t.documents, col("doc_id"))

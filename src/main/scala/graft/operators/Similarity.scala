@@ -577,58 +577,28 @@ object Similarity extends QueryModule {
     * Under `graft.lsh.cache` (the bench/audit session conf) the relation
     * is computed ONCE and session-cached — pairStats' pattern exactly —
     * so the two consumers never pay the pair scan twice; the build is
-    * priced in Bench's prep, and [[clearCellCache]] (wired into
-    * Dedup.clearPairCache) drops it before any derived-plan assertion.
+    * priced in Bench's prep, and [[SessionCache.clear]] drops it before
+    * any derived-plan assertion.
     */
-  private val cellTop2Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-
-  private def cellCacheOn(t: Tables): Boolean =
-    t.spark.conf.get("graft.lsh.cache", "false").toBoolean
-
   private def cellTop2(t: Tables): DataFrame =
-    if (!cellCacheOn(t)) cellTop2Derive(t)
-    else
-      cellTop2Cache.computeIfAbsent(
-        s"${t.spark.sparkContext.applicationId}|${t.dir}",
-        _ => cellTop2Derive(t)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SessionCache.cached(t.spark, "cellTop2", t.dir)(cellTop2Derive(t))
 
   /** Materialize the session cellTop2 relation (no-op when the cache is
     * off) so its one-time pair-scan cost is priced in Bench's prep, not
     * hidden in whichever of q170/q174 min-of-2 happens to discard.
     */
   def primeCellTop2(t: Tables): Long =
-    if (cellCacheOn(t)) cellTop2(t).count() else 0L
-
-  /** Drop the session cellTop2 cache (see Dedup.clearPairCache for why:
-    * persist() registers the fragment in Spark's CacheManager and even
-    * conf-off derived runs would silently read it).
-    */
-  def clearCellCache(): Unit = {
-    cellTop2Cache.forEach((_, df) => { df.unpersist(); () })
-    cellTop2Cache.clear()
-    knnEdgesCache.forEach((_, df) => { df.unpersist(); () })
-    knnEdgesCache.clear()
-  }
+    if (SessionCache.on(t.spark)) cellTop2(t).count() else 0L
 
   /** The (label, src, dst) within-cell k=5 nearest-neighbor edge list —
     * q154's reciprocity base, extracted in r16 so q215's hubness census
     * reads the SAME edges instead of re-running the Σ|cell|² pair scan.
     * Under `graft.lsh.cache` (the bench/audit session conf) it is
     * computed once and session-cached (cellTop2's pattern: primed in
-    * Bench prep, dropped by [[clearCellCache]]).
+    * Bench prep, dropped by [[SessionCache.clear]]).
     */
-  private val knnEdgesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-
   private def knnEdges(t: Tables): DataFrame =
-    if (!cellCacheOn(t)) knnEdgesDerive(t)
-    else
-      knnEdgesCache.computeIfAbsent(
-        s"${t.spark.sparkContext.applicationId}|${t.dir}",
-        _ => knnEdgesDerive(t)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SessionCache.cached(t.spark, "knnEdges", t.dir)(knnEdgesDerive(t))
 
   private def knnEdgesDerive(t: Tables): DataFrame = {
     val e = vectors(t).select(col("label"), col("vec_id"), col("v"))
@@ -647,7 +617,7 @@ object Similarity extends QueryModule {
     * off) — same pricing rule as [[primeCellTop2]].
     */
   def primeKnnEdges(t: Tables): Long =
-    if (cellCacheOn(t)) knnEdges(t).count() else 0L
+    if (SessionCache.on(t.spark)) knnEdges(t).count() else 0L
 
   private def cellTop2Derive(t: Tables): DataFrame = {
     val corpus = vectors(t).select(col("label"), col("vec_id"), col("v"))

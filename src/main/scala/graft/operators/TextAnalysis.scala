@@ -39,7 +39,7 @@ object TextAnalysis extends QueryModule {
           s"graft.freq.store at $dir holds family '${fam.name}', not unigram — wrong store")
         // session-cached merged view: the consumers read it in several
         // branches, and per-branch chain merges defeat AQE reuse
-        Some(StoreViews.counts(t.spark, dir))
+        Some(SessionCache.storeCounts(t.spark, dir))
     }
 
   // `graft.bigram.store=<dir>` points the pair-table consumers
@@ -57,7 +57,7 @@ object TextAnalysis extends QueryModule {
         require(fam == graft.sources.FreqStore.Bigram,
           s"graft.bigram.store at $dir holds family '${fam.name}', not bigram — rebuild")
         // session-cached: q139 alone reads the pair table four ways
-        Some(StoreViews.counts(t.spark, dir))
+        Some(SessionCache.storeCounts(t.spark, dir))
     }
 
   // words/doc as a reusable fragment (identical split semantics both engines

@@ -401,9 +401,7 @@ object ImportPipeline {
         .filter(col("violated") === 1)
         .groupBy(col("doc_id"))
         .agg(sort_array(collect_set(col("rule_id"))).as("violated_rules"))
-      // cached: the quarantine and accepted sides both join it, and each
-      // would otherwise re-run the rules (and asset) aggregation
-      val badDocs = (assetPayloads match {
+      val badDocs = assetPayloads match {
         case None =>
           badRules.withColumn("n_bad_assets", lit(0L))
         case Some(payloads) =>
@@ -417,7 +415,7 @@ object ImportPipeline {
               col("doc_id"),
               coalesce(col("violated_rules"), array().cast("array<int>")).as("violated_rules"),
               coalesce(col("n_bad_assets"), lit(0L)).as("n_bad_assets"))
-      }).persist()
+      }
       val quarantined = imported.join(badDocs, Seq("doc_id")).persist()
       val accepted = imported
         .join(badDocs.select(col("doc_id")), Seq("doc_id"), "left_anti")
@@ -451,9 +449,8 @@ object ImportPipeline {
           graft.sources.CasProtocol.selfRepairing(repair)(op)
         val storeDirs =
           maintain.dedupIndexDir.toSeq ++ maintain.freqStoreDirs ++ maintain.trainFreqStoreDirs
-        var maintained = false
         val (nAccepted, nQuarantined, version, nAssets) =
-          try inBranches(tag, 1 + storeDirs.size) { fork =>
+          inBranches(tag, 1 + storeDirs.size) { fork =>
             // deterministic per-batch dirs + overwrite = idempotent replay
             val nAccepted = stage("accepted") {
               accepted.write.mode("overwrite").parquet(s"$acceptedDir/batch=$tag")
@@ -484,7 +481,6 @@ object ImportPipeline {
             // marker-scan no-op (exactly-once for the count-merge stores;
             // the set stores are idempotent anyway)
             if (!maintain.isEmpty && nAccepted > 0) {
-              maintained = true
               val corpus = accepted.select(
                 col("doc_id"), col("dataset_key").as("source"), col("j").as("text"))
               maintain.dedupIndexDir.foreach { d =>
@@ -523,20 +519,12 @@ object ImportPipeline {
               }
             }
             (nAccepted, nQuarantined, published.version, nAssets)
-          } finally {
-            // a session that both ingests AND audits (graft.lsh.cache on)
-            // must not serve pre-batch store views: the pipeline is the
-            // only legitimate in-session mutator, so it invalidates the
-            // session-cached merged views it made stale — also when a
-            // sibling store's branch failed after others committed
-            if (maintained) graft.operators.StoreViews.clear()
           }
         new BatchStats(statsId, nAccepted, nQuarantined.get(), version, nAssets)(
           stageMs.asScala.toMap)
       } finally {
         quarantined.unpersist()
         accepted.unpersist()
-        badDocs.unpersist()
       }
     } finally imported.unpersist()
   }

@@ -40,13 +40,27 @@ class BuildStoresSpec extends AnyFunSuite {
     // the priced view-prime must build every configured store view
     assert(graft.operators.Dedup.primeStoreViews(t) > 0L,
       "primeStoreViews materialized nothing in a fully provisioned session")
-    try consumers.foreach { q =>
-      assert(SparkEntry.queries(q)(spark, sf).collect().toSeq == derived(q),
-        s"$q diverges in the fully provisioned session")
+    try {
+      consumers.foreach { q =>
+        assert(SparkEntry.queries(q)(spark, sf).collect().toSeq == derived(q),
+          s"$q diverges in the fully provisioned session")
+      }
+      // Bench's prime sequence persists every session artifact; the one
+      // clear() must leave nothing in Spark's CacheManager, where a
+      // conf-off run would still find it
+      graft.operators.Dedup.primePairCache(t)
+      graft.operators.Similarity.primeCellTop2(t)
+      graft.operators.Similarity.primeKnnEdges(t)
+      graft.operators.Dedup.primeLeakEval(t)
+      graft.operators.Dedup.primeStoreViews(t)
+      assert(!spark.sharedState.cacheManager.isEmpty, "the prime sequence cached nothing")
+      graft.operators.SessionCache.clear()
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "SessionCache.clear() left a persisted plan in the CacheManager")
     } finally {
       built.foreach(s => spark.conf.unset(s.conf))
       spark.conf.unset("graft.lsh.cache")
-      graft.operators.Dedup.clearPairCache()
+      graft.operators.SessionCache.clear()
     }
   }
 }

@@ -258,7 +258,7 @@ class FreqStoreSpec extends AnyFunSuite {
     spark.conf.set("graft.lsh.cache", "true")
     try {
       def counts(): Map[String, Long] =
-        graft.operators.StoreViews.counts(spark, dir).collect()
+        graft.operators.SessionCache.storeCounts(spark, dir).collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(counts() == scalarFreq(slice(b0).collect().map(_.getString(1)).toSeq),
         "v=1 view wrong before the append")
@@ -270,7 +270,7 @@ class FreqStoreSpec extends AnyFunSuite {
         "cached view served the pre-append version — the key must observe the marker listing")
     } finally {
       spark.conf.unset("graft.lsh.cache")
-      graft.operators.Dedup.clearPairCache()
+      graft.operators.SessionCache.clear()
     }
   }
 }

@@ -206,25 +206,26 @@ class ImportPipelineSpec extends AnyFunSuite {
     assert(FreqStore.totalDocs(spark, leakDir) == 5L,
       s"leak store after replay holds ${FreqStore.totalDocs(spark, leakDir)} docs")
     // a session that both ingests AND audits: materialize the session-
-    // cached store view, ingest one more batch, and prove the pipeline
-    // invalidated the now-stale view (without the MAINTAIN-step clear,
-    // the cached pre-batch merge would be served forever)
+    // cached store view, ingest one more batch, and prove the next read
+    // serves the new version (the view's key carries the store's
+    // committed version, observed on each access)
     spark.conf.set("graft.lsh.cache", "true")
     try {
-      val before = graft.operators.StoreViews.counts(spark, freqDir).collect()
+      val before = graft.operators.SessionCache.storeCounts(spark, freqDir).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       writeBatch(s"$root/in", Seq(doc(5L, "ds-b", "Beta v1", 1L, valid = true)))
       run()
-      val after = graft.operators.StoreViews.counts(spark, freqDir).collect()
+      val after = graft.operators.SessionCache.storeCounts(spark, freqDir).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val fresh = FreqStore.frequencies(spark, freqDir).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(after == fresh,
-        "session-cached store view is stale after an ingested batch — MAINTAIN must clear it")
+        "session-cached store view is stale after an ingested batch — " +
+          "its key must observe the store's new version")
       assert(after != before, "batch 2 should have changed the store view")
     } finally {
       spark.conf.unset("graft.lsh.cache")
-      graft.operators.Dedup.clearPairCache()
+      graft.operators.SessionCache.clear()
     }
 
     // the maintained view equals a one-shot rebuild from seed + accepted lake

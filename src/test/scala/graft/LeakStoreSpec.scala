@@ -250,7 +250,7 @@ class LeakStoreSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset("graft.bigram.store")
       spark.conf.unset("graft.lsh.cache")
-      graft.operators.Dedup.clearPairCache()
+      graft.operators.SessionCache.clear()
     }
   }
 

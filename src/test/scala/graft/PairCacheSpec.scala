@@ -41,7 +41,7 @@ class PairCacheSpec extends AnyFunSuite {
       spark.conf.unset("graft.lsh.cache")
       // persist() registers the plan in the session CacheManager — drop it
       // so later suites' derived-plan pins don't silently read the cache
-      graft.operators.Dedup.clearPairCache()
+      graft.operators.SessionCache.clear()
     }
   }
 }

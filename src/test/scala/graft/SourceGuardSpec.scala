@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
   * from the one factory, no versioned-store reader infers a parquet
   * schema except the core's one pre-schema fallback, and only the
   * versioned-store core and the sink call the CAS protocol, only the
-  * catalog's point get reads Parquet on the driver, and thread
-  * pools are made only where audited. Comment
+  * catalog's point get reads Parquet on the driver, thread
+  * pools are made only where audited, and only the session cache reads
+  * the session-artifact gate. Comment
   * lines and imports are ignored; counts are per file,
   * so moving a site within its file needs no edit here, and adding or
   * removing one does.
@@ -80,6 +81,14 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(sites(sources, """Executors\.new""".r) ==
       Map("Verify.scala" -> 1, "streaming/ImportPipeline.scala" -> 1),
       "a new pool must be bounded and short-lived: audit it and add it here")
+  }
+
+  test("the session-artifact gate is read only by the one session cache") {
+    // a relation cached behind a private gate read would escape
+    // SessionCache.clear() and stay in Spark's CacheManager
+    assert(sites(sources, """conf\.get\("graft\.lsh\.cache"""".r) ==
+      Map("operators/SessionCache.scala" -> 1),
+      "cache a session artifact through SessionCache.cached (or storeView), not a private map")
   }
 
   test("the CAS claim and repair run only in the versioned-store core and the sink") {
