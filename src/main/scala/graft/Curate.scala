@@ -118,9 +118,7 @@ object Curate {
         sum(when(col("contam_sem"), 1L).otherwise(0L)).as("n_contam_semantic"),
         sum(when(col("curated"), 1L).otherwise(0L)).as("n_curated"))
 
-      val cap = t.spark.conf.get("graft.pack.tokens", "2048").toLong
-      require(cap >= 1, s"graft.pack.tokens out of range: $cap")
-      packedCorpus(staged, cap).write.mode("overwrite").parquet(s"$outDir/corpus")
+      packedCorpus(staged).write.mode("overwrite").parquet(s"$outDir/corpus")
       bySource.coalesce(1).write.mode("overwrite").parquet(s"$outDir/report_by_source")
       // opt-in governance ledger (r16): the per-source yield table also
       // publishes as a CAS-committed v=N TSV snapshot through the DSv2
@@ -209,7 +207,7 @@ object Curate {
     * splits) over the curated survivors — both expressions shared with
     * the audited queries.
     */
-  private[graft] def packedCorpus(staged: DataFrame, cap: Long): DataFrame = {
+  private[graft] def packedCorpus(staged: DataFrame): DataFrame = {
     val byBin = Window
       .partitionBy(col("source"), col("split"))
       .orderBy(col("doc_id"))
@@ -220,7 +218,7 @@ object Curate {
       .withColumn("toks",
         greatest(graft.functions.GraftFunctions.subword_count(col("text")), lit(1L)))
       .withColumn("cum", sum(col("toks")).over(byBin))
-      .withColumn("bin", expr(s"CAST((cum - 1) div $cap AS BIGINT)"))
+      .withColumn("bin", expr(s"CAST((cum - 1) div ${TextAnalysis.PackTokens} AS BIGINT)"))
       .drop("cum")
   }
 

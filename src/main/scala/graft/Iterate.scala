@@ -8,18 +8,14 @@ import org.apache.spark.sql.{DataFrame, Row}
   */
 object Iterate {
 
-  /** Cut lineage between loop rounds. Default: localCheckpoint (fast, but
-    * executor-storage-pinned — a lost executor restarts the job). On a
-    * real cluster set `graft.checkpoint.reliable=true` plus a checkpoint
-    * dir and rounds persist to reliable storage instead, so the loop
-    * survives executor loss at the cost of one HDFS/S3 write per round.
+  /** Cut lineage between loop rounds. Without a checkpoint dir this is
+    * localCheckpoint (fast, but executor-storage-pinned — a lost executor
+    * restarts the job). When the SparkContext has a checkpoint dir (a
+    * real cluster sets one) rounds persist to that reliable storage
+    * instead, so the loop survives executor loss at the cost of one
+    * HDFS/S3 write per round.
     */
-  def cutLineage(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val reliable = df.sparkSession.conf
-      .getOption("graft.checkpoint.reliable").exists(_.toBoolean) && sc.getCheckpointDir.isDefined
-    if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-  }
+  def cutLineage(df: DataFrame): DataFrame = cut(df, eager = true)
 
   /** Bounded CONTROL-PLANE gather — the one audited seam through which a
     * domain-bounded matrix (a |types|² transition table, a d² covariance,
@@ -47,10 +43,9 @@ object Iterate {
     *-evaluated first action (a limit) are filled in by Spark's checkpoint
     * completion before lineage is cut.
     */
-  def cutLineageLazy(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val reliable = df.sparkSession.conf
-      .getOption("graft.checkpoint.reliable").exists(_.toBoolean) && sc.getCheckpointDir.isDefined
-    if (reliable) df.checkpoint(false) else df.localCheckpoint(false)
-  }
+  def cutLineageLazy(df: DataFrame): DataFrame = cut(df, eager = false)
+
+  private def cut(df: DataFrame, eager: Boolean): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
+    else df.localCheckpoint(eager)
 }

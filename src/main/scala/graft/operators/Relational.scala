@@ -422,15 +422,11 @@ object Relational extends QueryModule {
     * e2-quantizes per line BEFORE the sum (q208's rule); the rollup
     * lands on the ≤|years| grid. The e4 share's 2·10⁴·Σrev product
     * passes 2⁶³ once a year's e2 revenue reaches ~4.6·10¹⁴ (≈ $4.6
-    * trillion/year) — `graft.share.decimal=true` routes it through
-    * DECIMAL(38,0) on the |years|-row relation with the same plan
-    * shape (q173's guard pattern; spec-pinned identical at current
-    * scale).
+    * trillion/year), so it runs in DECIMAL(38,0) on the |years|-row
+    * relation (q173's guard pattern).
     */
   private def q233(t: Tables): DataFrame = {
-    val big: Column => Column =
-      if (t.spark.conf.get("graft.share.decimal", "false").toBoolean) _.cast("decimal(38,0)")
-      else identity
+    val big: Column => Column = _.cast("decimal(38,0)")
     val euSup = t.supplier
       .select(col("s_suppkey"), col("s_nationkey"))
       .join(

@@ -860,10 +860,9 @@ object Similarity extends QueryModule {
     * unchanged.
     */
   private[graft] def ivfSearch(t: Tables, relabel: Option[DataFrame]): DataFrame = {
-    // nprobe is THE runtime IVF knob (recall vs cells read) — conf'd like
-    // graft.ann.*; the oracle renders at the default of 2
-    val nprobe = t.spark.conf.get("graft.ivf.nprobe", "2").toInt
-    require(nprobe >= 1, s"graft.ivf.nprobe out of range: $nprobe")
+    // IVF cells probed per query (recall vs cells read; q115 audits the
+    // trade-off across nprobe)
+    val nprobe = 2
     // the stored (vec_id, label) swaps in BEFORE the per-dim explode —
     // the join probes one row per VECTOR, not per (vector, dim): at dim
     // coordinates per embedding that is a dim× smaller join, and it is
@@ -906,7 +905,7 @@ object Similarity extends QueryModule {
   }
 
   /** IVF recall/cost audit — the calibration every ANN deployment runs
-    * BEFORE trusting `graft.ivf.nprobe` (q86's estimator-audit pattern
+    * BEFORE trusting an nprobe (q86's estimator-audit pattern
     * applied to the index itself): for each candidate nprobe, the
     * recall@10 of the IVF search against brute-force ground truth on the
     * deterministic query sample, alongside the fraction of the corpus
@@ -1799,10 +1798,9 @@ object Similarity extends QueryModule {
     * All-integer: within a cell every vector shares cnt, so
     * dist_i > (p/100)·mean ⇔ 100·num_i·n_cell > p·Σnum — exact long
     * products, no division until the final e4 half-up ratios. Past
-    * ~10¹⁸ the products overflow 2⁶³ (num grows as cnt²·dim·q²) —
-    * `graft.cell.decimal=true` routes diff² and the comparisons through
-    * DECIMAL(38,0) with the same plan shape (q163's guard pattern;
-    * spec-pinned identical at current scale).
+    * ~10¹⁸ the products overflow 2⁶³ (num grows as cnt²·dim·q²), so
+    * diff² and the comparisons run in DECIMAL(38,0) (q163's guard
+    * pattern).
     *
     * With `graft.ivf.index` set, the centroid table reads from the
     * stored [[graft.sources.IvfIndex]] (q74's seam — the store persists
@@ -1820,9 +1818,7 @@ object Similarity extends QueryModule {
   // p·Σnum comparisons, q193's dd² sums), and a 19-digit re-cast of an
   // already-aggregated decimal overflows to NULL under non-ANSI Spark
   // exactly in the regime the guard exists for.
-  private def cellBig(t: Tables): org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-    if (t.spark.conf.get("graft.cell.decimal", "false").toBoolean) _.cast("decimal(38,0)")
-    else identity
+  private val cellBig: Column => Column = _.cast("decimal(38,0)")
   private def cellCentroids(t: Tables, ev: DataFrame): DataFrame = {
     val idx = t.spark.conf.get("graft.ivf.index", "")
     if (idx.isEmpty) centroidsOf(ev)
@@ -1834,7 +1830,7 @@ object Similarity extends QueryModule {
     * does at cnt²·dim·q² ~ 10¹⁸).
     */
   private def ownCellFold(t: Tables, ev: DataFrame): DataFrame = {
-    val big = cellBig(t)
+    val big = cellBig
     val diff = big(col("q")) * col("cnt") - col("sq")
     ev.join(
       broadcast(cellCentroids(t, ev)),
@@ -1844,7 +1840,7 @@ object Similarity extends QueryModule {
   }
 
   private def q191(t: Tables): DataFrame = {
-    val big = cellBig(t)
+    val big = cellBig
     val ev = quantizedEv(t)
     val perVec = ownCellFold(t, ev)
     val w = Window.partitionBy(col("label"))
@@ -1901,7 +1897,7 @@ object Similarity extends QueryModule {
     // family); the centroid-gap operands below get the guard applied
     // BEFORE the a.sq·b.cnt products — an sq ≈ cnt·q̄ cross-product
     // wraps int64 in exactly the guarded regime (r16 review fix)
-    val big = cellBig(t)
+    val big = cellBig
     val ev = quantizedEv(t)
     val cent = cellCentroids(t, ev)
     val scatter = ownCellFold(t, ev)

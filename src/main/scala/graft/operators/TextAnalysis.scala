@@ -152,9 +152,8 @@ object TextAnalysis extends QueryModule {
     * multiplied, the one signed division split as sign·half-up-on-abs
     * (q212's rule — Spark DIV truncates where DuckDB // floors, so
     * never divide signed); a degenerate pe = 1 source reports 0
-    * (declared). `graft.kappa.decimal=true` routes N² and the
-    * marginal products through DECIMAL(38,0) past ~3·10⁹ docs/source
-    * (q173's guard pattern, spec-pinned identical at current scale).
+    * (declared). N² and the marginal products run in DECIMAL(38,0),
+    * exact past ~3·10⁹ docs/source (q173's guard pattern).
     *
     * Scale shape: ONE corpus-scale (source, lang, predicted) count
     * (map-side partial next to the scan); marginals, the
@@ -162,9 +161,7 @@ object TextAnalysis extends QueryModule {
     * the ≤|sources|·|langs|² grid.
     */
   private def q238(t: Tables): DataFrame = {
-    val big: Column => Column =
-      if (t.spark.conf.get("graft.kappa.decimal", "false").toBoolean) _.cast("decimal(38,0)")
-      else identity
+    val big: Column => Column = _.cast("decimal(38,0)")
     val cells = langPredicted(t)
       .groupBy(col("source"), col("lang"), col("predicted"))
       .agg(count(lit(1)).as("c"))
@@ -595,11 +592,10 @@ object TextAnalysis extends QueryModule {
     * + per-row linear rehash (q36's k-minhash-from-one-hash trick).
     */
   private def q130(t: Tables): DataFrame = {
-    // sketch geometry, runtime-tunable (the oracle renders at the
-    // defaults): narrower widths force collisions — how the spec exercises
-    // the overcount arm on a corpus whose vocab fits 256 buckets untouched
-    val d = t.spark.conf.get("graft.cms.depth", "4").toInt
-    require(d >= 1 && d <= 16, s"graft.cms.depth out of range: $d")
+    // sketch geometry: 4 rows; the width is runtime-tunable (the oracle
+    // renders at 256): narrower widths force collisions — how the spec
+    // exercises the overcount arm on a corpus whose vocab fits 256 buckets
+    val d = 4
     val w = t.spark.conf.get("graft.cms.width", "256").toInt
     require(w >= 2 && w <= 65536, s"graft.cms.width out of range: $w")
     val counts = storedFreq(t).getOrElse(
@@ -1015,15 +1011,11 @@ object TextAnalysis extends QueryModule {
     * Scale shape: [[sourceVocab]] is the one corpus-scale shuffle; the
     * ascending-rank window partitions by source (vocab-bounded,
     * spillable); the rollup is |source| rows. Σi·cᵢ ≤ vocab·Σc overflows
-    * 2⁶³ past ~10¹⁸ token·rank products — `graft.gini.decimal=true`
-    * routes the rank products and their sum through DECIMAL(38,0) with
-    * the same plan shape (q110's guard pattern; spec-pinned identical at
-    * current scale).
+    * 2⁶³ past ~10¹⁸ token·rank products, so the rank products and their
+    * sum run in DECIMAL (q110's guard pattern).
     */
   private def q163(t: Tables): DataFrame = {
-    val big: Column => Column =
-      if (t.spark.conf.get("graft.gini.decimal", "false").toBoolean) _.cast("decimal(19,0)")
-      else identity
+    val big: Column => Column = _.cast("decimal(19,0)")
     sourceVocab(t)
       .withColumn(
         "i",
@@ -1228,9 +1220,8 @@ object TextAnalysis extends QueryModule {
     * |F₁−F₂| at each is the INTEGER cross-product |cum_src·n_rest −
     * cum_rest·n_src| — the max is exact, the single e6 division rounds
     * once, and the peak-length argmax is the zero-padded max-string
-    * pick. `graft.ks.decimal=true` routes the cross-products through
-    * DECIMAL(38,0) past ~10¹⁸ (q163's guard; spec-pinned identical at
-    * current scale).
+    * pick. The cross-products run in DECIMAL, exact past ~10¹⁸ (q163's
+    * guard).
     *
     * Scale shape: two corpus-scale partial-aggregable counts ((len) and
     * (source, len)); the evaluation grid is |sources| × |distinct
@@ -1261,9 +1252,7 @@ object TextAnalysis extends QueryModule {
   }
 
   private def q194(t: Tables): DataFrame = {
-    val big: Column => Column =
-      if (t.spark.conf.get("graft.ks.decimal", "false").toBoolean) _.cast("decimal(19,0)")
-      else identity
+    val big: Column => Column = _.cast("decimal(19,0)")
     lenEcdfGrid(t)
       .withColumn(
         "num",
@@ -1304,9 +1293,8 @@ object TextAnalysis extends QueryModule {
     * at every SF — real two-sided spread), and the ±1 direction flag.
     * Exact integer throughout: ties carry the standard half weight kept
     * doubled (2U = Σ_len c_src·(2·rest_below + rest_ties)), one half-up
-    * e6 division; `graft.mwu.decimal=true` routes the products through
-    * DECIMAL(38,0) past ~3·10⁹ docs (q173's guard pattern, spec-pinned
-    * identical at current scale).
+    * e6 division; the products run in DECIMAL(38,0), exact past ~3·10⁹
+    * docs (q173's guard pattern).
     *
     * Scale shape: rides the SAME |sources| × |distinct lengths| ECDF
     * grid as q194 (the lenEcdfGrid helper — one definition, the
@@ -1314,9 +1302,7 @@ object TextAnalysis extends QueryModule {
     * fold collapses it to |sources| rows.
     */
   private def q239(t: Tables): DataFrame = {
-    val big: Column => Column =
-      if (t.spark.conf.get("graft.mwu.decimal", "false").toBoolean) _.cast("decimal(38,0)")
-      else identity
+    val big: Column => Column = _.cast("decimal(38,0)")
     lenEcdfGrid(t)
       .withColumn("c_rest", col("c_all") - col("c_src"))
       .withColumn("rest_below", col("cum_all") - col("cum_src") - col("c_rest"))
@@ -1920,10 +1906,14 @@ object TextAnalysis extends QueryModule {
     BpeModel(merges.toSeq, symbolCount, vocab, rounds)
   }
 
+  /** Packing bin capacity in (real, q32-vocab) tokens, the context length:
+    * q80's bins and the curated corpus's (Curate). */
+  private[graft] val PackTokens = 2048L
+
   /** Sequence packing for pretraining batch prep: documents stream into
-    * fixed 2048-token bins per source in deterministic doc_id order (a doc
-    * is never split; its bin is the 2048-block its cumulative token end
-    * falls in — the streaming-pack policy). Token counts come from the
+    * fixed [[PackTokens]]-token bins per source in deterministic doc_id
+    * order (a doc is never split; its bin is the block its cumulative
+    * token end falls in — the streaming-pack policy). Token counts come from the
     * native subword kernel (q32's greedy longest-match vocab,
     * functions/Subword.scala), floored at one token per document. One
     * shuffle on source carries both the running-sum window and the rollup;
@@ -1932,10 +1922,6 @@ object TextAnalysis extends QueryModule {
     * across a 1000-executor ingest.
     */
   private def q80(t: Tables): DataFrame = {
-    // bin capacity in (real, q32-vocab) tokens — the context-length knob;
-    // oracle renders at the default of 2048
-    val Cap = t.spark.conf.get("graft.pack.tokens", "2048").toLong
-    require(Cap >= 1, s"graft.pack.tokens out of range: $Cap")
     val bySrc = Window
       .partitionBy(col("source"))
       .orderBy(col("doc_id"))
@@ -1951,7 +1937,7 @@ object TextAnalysis extends QueryModule {
         col("source"),
         greatest(graft.functions.GraftFunctions.subword_count(col("text")), lit(1L)).as("toks"))
       .withColumn("cum", sum(col("toks")).over(bySrc))
-      .withColumn("bin", expr(s"CAST((cum - 1) div $Cap AS BIGINT)"))
+      .withColumn("bin", expr(s"CAST((cum - 1) div $PackTokens AS BIGINT)"))
       .groupBy(col("source"), col("bin"))
       .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("bin_tokens"))
       .groupBy(col("source"))
@@ -1959,7 +1945,7 @@ object TextAnalysis extends QueryModule {
         count(lit(1)).as("n_bins"),
         sum(col("bin_tokens")).as("total_tokens"),
         max(col("n_docs")).as("max_docs_per_bin"),
-        round(sum(col("bin_tokens")) / (count(lit(1)) * Cap), 4).as("fill_ratio"))
+        round(sum(col("bin_tokens")) / (count(lit(1)) * PackTokens), 4).as("fill_ratio"))
       .orderBy(col("source"))
   }
 
@@ -2278,7 +2264,7 @@ object TextAnalysis extends QueryModule {
 
   /** Winnowing fingerprint selection (Schleimer et al. 2003, the MOSS
     * algorithm): from each document's positional word-3-gram hash stream,
-    * keep the minimum hash of every `graft.winnow.window` (default 4)
+    * keep the minimum hash of every 4
     * consecutive grams — the provably-bounded fingerprint subset that
     * still detects any shared run of ≥ window+2 words. The selection
     * knob a substring-robust near-dup index is built on: density is
@@ -2297,8 +2283,7 @@ object TextAnalysis extends QueryModule {
     * paid both twice (plus a join) for the same answer.
     */
   private def q105(t: Tables): DataFrame = {
-    val w = t.spark.conf.get("graft.winnow.window", "4").toInt
-    require(w >= 1, s"graft.winnow.window out of range: $w")
+    val w = 4
     val perDoc = withWords(t)
       .withColumn("n_grams", greatest(size(col("words")) - 2, lit(0)).cast("long"))
       .withColumn(
@@ -2580,8 +2565,8 @@ object TextAnalysis extends QueryModule {
   }
 
   /** Overlapping fixed-window chunking accounting — the RAG / context-
-    * window prep step: every document splits into `graft.chunk.width`-word
-    * windows advancing by `graft.chunk.stride` (width 32 / stride 24 ⇒ 8
+    * window prep step: every document splits into 32-word windows
+    * advancing by 24 words (width 32 / stride 24 ⇒ 8
     * words of overlap carrying context across boundaries), and the rollup
     * prices that choice per source: chunk counts, the duplicated words the
     * overlap costs at storage/training time, and mean window fill.
@@ -2591,10 +2576,8 @@ object TextAnalysis extends QueryModule {
     * to the scan, and ONE shuffle on source carries the rollup.
     */
   private def q99(t: Tables): DataFrame = {
-    val w = t.spark.conf.get("graft.chunk.width", "32").toInt
-    val s = t.spark.conf.get("graft.chunk.stride", "24").toInt
-    require(w >= 1, s"graft.chunk.width out of range: $w")
-    require(s >= 1 && s <= w, s"graft.chunk.stride out of range: $s (width $w)")
+    val w = 32
+    val s = 24
     withWords(t)
       .select(col("doc_id"), col("source"), size(col("words")).as("n_words"))
       .withColumn(
@@ -2665,8 +2648,7 @@ object TextAnalysis extends QueryModule {
     * importance resampling): score every non-target document by how much
     * more likely its tokens are under the TARGET slice's unigram LM than
     * under the whole-corpus LM — the cheap proxy that selects "looks like
-    * the target domain" data at corpus scale. Target slice is
-    * `graft.dsir.target` (default src0).
+    * the target domain" data at corpus scale. The target slice is src0.
     *
     * Scale shape: both LMs are vocabulary-bounded aggregates (the q77
     * discipline — raw tokens collapse map-side before any shuffle);
@@ -2685,7 +2667,7 @@ object TextAnalysis extends QueryModule {
     * bit-reproducible cross-engine regardless of order.
     */
   private def q102(t: Tables): DataFrame = {
-    val target = t.spark.conf.get("graft.dsir.target", "src0")
+    val target = "src0"
     val tok = withWords(t)
       .select(col("doc_id"), col("source"), explode(col("words")).as("term"))
     val corpusLm = tok.groupBy(col("term")).agg(count(lit(1)).as("cc"))

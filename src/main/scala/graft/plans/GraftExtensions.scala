@@ -12,10 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule { session =>
-      RangeJoinRule(
-        session.conf.getOption("spark.graft.rangejoin.bucketWidth").map(_.toLong).getOrElse(1024L))
-    }
+    ext.injectOptimizerRule(_ => RangeJoinRule)
     ext.injectFunction(
       (
         FunctionIdentifier("simhash64"),

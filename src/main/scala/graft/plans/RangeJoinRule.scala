@@ -20,12 +20,13 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *
   * which Catalyst then plans as a hash join on `b` with the range
   * predicate as residual — shuffle parallel, codegen'd, AQE-splittable.
-  * Bucket width comes from `spark.graft.rangejoin.bucketWidth` (row
-  * count × width tradeoff; default 1024).
+  * The bucket width is 1024 (row count × width tradeoff).
   *
   * Injected by [[GraftExtensions]]; proven equivalent in RangeJoinRuleSpec.
   */
-case class RangeJoinRule(bucketWidth: Long = 1024L) extends Rule[LogicalPlan] with PredicateHelper {
+object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
+
+  private val BucketWidth = 1024L
 
   private def integral(e: Expression): Boolean = e.dataType match {
     case LongType | org.apache.spark.sql.types.IntegerType => true
@@ -73,7 +74,7 @@ case class RangeJoinRule(bucketWidth: Long = 1024L) extends Rule[LogicalPlan] wi
         if !cond.references.exists(_.name.startsWith("__graft_bucket")) &&
           findRangePair(splitConjunctivePredicates(cond), left, right).isDefined =>
       val (v1, lo, hi) = findRangePair(splitConjunctivePredicates(cond), left, right).get
-      val w = Literal(bucketWidth, LongType)
+      val w = Literal(BucketWidth, LongType)
       val longLo = Cast(lo, LongType)
       val longHi = Cast(hi, LongType)
       // Floor-division on BOTH sides: IntegralDivide truncates toward zero,

@@ -156,7 +156,10 @@ object CatalogStore extends VersionedStore[CatalogMeta]("catalog", "batch") {
     * coalesce into one partition and the co-location silently degrades.
     */
   protected def stageBase(spark: SparkSession, dir: String, v: Long, before: Long): Path =
-    stage(readVersion(spark, dir, before).repartition(Shards, col("dataset_key")), dir, v)
+    stageShards(readVersion(spark, dir, before), dir, v)
+
+  private def stageShards(snapshot: DataFrame, dir: String, v: Long): Path =
+    stage(snapshot.repartition(Shards, col("dataset_key")), dir, v)
 
   /** Create the store with an initial catalog of (dataset_key, title,
     * revision) rows. Fails if already initialized.
@@ -542,7 +545,7 @@ object CatalogStore extends VersionedStore[CatalogMeta]("catalog", "batch") {
     * needs: each upsert's snapshot carries tasks×shards part files, and
     * after N batches a metadata-scale catalog is thousands of tiny files
     * whose open/footer cost dominates reads. Rewrites the CURRENT
-    * snapshot with exactly one file per shard ([[stageBase]]) and
+    * snapshot with exactly one file per shard (as [[stageBase]] does) and
     * publishes it through the SAME CAS path as any other writer, so
     * compaction serializes against concurrent upserts instead of
     * clobbering them — a racing batch makes the compactor lose loudly,
@@ -557,10 +560,12 @@ object CatalogStore extends VersionedStore[CatalogMeta]("catalog", "batch") {
   def compact(spark: SparkSession, dir: String): CompactStats = {
     val current = published(spark, dir)
     val before = dataFileCount(spark, dir, current)
-    val (m, _) = verified(spark, dir, current)
+    val (m, snapshot) = verified(spark, dir, current)
     if (before <= Shards) return CompactStats(current, before, before, m.rows)
     val next = current + 1
-    publishUnchanged(spark, dir, next, m.counts, stageBase(spark, dir, next, current))
+    // stage from the frame just verified: a second readVersion would
+    // re-run the same count+xor scan over the same immutable files
+    publishUnchanged(spark, dir, next, m.counts, stageShards(snapshot, dir, next))
     CompactStats(next, before, dataFileCount(spark, dir, next), m.rows)
   }
 

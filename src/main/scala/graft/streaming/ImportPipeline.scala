@@ -172,6 +172,17 @@ object ImportPipeline {
     } finally { checked.unpersist(); () }
   }
 
+  /** A frozen-train [[graft.sources.FreqStore.WindowSrc]] store that is a
+    * PROJECTION of a maintained WindowDoc store (built by
+    * `initWinSrcProjection`): per accepted batch, MAINTAIN appends the
+    * train-slice rollup of the windoc store's OWN just-committed delta
+    * (`appendWinSrcProjection`) — the batch's window explode happens
+    * once, in the windoc append, instead of once per store. `windocDir`
+    * must itself be in `freqStoreDirs`, or the source delta this
+    * projection reads would never exist.
+    */
+  final case class TrainProjection(dir: String, windocDir: String)
+
   /** Which lake indexes ingest maintains per ACCEPTED batch (step 6 of the
     * flow) — the artifacts the dedup/leakage/frequency queries probe, kept
     * current the way geostore stores per-file checksums at import time
@@ -199,17 +210,6 @@ object ImportPipeline {
     * here: append tags live in version markers, and the explicit `gc` op
     * documents its replay-horizon contract.
     */
-  /** A frozen-train [[graft.sources.FreqStore.WindowSrc]] store that is a
-    * PROJECTION of a maintained WindowDoc store (built by
-    * `initWinSrcProjection`): per accepted batch, MAINTAIN appends the
-    * train-slice rollup of the windoc store's OWN just-committed delta
-    * (`appendWinSrcProjection`) — the batch's window explode happens
-    * once, in the windoc append, instead of once per store. `windocDir`
-    * must itself be in `freqStoreDirs`, or the source delta this
-    * projection reads would never exist.
-    */
-  final case class TrainProjection(dir: String, windocDir: String)
-
   final case class MaintainedIndexes(
       dedupIndexDir: Option[String] = None,
       freqStoreDirs: Seq[String] = Nil,
@@ -289,16 +289,6 @@ object ImportPipeline {
         concat(lit("1340"), sha2(payload, 512)) === expected)
       .otherwise(lit(false))
 
-  /** One micro-batch through validate → checksum → split → publish.
-    * Exposed so the spec can drive a replay directly; `start` wires it
-    * into foreachBatch. `assetPayloads` is the staged-object lookup
-    * (href, payload) the reference's checksum Lambda reads from the
-    * staging bucket; when supplied, a doc is accepted only if EVERY
-    * declared asset's payload is present and its multihash verifies —
-    * failures quarantine the doc with `n_bad_assets` alongside any rule
-    * violations (the reference likewise fails the dataset version on
-    * either check).
-    */
   /** Duplicate rule ids would silently corrupt the composite-flags
     * map_from_entries fold and quarantine attribution; `loadRules`
     * enforces uniqueness for file-loaded rule sets, and this mirrors that
@@ -360,6 +350,16 @@ object ImportPipeline {
     }
   }
 
+  /** One micro-batch through validate → checksum → split → publish.
+    * Exposed so the spec can drive a replay directly; `start` wires it
+    * into foreachBatch. `assetPayloads` is the staged-object lookup
+    * (href, payload) the reference's checksum Lambda reads from the
+    * staging bucket; when supplied, a doc is accepted only if EVERY
+    * declared asset's payload is present and its multihash verifies —
+    * failures quarantine the doc with `n_bad_assets` alongside any rule
+    * violations (the reference likewise fails the dataset version on
+    * either check).
+    */
   private[graft] def processBatch(
       spark: SparkSession,
       batch: DataFrame,
@@ -563,6 +563,21 @@ object ImportPipeline {
       .start()
   }
 
+  /** The storage-side occupancy relation for `CatalogStore.delete`'s
+    * emptiness guard — reference `datasets/delete.py:53-61` lists the
+    * dataset's storage-bucket prefix before allowing a delete; here the
+    * storage analog is the accepted-docs lake, so occupancy = the
+    * distinct dataset keys it still holds (empty when the lake doesn't
+    * exist yet). One column-pruned scan, distinct is metadata-scale.
+    */
+  def occupancy(spark: SparkSession, acceptedDir: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(acceptedDir)
+    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!hfs.exists(p) || !hfs.listStatus(p).exists(_.isDirectory))
+      spark.range(0).select(lit("").as("dataset_key"))
+    else spark.read.parquet(acceptedDir).select(col("dataset_key")).distinct()
+  }
+
   /** Re-validate everything in quarantine against the CURRENT rules
     * relation and promote now-clean docs through the exact same
     * split/publish kernel — the reference's fix-and-reupload loop (a
@@ -585,21 +600,6 @@ object ImportPipeline {
     * keyed upsert shuffle); the quarantine read is a plain parquet scan
     * over the per-batch dirs.
     */
-  /** The storage-side occupancy relation for `CatalogStore.delete`'s
-    * emptiness guard — reference `datasets/delete.py:53-61` lists the
-    * dataset's storage-bucket prefix before allowing a delete; here the
-    * storage analog is the accepted-docs lake, so occupancy = the
-    * distinct dataset keys it still holds (empty when the lake doesn't
-    * exist yet). One column-pruned scan, distinct is metadata-scale.
-    */
-  def occupancy(spark: SparkSession, acceptedDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(acceptedDir)
-    val hfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(p) || !hfs.listStatus(p).exists(_.isDirectory))
-      spark.range(0).select(lit("").as("dataset_key"))
-    else spark.read.parquet(acceptedDir).select(col("dataset_key")).distinct()
-  }
-
   def reprocessQuarantine(
       spark: SparkSession,
       catalogDir: String,

@@ -408,7 +408,10 @@ class CatalogStoreSpec extends AnyFunSuite {
     }
     val vBefore = CatalogStore.currentVersion(spark, dir).get
     val rowsBefore = snapshot(dir)
-    val st = CatalogStore.compact(spark, dir)
+    val (st, compactJobs) = JobProbe.jobs(spark)(CatalogStore.compact(spark, dir))
+    // the rewrite stages from the frame the manifest check verified: a
+    // second snapshot read would re-run the count+xor scan (8 jobs)
+    assert(compactJobs.size == 6, s"compaction ran ${compactJobs.size} jobs, want 6")
     assert(st.filesBefore > 16,
       s"fixture failed to fragment (only ${st.filesBefore} files) — the test proves nothing")
     assert(st.version == vBefore + 1, "compaction publishes a NEW version via the CAS")

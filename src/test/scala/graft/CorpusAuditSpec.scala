@@ -479,20 +479,6 @@ class CorpusAuditSpec extends AnyFunSuite {
     assert(got == expected)
     // TV is a [0,1] metric; an unbiased hash split should sit FAR from 1
     expected.foreach { case (_, _, _, _, _, tv, _) => assert(tv >= 0.0 && tv <= 1.0) }
-    // the >2^53-token DECIMAL guard is output-identical at current scale
-    // (same schema, same rows) — the conf only widens the arithmetic
-    val defaultSchema = SparkEntry.queries("q110_split_shift")(spark, sf).schema
-    spark.conf.set("graft.tv.decimal", "true")
-    try {
-      val dec = SparkEntry.queries("q110_split_shift")(spark, sf)
-      assert(dec.schema == defaultSchema, "DECIMAL TV path must not change the output schema")
-      val decRows = dec.collect().map { r =>
-        (r.getAs[String]("split_a"), r.getAs[String]("split_b"), r.getAs[Long]("n_terms"),
-          r.getAs[Long]("tokens_a"), r.getAs[Long]("tokens_b"), r.getAs[Double]("tv"),
-          r.getAs[String]("top_term"))
-      }.toSet
-      assert(decRows == expected, "DECIMAL TV path diverges from the long path")
-    } finally spark.conf.unset("graft.tv.decimal")
   }
 
   test("q111 cluster quality matches an independent gate+join recomputation") {
@@ -1681,10 +1667,6 @@ class CorpusAuditSpec extends AnyFunSuite {
     assert(got == expected)
     // Gini lives in [0, 1); 0 exactly iff all counts equal
     got.foreach { case (src, _, _, g) => assert(g >= 0 && g < 1000000, src) }
-    // the >2^63 DECIMAL guard is output-identical at current scale
-    spark.conf.set("graft.gini.decimal", "true")
-    try assert(run() == expected, "DECIMAL gini path diverges from the long path")
-    finally spark.conf.unset("graft.gini.decimal")
   }
 
   test("q164 continuation counts match an independent recomputation") {
@@ -1950,9 +1932,6 @@ class CorpusAuditSpec extends AnyFunSuite {
       .toSet
     val got = run()
     assert(got == expected)
-    spark.conf.set("graft.assort.decimal", "true")
-    try assert(run() == expected, "decimal-guarded q212 diverges")
-    finally spark.conf.unset("graft.assort.decimal")
     // r is a correlation coefficient in [-1, 1] (e6 units)
     got.foreach { l =>
       val r = l(4).asInstanceOf[Long]

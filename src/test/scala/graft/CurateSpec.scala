@@ -111,7 +111,7 @@ class CurateSpec extends AnyFunSuite {
     val stagedPlan = Curate.stagedDecisions(t).queryExecution.executedPlan.toString
     assert(!stagedPlan.contains("CartesianProduct"),
       s"curation staging plan went cartesian:\n$stagedPlan")
-    val packedPlan = Curate.packedCorpus(Curate.stagedDecisions(t), 2048L)
+    val packedPlan = Curate.packedCorpus(Curate.stagedDecisions(t))
       .queryExecution.executedPlan.toString
     assert(!packedPlan.contains("CartesianProduct"),
       s"pack plan went cartesian:\n$packedPlan")

@@ -1444,9 +1444,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       .toSet
     val got = run()
     assert(got == expected)
-    spark.conf.set("graft.forecast.decimal", "true")
-    try assert(run() == expected, "decimal-guarded q204 diverges")
-    finally spark.conf.unset("graft.forecast.decimal")
     // Cauchy-Schwarz floor: the exact self-join size is never under the
     // uniform estimate (so inflation >= ~1), and equals n when keys are
     // unique
@@ -1652,10 +1649,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       .toSet
     val got = run()
     assert(got == expected)
-    // the DECIMAL(38,0) overflow-guard path is value-identical
-    spark.conf.set("graft.mwu.decimal", "true")
-    try assert(run() == got)
-    finally spark.conf.unset("graft.mwu.decimal")
     // a two-sided audit: some source runs long, some runs short
     assert(got.exists(_._6 > 0) && got.exists(_._6 < 0),
       "degenerate: every source on the same side")
@@ -1705,11 +1698,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       .toSet
     val got = run()
     assert(got == expected)
-    // the DECIMAL(38,0) overflow-guard path is value-identical (q173's
-    // guard pattern)
-    spark.conf.set("graft.kappa.decimal", "true")
-    try assert(run() == got)
-    finally spark.conf.unset("graft.kappa.decimal")
     // the signed division's both branches fire on this corpus, and
     // kappa is bounded by its theoretical ceiling
     assert(got.exists(_._6 > 0) && got.exists(_._6 < 0),
@@ -2182,9 +2170,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       .toSet
     val got = run()
     assert(got == expected)
-    spark.conf.set("graft.ks.decimal", "true")
-    try assert(run() == expected, "decimal-guarded q194 diverges")
-    finally spark.conf.unset("graft.ks.decimal")
     // D is a probability gap: within [0, 1e6]; a zero D has sign 0
     got.foreach { case (src, _, d, _, sgn) =>
       assert(d >= 0L && d <= 1000000L, src)
@@ -2262,11 +2247,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       .toSet
     val got = run()
     assert(got == expected)
-    // the DECIMAL guard changes nothing at current scale (q191's conf —
-    // one knob for the cell family)
-    spark.conf.set("graft.cell.decimal", "true")
-    try assert(run() == expected, "decimal-guarded q193 diverges")
-    finally spark.conf.unset("graft.cell.decimal")
     // worst-partner is never self, and R >> 0 exactly when cells overlap
     got.foreach { case (l, _, _, worst, r) =>
       assert(worst != l && r > 0L, s"cell $l")
@@ -2311,11 +2291,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       .toSet
     val got = run()
     assert(got == expected)
-    // the DECIMAL(38,0) guard on the within fold changes nothing at
-    // current scale (graft.cell.decimal — one knob for the cell family)
-    spark.conf.set("graft.cell.decimal", "true")
-    try assert(run() == expected, "decimal-guarded q244 diverges")
-    finally spark.conf.unset("graft.cell.decimal")
     // store-backed centroids reproduce the derived audit (q191's seam)
     val dir = java.nio.file.Files.createTempDirectory("graft_q244_ivf").toString
     val (assign, centroids) = graft.operators.Similarity.corpusQuantizer(Tables(spark, sf))
@@ -2365,10 +2340,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       .toSet
     val got = run()
     assert(got == expected)
-    // the DECIMAL(38,0) overflow guard changes nothing at current scale
-    spark.conf.set("graft.cell.decimal", "true")
-    try assert(run() == expected, "decimal-guarded q191 diverges")
-    finally spark.conf.unset("graft.cell.decimal")
     // store-backed centroids (graft.ivf.index — the relation IvfIndex
     // persists is exactly centroidsOf's) reproduce the derived audit
     val dir = java.nio.file.Files.createTempDirectory("graft_q191_ivf").toString
@@ -2597,11 +2568,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       .toSet
     val got = run()
     assert(got == expected)
-    // the DECIMAL(38,0) overflow-guard path is plan-shape-identical and
-    // value-identical at current scale (q163's guard pattern)
-    spark.conf.set("graft.hhi.decimal", "true")
-    try assert(run() == got)
-    finally spark.conf.unset("graft.hhi.decimal")
     // HHI is bounded below by the balanced pool 1e6/n and above by 1e6;
     // the top share is consistent with concentration
     got.foreach { case (nation, n, _, hhi, top) =>
@@ -3252,9 +3218,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       .toSet
     val got = run()
     assert(got == expected)
-    spark.conf.set("graft.t.decimal", "true")
-    try assert(run() == expected, "decimal-guarded q205 diverges")
-    finally spark.conf.unset("graft.t.decimal")
     // triad consistency: the k-anonymous combo base is exactly q175's
     // (the corpus has no null sensitive values, so the scopes coincide),
     // and t is a probability-scale distance

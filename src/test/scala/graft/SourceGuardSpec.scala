@@ -10,8 +10,9 @@ import scala.jdk.CollectionConverters._
   * schema except the core's one pre-schema fallback, and only the
   * versioned-store core and the sink call the CAS protocol, only the
   * catalog's point get reads Parquet on the driver, thread
-  * pools are made only where audited, and only the session cache reads
-  * the session-artifact gate. Comment
+  * pools are made only where audited, only the session cache reads
+  * the session-artifact gate, and every `graft.*` conf read is an
+  * allowlisted knob that some caller sets. Comment
   * lines and imports are ignored; counts are per file,
   * so moving a site within its file needs no edit here, and adding or
   * removing one does.
@@ -95,5 +96,57 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(sites(sources, """CasProtocol\.(?:claim|repair)\(""".r) ==
       Map("sources/VersionedStore.scala" -> 2, "sources/VersionedSink.scala" -> 1),
       "publish through VersionedStore (or VersionedSink), not a store's own CAS calls")
+  }
+
+  /** Every `graft.*` session conf `src/main` reads, with who sets it. A
+    * parameter no main, store set or spec varies is a constant at its read
+    * site, not a conf: each unvaried knob is a configuration nothing runs.
+    */
+  private val confAllowlist = Map(
+    // store paths, set by StoreSet.provision for Bench and PlanAudit stores mode
+    "graft.bigram.store" -> "FreqStore Bigram consumers (q77/q97/q139)",
+    "graft.catalog.store" -> "q68's catalog snapshot read",
+    "graft.delta.index" -> "DedupIndex consumers (q107 and the delta family)",
+    "graft.freq.store" -> "FreqStore Unigram consumers (q121/q130/q136)",
+    "graft.hll.store" -> "HllStore consumer (q252)",
+    "graft.ivf.index" -> "IvfIndex consumers (q74, the q191/q193 centroids)",
+    "graft.kll.store" -> "KllStore consumer (q255)",
+    "graft.leak.store" -> "frozen-train window store (q120/q143/q146)",
+    "graft.win.store" -> "WindowDoc store (q113/q122)",
+    // session modes that a main sets
+    "graft.bucketed" -> "bucketBy-written facts: Bench, PlanAudit and ScaleProbe",
+    "graft.bucketed.sf" -> "the sf the bucketed facts came from: Tables.provisionBucketed",
+    "graft.local.split" -> "local-mode scan repartition: Session.Timed",
+    "graft.lsh.cache" -> "the session-artifact gate: Bench and PlanAudit stores mode",
+    "graft.curate.ledger" -> "Curate's opt-in yield ledger: CurateSpec",
+    "graft.stac.rulesPath" -> "a rules file replacing the built-ins: CatalogOpsSpec, StacRefTreeSpec",
+    "graft.cas.committer" -> "Hadoop conf forcing the conditional-put publish: CasProtocolSpec",
+    // algorithm parameters and alternate paths that specs vary
+    "graft.ann.signBits" -> "sign-LSH bucket bits: PipelineOpsSpec",
+    "graft.ann.signProjections" -> "sign projections unioned: PipelineOpsSpec",
+    "graft.cms.width" -> "count-min width, narrowed to force collisions: CorpusAuditSpec",
+    "graft.decon.tau" -> "semantic decontamination threshold: PipelineOpsSpec",
+    "graft.dedup.edit.charsPerWord" -> "q129's alphabet width: EditCollisionSpec",
+    "graft.dedup.prefixWords" -> "prefix-filter words: CorpusAuditSpec",
+    "graft.dedup.windowTokens" -> "window width: CorpusAuditSpec, DedupIndexSpec, LeakStoreSpec",
+    "graft.delta.bloom" -> "q107's Bloom pre-filter path: DedupIndexSpec, ScaleSpec",
+    "graft.delta.incoming" -> "the arriving batch's source pattern: PipelineOpsSpec",
+    "graft.lsh.bands" -> "minhash-LSH band count: PipelineOpsSpec",
+    "graft.pctl.approx" -> "q91's approx_percentile path: CorpusAuditSpec",
+    "graft.pq.k" -> "product-quantizer codebook size: PipelineOpsSpec",
+    "graft.pq.m" -> "product-quantizer subspaces: PipelineOpsSpec",
+    "graft.sample.perCluster" -> "diversity sampling cap: PipelineOpsSpec",
+    "graft.semdedup.tau" -> "SemDeDup threshold: PipelineOpsSpec",
+    "graft.sketch.k" -> "bottom-k sketch size: CorpusAuditSpec",
+    "graft.skew.salt" -> "salted-aggregation fan-out: ScaleSpec")
+
+  test("every graft.* conf read is an allowlisted knob that some caller sets") {
+    // a read may break the line before `.get(`, so match over each file's code
+    val read = """conf\s*\.(?:get|getOption)\(\s*"((?:spark\.)?graft\.[\w.]+)"""".r
+    val got = sources.values.flatMap(ls => read.findAllMatchIn(ls.mkString("\n")).map(_.group(1))).toSet
+    assert(got == confAllowlist.keySet,
+      s"conf reads changed: new ${(got diff confAllowlist.keySet).mkString(", ")}; " +
+        s"gone ${(confAllowlist.keySet diff got).mkString(", ")} — make a parameter no caller " +
+        "varies a constant at its read site, or allowlist the knob with who sets it")
   }
 }
